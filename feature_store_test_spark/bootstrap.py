@@ -1,8 +1,8 @@
 """Make the engine package importable on executor Python workers.
 
-Pandas UDFs (the streaming fold, any applyInPandas operator) are pickled by
-reference to this package; workers spawned by a driver running OUTSIDE the
-repo directory would fail with ModuleNotFoundError. ``ship_package`` zips
+Pandas UDFs (the streaming mapInPandas fold, any applyInPandas operator) are
+pickled by reference to this package; workers spawned by a driver running
+OUTSIDE the repo directory would fail with ModuleNotFoundError. ``ship_package`` zips
 the package once per process and registers it with ``addPyFile`` — the
 Spark-native way to distribute Python code, and the same call a real
 cluster deployment would make (or replace with a wheel on PYTHONPATH).

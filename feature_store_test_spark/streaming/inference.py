@@ -5,21 +5,21 @@ The reference processes one event at a time with 2-3 HTTPS round-trips each
 put). Here each micro-batch does the whole thing set-oriented (§3.3):
 
     batch → validate (failures → DLQ) → seed join against the online view
-    → per-key sequential fold (applyInPandas) applying, per event in time
+    → per-key sequential fold (mapInPandas) applying, per event in time
     order: enrich (defaults on miss, :121-126) → linear predict →
     (old+new)/2 state update (§2.13 Q4) → one ingest of final state rows
     + per-event prediction log.
 
 The per-key fold is the genuinely-sequential semantics (each event's
-features depend on the previous event's update), so it runs as an
-Arrow-batched grouped-map pandas UDF — keys parallelize across executors,
-events within a key fold in order. State continuity across micro-batches
-comes from seeding each batch with the online view (state lives in the
-feature table, not in executor memory — restart-safe by construction, the
-same property Delta-backed foreachBatch pipelines rely on).
+features depend on the previous event's update): a row_number window
+clusters the batch by key and sorts it by (key, event time, event id), and
+one mapInPandas call per partition folds each key's events in order. State
+continuity across micro-batches comes from seeding each batch with the online
+view (state lives in the feature table, not in executor memory — restart-safe
+by construction, the same property Delta-backed foreachBatch pipelines rely on).
 
 DLQ (§2.9 T3): validation failures append to a DLQ table with an attempt
-count; ``retry_dlq()`` reprocesses attempt-1 rows once (the reference's
+count; ``retry_dlq()`` reprocesses each attempt-1 row once (the reference's
 single retry pass, :270-279 — which applies retried events AFTER later
 events; parity-mode arrival-order semantics preserve exactly that).
 """
@@ -29,7 +29,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -90,68 +90,69 @@ class InferencePipeline:
     # stored state's event time is scored but its state update is dropped
     # (WHEN MATCHED AND s.event_time >= t.event_time).
     strict_event_time: bool = False
-    predictions: list[DataFrame] = field(default_factory=list)
+    _dlq_retried_through: int = field(default=0, init=False, repr=False)
 
     def __post_init__(self):
         self.dlq = VersionedParquetTable(self.spark, self.dlq_path, DLQ_SCHEMA)
 
     # ------------------------------------------------------------------ fold
     def _fold_batch(self, seeded: DataFrame) -> DataFrame:
-        """Grouped sequential fold: one pandas group per key."""
+        """One Python call per key-clustered partition; state resets from
+        ``seed_*`` at each key's first row and carries across Arrow batches."""
         scorer = self.scorer  # plain dataclass → closure-serialized to executors
         strict = self.strict_event_time
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["purchase_timestamp", "event_id"])
-            # seed state (same on every row of the group)
-            avg_pv = pdf["seed_avg_pv"].iloc[0]
-            avg_ls = pdf["seed_avg_ls"].iloc[0]
-            exists = bool(pdf["seed_exists"].iloc[0])
-            state_ts = pdf["seed_ts"].iloc[0]
-            out = []
-            for r in pdf.itertuples(index=False):
-                v = r.purchase_value
-                if not exists:
-                    # miss defaults (/root/reference/core/inference.py:121-126)
-                    feat_avg_pv, feat_avg_ls = v, 0.0
-                else:
-                    feat_avg_pv, feat_avg_ls = avg_pv, avg_ls
-                pred = scorer.predict_row(
-                    {
-                        "latest_purchase_value": v,
-                        "avg_purchase_value": feat_avg_pv,
-                        "avg_loyalty_score": feat_avg_ls,
-                    }
-                )
-                stale = (
-                    strict
-                    and exists
-                    and state_ts is not None
-                    and r.purchase_timestamp < state_ts
-                )
-                if stale:
-                    # strict guard: score only, keep state
-                    new_avg_pv, new_avg_ls = avg_pv, avg_ls
-                elif not exists:
-                    # insert arm: averages initialize to observations
-                    new_avg_pv, new_avg_ls = v, pred
-                else:
-                    # (old+new)/2 — preserved exactly (§2.13 Q4)
-                    new_avg_pv = (avg_pv + v) / 2.0
-                    new_avg_ls = (avg_ls + pred) / 2.0
-                out.append(
-                    (
-                        r.event_id, r.customer_id, r.purchase_timestamp, v,
-                        v, feat_avg_pv, feat_avg_ls, pred,
-                        new_avg_pv, new_avg_ls, not exists, not stale,
+        def fold(batches):
+            for pdf in batches:
+                out = []
+                for r in pdf.itertuples(index=False):
+                    if r.key_seq == 1:
+                        avg_pv, avg_ls = r.seed_avg_pv, r.seed_avg_ls
+                        exists, state_ts = bool(r.seed_exists), r.seed_ts
+                    v = r.purchase_value
+                    if not exists:
+                        # miss defaults (reference core/inference.py:121-126)
+                        feat_avg_pv, feat_avg_ls = v, 0.0
+                    else:
+                        feat_avg_pv, feat_avg_ls = avg_pv, avg_ls
+                    pred = scorer.predict_row(
+                        {
+                            "latest_purchase_value": v,
+                            "avg_purchase_value": feat_avg_pv,
+                            "avg_loyalty_score": feat_avg_ls,
+                        }
                     )
-                )
-                if not stale:
-                    avg_pv, avg_ls, exists = new_avg_pv, new_avg_ls, True
-                    state_ts = r.purchase_timestamp
-            return pd.DataFrame(out, columns=[f.name for f in _FOLD_OUT_SCHEMA.fields])
+                    # a NULL seed_ts arrives as NaT, which compares False
+                    stale = strict and exists and r.purchase_timestamp < state_ts
+                    if stale:
+                        # strict guard: score only, keep state
+                        new_avg_pv, new_avg_ls = avg_pv, avg_ls
+                    elif not exists:
+                        # insert arm: averages initialize to observations
+                        new_avg_pv, new_avg_ls = v, pred
+                    else:
+                        # (old+new)/2 — preserved exactly (§2.13 Q4)
+                        new_avg_pv = (avg_pv + v) / 2.0
+                        new_avg_ls = (avg_ls + pred) / 2.0
+                    out.append(
+                        (
+                            r.event_id, r.customer_id, r.purchase_timestamp, v,
+                            v, feat_avg_pv, feat_avg_ls, pred,
+                            new_avg_pv, new_avg_ls, not exists, not stale,
+                        )
+                    )
+                    if not stale:
+                        avg_pv, avg_ls, exists = new_avg_pv, new_avg_ls, True
+                        state_ts = r.purchase_timestamp
+                yield pd.DataFrame(out, columns=_FOLD_OUT_SCHEMA.fieldNames())
 
-        return seeded.groupBy("customer_id").applyInPandas(fold, _FOLD_OUT_SCHEMA)
+        # not a bare repartition: the window's clustering requirement keeps
+        # AQE (skew split, local shuffle read) from splitting a key's rows
+        by_key = Window.partitionBy("customer_id").orderBy(
+            F.asc_nulls_last("purchase_timestamp"), F.asc_nulls_last("event_id")
+        )
+        keyed = seeded.withColumn("key_seq", F.row_number().over(by_key))
+        return keyed.mapInPandas(fold, _FOLD_OUT_SCHEMA)
 
     # ----------------------------------------------------------------- batch
     def process_batch(self, batch: DataFrame, attempt: int = 1) -> DataFrame:
@@ -198,23 +199,22 @@ class InferencePipeline:
         )
         self.feature_group.ingest(final_state)
 
-        log = folded.select(
+        return folded.select(
             "event_id", "customer_id", "purchase_timestamp", "purchase_value",
             "latest_purchase_value", "avg_purchase_value", "avg_loyalty_score",
             "prediction", "was_new_key", "applied",
         )
-        self.predictions.append(log)
-        return log
 
     # ------------------------------------------------------------------- dlq
     def retry_dlq(self) -> DataFrame | None:
-        """Single retry pass over attempt-1 DLQ rows (T3). Rows that fail
-        again stay in the DLQ at attempt 2 (second failure = log-only,
-        /root/reference/core/inference.py:277-279)."""
-        dlq_df = self.dlq.read()
-        to_retry = dlq_df.where(F.col("attempt") == 1).select(
-            *[f.name for f in EVENT_SCHEMA.fields]
-        )
+        """Single retry pass over the attempt-1 rows of DLQ commits newer
+        than the last call's (T3). Rows that fail again stay in the DLQ at
+        attempt 2 (log-only, reference core/inference.py:277-279)."""
+        since, until = self._dlq_retried_through, self.dlq.latest_version() or 0
+        if until <= since:
+            return None
+        self._dlq_retried_through = until
+        to_retry = self.dlq.changes(since, until).where(F.col("attempt") == 1)
         if to_retry.limit(1).count() == 0:
             return None
         return self.process_batch(to_retry, attempt=2)
