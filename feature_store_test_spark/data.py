@@ -352,23 +352,35 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
+    # rows normalized to plain tuples (ADVICE r10): Row objects (e.g. a
+    # report.collect()) expand POSITIONALLY here — tuple() pins that
+    # explicitly and keeps pandas from treating a Row as a scalar cell.
+    rows = [tuple(r) for r in rows]
+    if not rows:
+        # pyspark takes the Arrow path only for non-empty pandas input; a
+        # zero-row table is an empty JVM LocalRelation built directly
+        jss = spark._jsparkSession
+        jdf = jss.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
+        )
+        return DataFrame(jdf, spark)
     # The LocalTableScan depends on the Arrow conversion path, which is a
     # RUNTIME conf a vanilla (driver-built) session does not set — without
     # it every one of these literal tables silently took the Python-RDD
     # path in the driver's own verify sessions (found by the guard below,
-    # round 11). Set it at the single choke point.
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    # round 11). Set it at the single choke point, only when it is off.
+    arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
+    if spark.conf.get(arrow_conf, "false").lower() != "true":
+        spark.conf.set(arrow_conf, "true")
     cols = [f.name for f in schema.fields]
-    # rows normalized to plain tuples (ADVICE r10): Row objects (e.g. a
-    # report.collect()) expand POSITIONALLY here — tuple() pins that
-    # explicitly and keeps pandas from treating a Row as a scalar cell.
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=cols, dtype=object)
+    pdf = pd.DataFrame(rows, columns=cols, dtype=object)
     df = spark.createDataFrame(pdf, schema=schema)
     # The LocalTableScan win depends on the Arrow conversion path; the
     # default fallback silently reinstates the Python-RDD regression with
-    # only a warning (ADVICE r10). A LogicalRDD here is that regression —
-    # fail loudly. Checked on the ANALYZED plan (no optimizer run).
-    if "LogicalRDD" in df._jdf.queryExecution().analyzed().nodeName():
+    # only a warning (ADVICE r10). A LogicalRDD anywhere in the plan is
+    # that regression — fail loudly. Checked on the whole ANALYZED plan
+    # (no optimizer run).
+    if "LogicalRDD" in df._jdf.queryExecution().analyzed().toString():
         raise RuntimeError(
             "local_rows_df: Arrow conversion fell back to a Python RDD scan"
             " — the driver-literal table would re-pay a Python worker"

@@ -7,8 +7,8 @@ Reference surface (/root/reference/core/feature_store_manager.py):
     build_training_dataset  :121-153  → FeatureGroup.training_dataset (spark.sql)
     customer_features_exist :155-172  → FeatureGroup.exists / exists_batch
     get_latest_features     :184-204  → FeatureGroup.get_latest / online_view
-    add_customer_features   :206-238  → FeatureGroup.upsert (NOT MATCHED arm)
-    update_customer_features:240-282  → FeatureGroup.upsert (MATCHED arm,
+    add_customer_features   :206-238  → FeatureGroup.upsert (new key: avg := new)
+    update_customer_features:240-282  → FeatureGroup.upsert (stored key,
                                         (old+new)/2 rule preserved — §2.13 Q4)
 
 Everything crossing the reference's store boundary was stringly typed
@@ -120,6 +120,16 @@ class FeatureGroup:
         )
 
     # -- online store -------------------------------------------------------
+    def _latest(self, hist: DataFrame, strict_event_time: bool) -> DataFrame:
+        """Latest row per key of ``hist`` (the aggregation form: map-side
+        partial max_by → one candidate row per key per partition crosses
+        the shuffle, vs every version for the ranking-window form)."""
+        if strict_event_time:
+            max_of = [self.event_time_col, "_commit_version"]
+        else:
+            max_of = ["_commit_version", self.event_time_col]
+        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
+
     def online_view(self, strict_event_time: bool = False) -> DataFrame:
         """Latest record per key.
 
@@ -128,15 +138,7 @@ class FeatureGroup:
         including its retry-out-of-order quirk (§2.13 Q5).
         strict mode: last-EVENT-TIME wins regardless of arrival.
         """
-        hist = self.offline_history()
-        if strict_event_time:
-            max_of = [self.event_time_col, "_commit_version"]
-        else:
-            max_of = ["_commit_version", self.event_time_col]
-        # aggregation form: map-side partial max_by → one candidate row per
-        # key per partition crosses the shuffle (vs every version for the
-        # ranking-window form)
-        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
+        return self._latest(self.offline_history(), strict_event_time)
 
     def exists_batch(self, keys: DataFrame) -> DataFrame:
         """Which of the given keys have a stored record (left semi join) —
@@ -154,11 +156,7 @@ class FeatureGroup:
         file instead of scanning the table. Latest-per-key over only this
         key's rows is identical to filtering the full online view."""
         hist = self.table.read(where=[(self.key_col, "=", key_value)])
-        if strict_event_time:
-            max_of = [self.event_time_col, "_commit_version"]
-        else:
-            max_of = ["_commit_version", self.event_time_col]
-        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
+        return self._latest(hist, strict_event_time)
 
     def exists(self, key_value) -> bool:
         return (
@@ -180,8 +178,8 @@ class FeatureGroup:
         return rows[0].asDict() if rows else None
 
     # -- upsert (the feature-store core) ------------------------------------
-    def upsert(self, updates: DataFrame, value_col_map: dict[str, str]) -> int:
-        """MERGE semantics as an append of computed rows (§2.10 U1/U2).
+    def upsert(self, updates: DataFrame, value_col_map: dict[str, str]) -> int | None:
+        """The reference's update rule as one ``merge`` clause (§2.10 U1/U2).
 
         ``updates``: one row per key — columns: key, event_time, and one NEW
         observation column per entry of ``value_col_map``.
@@ -189,67 +187,29 @@ class FeatureGroup:
         prefix}, e.g. {"purchase_value": "purchase_value"} maintains
         latest_purchase_value and avg_purchase_value.
 
-        MATCHED: latest := new, avg := (old_avg + new) / 2  — the
-        reference's exponential-decay rule preserved exactly (§2.13 Q4,
-        /root/reference/core/feature_store_manager.py:258-264).
-        NOT MATCHED: latest := new, avg := new (initialization,
-        add_customer_features :206-238).
+        latest := new; avg := new where there is no stored average (a new
+        key: add_customer_features :206-238), else (old_avg + new) / 2 —
+        the reference's exponential-decay rule preserved exactly (§2.13 Q4,
+        reference core/feature_store_manager.py:258-264). Other
+        feature columns take the update's value when ``updates`` carries
+        the column, else keep the stored one.
 
-        The online view stays a derived window over history, so this
-        "merge" writes only the new version rows — no table rewrite. On
-        Delta this maps 1:1 to MERGE WHEN (NOT) MATCHED.
+        The same clause serves WHEN MATCHED and WHEN NOT MATCHED (on a new
+        key every ``t.`` column is NULL). Like ``merge``, an empty
+        ``updates`` commits nothing and returns None; otherwise the
+        committed version.
         """
-        # one row per key is a hard precondition: two update rows for the
-        # same key would both fold against the SAME stored average (the
-        # chain needs sequential application — that's the streaming
-        # pipeline's per-key fold, not this batch merge)
-        dup = (
-            updates.groupBy(self.key_col)
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "upsert requires one row per key; pre-fold multi-event "
-                "batches (see streaming.InferencePipeline._fold_batch)"
-            )
-        current = self.online_view()
-        upd = updates.alias("u")
-        cur = current.alias("c")
-        joined = upd.join(cur, on=self.key_col, how="left")
-
-        out_cols = [
-            F.col(f"u.{self.key_col}").alias(self.key_col),
-            F.col(f"u.{self.event_time_col}").alias(self.event_time_col),
-        ]
-        handled = {self.key_col, self.event_time_col}
+        rule = {self.event_time_col: F.col(f"s.{self.event_time_col}")}
         for obs_col, prefix in value_col_map.items():
-            latest_c, avg_c = f"latest_{prefix}", f"avg_{prefix}"
-            out_cols.append(F.col(f"u.{obs_col}").alias(latest_c))
-            out_cols.append(
-                F.when(
-                    F.col(f"c.{avg_c}").isNull(), F.col(f"u.{obs_col}")
-                )
-                .otherwise((F.col(f"c.{avg_c}") + F.col(f"u.{obs_col}")) / 2.0)
-                .alias(avg_c)
-            )
-            handled |= {latest_c, avg_c}
-        # passthrough feature columns not maintained by the update rule:
-        # take the update's value when the caller supplied the column,
-        # else carry the stored value through unchanged
+            new, avg = F.col(f"s.{obs_col}"), F.col(f"t.avg_{prefix}")
+            rule[f"latest_{prefix}"] = new
+            rule[f"avg_{prefix}"] = F.when(avg.isNull(), new).otherwise((avg + new) / 2.0)
         for c in self.feature_cols:
-            if c not in handled:
+            if c not in rule:
+                rule[c] = F.col(f"t.{c}")
                 if c in updates.columns:
-                    out_cols.append(
-                        F.coalesce(F.col(f"u.{c}"), F.col(f"c.{c}")).alias(c)
-                    )
-                else:
-                    out_cols.append(F.col(f"c.{c}").alias(c))
-
-        new_rows = joined.select(*out_cols).select(*self.schema.fieldNames())
-        return self.ingest(new_rows)
+                    rule[c] = F.coalesce(F.col(f"s.{c}"), rule[c])
+        return self.merge(updates, when_matched=rule, when_not_matched=rule)
 
     def merge(
         self,
@@ -271,20 +231,28 @@ class FeatureGroup:
           columns default to the source column of the same name, else
           NULL. ``None`` means inserts are skipped.
 
-        Like ``upsert`` (the specialized (old+new)/2 form), this writes
-        ONLY the new version rows — the online view derives the result;
-        no table rewrite, and the full history stays queryable. DELETE is
-        deliberately absent: an append-only history cannot un-happen a
-        version (Delta implements it as a rewrite); retention is vacuum's
-        job and key retirement is a modeling concern (tombstone column).
+        This writes ONLY the new version rows — the online view derives
+        the result; no table rewrite, and the full history stays
+        queryable. DELETE is deliberately absent: an append-only history
+        cannot un-happen a version (Delta implements it as a rewrite);
+        retention is vacuum's job and key retirement is a modeling concern
+        (tombstone column).
 
         Returns the committed version, or None if nothing changed.
         """
+        # one row per key is a hard precondition: two source rows for the
+        # same key would both fold against the SAME stored state (the chain
+        # needs sequential application — that's the streaming pipeline's
+        # per-key fold, not this batch merge)
         dup = (
             source.groupBy(self.key_col).count().where(F.col("count") > 1).limit(1).count()
         )
         if dup:
-            raise ValueError("merge requires one source row per key")
+            raise ValueError(
+                "merge requires one source row per key; pre-fold multi-event "
+                "batches into one row per key (see "
+                "streaming.InferencePipeline._fold_batch)"
+            )
         t = self.online_view().alias("t")
         s = source.alias("s")
         joined = s.join(t, on=self.key_col, how="left")

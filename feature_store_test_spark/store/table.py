@@ -60,6 +60,7 @@ an adapter passes the same suite.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import tempfile
@@ -100,6 +101,11 @@ def _stat_value(v):
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     return v
+
+
+def _columns(schema: T.StructType) -> list[tuple[str, str]]:
+    """(name, type) pairs; ``simpleString`` drops nullability at every depth."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
 
 
 def _may_match(stats: dict, col: str, op: str, value) -> bool:
@@ -173,45 +179,102 @@ class VersionedParquetTable:
         with open(self._commit_file(version)) as f:
             return json.load(f)
 
-    # -- file statistics -----------------------------------------------------
-    def _collect_file_stats(self, data_dir: str, schema: T.StructType) -> list[dict]:
-        """Per-file row count + min/max per eligible column, in ONE scan
-        grouped by ``_metadata.file_path`` (the write-time stats Delta
-        keeps in its log; Iceberg in manifests). At 100 TB these are what
-        turn a point read into an O(files-touched) operation instead of a
-        full scan — the log stays tiny (stats rows, not data rows) and the
-        scan is executor-parallel over freshly written, page-cached files.
+    def commits(self) -> list[dict]:
+        """Raw commit-log entries (the machine-readable log; ``history()``
+        is the DESCRIBE HISTORY DataFrame view of the same)."""
+        return [self._load_commit(v) for v in self.versions()]
+
+    def _write_temp_commit(self, commit: dict) -> str:
+        """Write ``commit`` to a temp file in the log dir and return its
+        path; the caller publishes it (exclusive link or atomic rename)."""
+        os.makedirs(self._log_path, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
+        with os.fdopen(fd, "w") as f:
+            json.dump(commit, f)
+        return tmp
+
+    def _publish_new_commit(self, tmp: str, version: int) -> None:
+        """Exclusively publish a NEW commit file. ``os.link`` is atomic on
+        POSIX and raises if the target exists — unlike ``os.rename``,
+        which would silently overwrite a concurrent winner's commit."""
+        target = self._commit_file(version)
+        try:
+            os.link(tmp, target)
+        except FileExistsError:
+            os.unlink(tmp)
+            raise ConcurrentCommitError(
+                f"version {version} of {self.path} was committed by another writer"
+            ) from None
+        os.unlink(tmp)
+
+    def _rewrite_commit(self, c: dict) -> None:
+        """Atomically replace a commit file (tempfile + rename)."""
+        os.rename(self._write_temp_commit(c), self._commit_file(c["version"]))
+
+    # -- data files ---------------------------------------------------------
+    @property
+    def _compact_schema(self) -> T.StructType:
+        """Schema of snapshot-rewrite files, which MATERIALIZE the version."""
+        return T.StructType(
+            [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
+        )
+
+    def _write_data(self, df: DataFrame, version: int) -> dict:
+        """Write ``df`` as a new data dir named after ``version`` and return
+        the commit body: data_dir, schema, layout and per-file stats.
+
+        The stats are a row count + min/max per eligible column per file,
+        collected in ONE scan grouped by ``_metadata.file_path`` (the
+        write-time stats Delta keeps in its log; Iceberg in manifests). At
+        100 TB these are what turn a point read into an O(files-touched)
+        operation instead of a full scan — the log stays tiny (stats rows,
+        not data rows) and the scan is executor-parallel over freshly
+        written, page-cached files.
         """
+        data_dir = os.path.join(
+            self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
+        )
+        writer = df.write.mode("errorifexists")
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        writer.parquet(data_dir)
+
         stat_cols = [
-            f.name for f in schema.fields if isinstance(f.dataType, _STAT_TYPES)
+            f.name for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)
         ]
-        df = self.spark.read.schema(schema).parquet(data_dir)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in stat_cols:
             aggs.append(F.min(c).alias(f"__mn_{c}"))
             aggs.append(F.max(c).alias(f"__mx_{c}"))
         rows = (
-            df.groupBy(F.col("_metadata.file_path").alias("__path"))
+            self.spark.read.schema(df.schema)
+            .parquet(data_dir)
+            .groupBy(F.col("_metadata.file_path").alias("__path"))
             .agg(*aggs)
             .collect()
         )
-        out = []
-        for r in rows:
-            d = r.asDict()
-            out.append(
-                {
-                    "path": d["__path"].removeprefix("file://"),
-                    "rows": d["__rows"],
-                    "stats": {
-                        c: {
-                            "min": _stat_value(d[f"__mn_{c}"]),
-                            "max": _stat_value(d[f"__mx_{c}"]),
-                        }
-                        for c in stat_cols
-                    },
-                }
-            )
-        return out
+        files = [
+            {
+                "path": r["__path"].removeprefix("file://"),
+                "rows": r["__rows"],
+                "stats": {
+                    c: {
+                        "min": _stat_value(r[f"__mn_{c}"]),
+                        "max": _stat_value(r[f"__mx_{c}"]),
+                    }
+                    for c in stat_cols
+                },
+            }
+            for r in rows
+        ]
+        return {
+            "version": version,
+            "data_dir": data_dir,
+            "ts_unix": time.time(),
+            "schema": df.schema.jsonValue(),
+            "partition_cols": self.partition_cols,
+            "files": files,
+        }
 
     # -- schema evolution ----------------------------------------------------
     @classmethod
@@ -224,8 +287,7 @@ class VersionedParquetTable:
         latest = probe.latest_version()
         if latest is None:
             raise ValueError(f"no commits at {path}")
-        with open(probe._commit_file(latest)) as f:
-            commit = json.load(f)
+        commit = probe._load_commit(latest)
         schema = T.StructType.fromJson(commit["schema"])
         fields = [f for f in schema.fields if f.name != "_commit_version"]
         return cls(
@@ -257,6 +319,8 @@ class VersionedParquetTable:
 
         Files first, then an atomic rename of the commit JSON — a reader
         enumerating the log sees either the whole commit or none of it.
+        Column names AND types (nullability aside) must match the table's;
+        a mismatch is rejected before any file is written.
 
         ``merge_schema=True`` (Delta's mergeSchema): new columns in ``df``
         widen the table schema; columns the table has but ``df`` lacks are
@@ -272,42 +336,35 @@ class VersionedParquetTable:
             for f in missing:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
             df = df.select(*self.schema.fieldNames())
-        if [f.name for f in df.schema.fields] != [f.name for f in self.schema.fields]:
+        if _columns(df.schema) != _columns(self.schema):
             raise ValueError(
-                f"schema mismatch: expected {self.schema.fieldNames()}, "
-                f"got {df.schema.fieldNames()}"
+                f"schema mismatch: expected {self.schema.simpleString()}, "
+                f"got {df.schema.simpleString()}"
             )
-        os.makedirs(self._log_path, exist_ok=True)
-        version = (self.latest_version() or 0) + 1
-        data_dir = os.path.join(self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("errorifexists")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(data_dir)
-
-        files = self._collect_file_stats(data_dir, self.schema)
+        commit = self._write_data(df, (self.latest_version() or 0) + 1)
         # appends are commutative: on a publish race, re-commit the SAME
-        # data files under the next free version (bounded retries)
+        # data files, their dir renamed, under the next free version
+        # (bounded retries)
         for _ in range(16):
-            commit = {
-                "version": version,
-                "data_dir": data_dir,
-                "ts_unix": time.time(),
-                "schema": df.schema.jsonValue(),
-                "partition_cols": self.partition_cols,
-                "files": files,
-            }
-            fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(commit, f)
             try:
-                self._publish_new_commit(tmp, version)
-                return version
+                self._publish_new_commit(self._write_temp_commit(commit), commit["version"])
+                return commit["version"]
             except ConcurrentCommitError:
-                version = (self.latest_version() or 0) + 1
+                self._renumber(commit, (self.latest_version() or 0) + 1)
         raise ConcurrentCommitError(
             f"append to {self.path} lost {16} publish races in a row"
         )
+
+    def _renumber(self, commit: dict, version: int) -> None:
+        """Move an unpublished commit's data dir to ``version``'s name —
+        reads take an append's ``_commit_version`` from its dir name."""
+        old = os.path.basename(commit["data_dir"])
+        new = f"v{version:010d}-{old.partition('-')[2]}"
+        data_dir = os.path.join(os.path.dirname(commit["data_dir"]), new)
+        os.rename(commit["data_dir"], data_dir)
+        for f in commit["files"]:
+            f["path"] = f["path"].replace(f"/{old}/", f"/{new}/")
+        commit.update(version=version, data_dir=data_dir, ts_unix=time.time())
 
     # -- maintenance --------------------------------------------------------
     def compact(
@@ -384,35 +441,16 @@ class VersionedParquetTable:
         """Publish ``snapshot`` (with its ``_commit_version`` column) as a
         compact-type commit replacing everything up to ``base``. Shared by
         compact / delete / restore — every full-snapshot rewrite op."""
-        os.makedirs(self._log_path, exist_ok=True)
         version = base + 1
-        data_dir = os.path.join(
-            self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
-        )
-        writer = snapshot.write.mode("errorifexists")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(data_dir)
-        compact_schema = T.StructType(
-            [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
-        )
         commit = {
-            "version": version,
+            **self._write_data(snapshot, version),
             "type": "compact",
             "base_version": base,
-            "data_dir": data_dir,
-            "ts_unix": time.time(),
-            "schema": snapshot.schema.jsonValue(),
-            "partition_cols": self.partition_cols,
-            "files": self._collect_file_stats(data_dir, compact_schema),
             **extra,
         }
-        fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(commit, f)
         # a snapshot rewrite is pinned to base_version — losing the
         # publish race means the snapshot is stale, so abort (no retry)
-        self._publish_new_commit(tmp, version)
+        self._publish_new_commit(self._write_temp_commit(commit), version)
         return version
 
     def delete(self, condition) -> tuple[int, int]:
@@ -455,8 +493,7 @@ class VersionedParquetTable:
         """DESCRIBE HISTORY analog: one row per commit — version, type,
         operation, timestamp, file/row counts — straight from the log."""
         rows = []
-        for v in self.versions():
-            c = self._load_commit(v)
+        for c in self.commits():
             files = c.get("files") or []
             rows.append(
                 (
@@ -476,20 +513,6 @@ class VersionedParquetTable:
             "n_files int, n_rows long, base_version int, restored_from int",
         )
 
-    def _publish_new_commit(self, tmp: str, version: int) -> None:
-        """Exclusively publish a NEW commit file. ``os.link`` is atomic on
-        POSIX and raises if the target exists — unlike ``os.rename``,
-        which would silently overwrite a concurrent winner's commit."""
-        target = self._commit_file(version)
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise ConcurrentCommitError(
-                f"version {version} of {self.path} was committed by another writer"
-            ) from None
-        os.unlink(tmp)
-
     def vacuum(self) -> list[int]:
         """Garbage-collect data made unreachable by the LATEST compaction:
         commits at or below its base_version. Their commit files are kept
@@ -503,10 +526,7 @@ class VersionedParquetTable:
         """
         import shutil
 
-        commits = []
-        for v in self.versions():
-            with open(self._commit_file(v)) as f:
-                commits.append(json.load(f))
+        commits = self.commits()
         compacts = [c for c in commits if c.get("type") == "compact"]
         if not compacts:
             return []
@@ -556,25 +576,17 @@ class VersionedParquetTable:
                     removed.append(c["version"])
         return removed
 
-    def _rewrite_commit(self, c: dict) -> None:
-        """Atomically replace a commit file (tempfile + rename)."""
-        fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(c, f)
-        os.rename(tmp, self._commit_file(c["version"]))
-
     # -- read ---------------------------------------------------------------
-    def _visible_commits(self, as_of_version: int | None) -> tuple[dict | None, list[dict]]:
-        """(latest visible compaction, visible append commits) for a
-        snapshot — a compaction replaces every commit at or below its
-        base_version (older dirs remain only for deeper time travel)."""
-        versions = self.versions()
-        if as_of_version is not None:
-            versions = [v for v in versions if v <= as_of_version]
-        commits = []
-        for v in versions:
-            with open(self._commit_file(v)) as f:
-                commits.append(json.load(f))
+    def _visible_commits(self, as_of_version: int | None) -> list[dict]:
+        """The commits a snapshot reads: the latest visible compaction
+        (first, if any) and the append commits above its base_version — a
+        compaction replaces every commit at or below it (older dirs remain
+        only for deeper time travel)."""
+        commits = [
+            self._load_commit(v)
+            for v in self.versions()
+            if as_of_version is None or v <= as_of_version
+        ]
         compacts = [c for c in commits if c.get("type") == "compact"]
         compact = max(compacts, key=lambda c: c["version"]) if compacts else None
         visible_appends = [
@@ -589,7 +601,7 @@ class VersionedParquetTable:
                 f"versions {gone} were vacuumed; time travel below the "
                 "compaction base is no longer available"
             )
-        return compact, visible_appends
+        return ([compact] if compact else []) + visible_appends
 
     @staticmethod
     def _candidate_files(commit: dict, where: list[tuple]) -> list[str] | None:
@@ -603,6 +615,52 @@ class VersionedParquetTable:
             for f in files
             if all(_may_match(f["stats"], c, op, v) for (c, op, v) in where)
         ]
+
+    def _scan(self, commits: list[dict], where: list[tuple] | None = None) -> DataFrame:
+        """The rows of ``commits`` with ``_commit_version`` — the one scan
+        builder behind ``read()`` and ``changes()``.
+
+        ``where`` narrows each commit to its stats-candidate files (the
+        exact predicate is the caller's). Every unpartitioned append file
+        goes into ONE multi-path scan (a union per commit grows with
+        history and chokes the optimizer); its commit version is recovered
+        from the data-dir name via ``_metadata.file_path``
+        (input_file_name() is non-deterministic and would block pushdown).
+        A compaction's files carry ``_commit_version`` as a real column,
+        and hive-partitioned commits cannot share a scan (partition
+        discovery rejects several partitioned roots:
+        CONFLICTING_DIRECTORY_STRUCTURES), so those read per directory —
+        ``basePath`` keeps partition columns resolvable from leaf files —
+        and are unioned; compaction keeps that union short.
+        """
+        cols = [*self.schema.fieldNames(), "_commit_version"]
+        flat, parts = [], []
+        for c in commits:
+            paths = self._candidate_files(c, where) if where else None
+            paths = [c["data_dir"]] if paths is None else paths
+            if not paths:
+                continue
+            compact = c.get("type") == "compact"
+            if not compact and not self.partition_cols:
+                flat += paths
+                continue
+            df = (
+                self.spark.read.schema(self._compact_schema if compact else self.schema)
+                .option("basePath", c["data_dir"])
+                .parquet(*paths)
+            )
+            if not compact:
+                df = df.withColumn("_commit_version", F.lit(c["version"]).cast("int"))
+            parts.append(df.select(*cols))
+        if flat:
+            version = F.regexp_extract(
+                F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
+            ).cast("int")
+            df = self.spark.read.schema(self.schema).parquet(*flat)
+            parts.append(df.withColumn("_commit_version", version).select(*cols))
+        if not parts:
+            return self.spark.createDataFrame([], self._compact_schema)
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read(
         self,
@@ -622,95 +680,14 @@ class VersionedParquetTable:
         predicate is applied to the surviving rows — so the result equals
         ``read().where(...)`` while a clustered point read touches ~1 file.
         """
-        compact, visible_appends = self._visible_commits(as_of_version)
-        if compact is None and not visible_appends:
-            empty = self.spark.createDataFrame([], self.schema)
-            return empty.withColumn("_commit_version", F.lit(None).cast("int"))
-
-        cols = [*self.schema.fieldNames(), "_commit_version"]
-        compact_schema = T.StructType(
-            [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
-        )
-        version_from_path = F.regexp_extract(
-            F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
-        ).cast("int")
-
-        parts = []
-        if where:
-            # stats-pruned read: per-commit candidate file lists; basePath
-            # keeps hive-partition columns resolvable from leaf paths. The
-            # per-commit scan granularity is fine HERE because pruning is
-            # for point/range reads that touch few commits and files —
-            # full scans take the else-branch's single multi-dir read.
-            for c in ([compact] if compact else []) + visible_appends:
-                cand = self._candidate_files(c, where)
-                if cand is not None and not cand:
-                    continue
-                is_compact = c.get("type") == "compact"
-                reader = (
-                    self.spark.read.schema(compact_schema if is_compact else self.schema)
-                    .option("basePath", c["data_dir"])
-                )
-                df = reader.parquet(*(cand if cand is not None else [c["data_dir"]]))
-                if not is_compact:
-                    df = df.withColumn("_commit_version", version_from_path)
-                parts.append(df.select(*cols))
-        else:
-            if compact is not None:
-                # compacted files carry _commit_version as a real column
-                parts.append(
-                    self.spark.read.schema(compact_schema)
-                    .parquet(compact["data_dir"])
-                    .select(*cols)
-                )
-            if visible_appends:
-                # ONE multi-path scan for all append commits (a union-per-
-                # commit plan grows linearly with history and chokes the
-                # optimizer); the commit version is recovered from the
-                # data-dir name via _metadata.file_path (input_file_name()
-                # is non-deterministic and would block pushdown).
-                # Hive-partitioned commits are the exception: Spark's
-                # partition discovery rejects multiple partitioned roots in
-                # one scan (CONFLICTING_DIRECTORY_STRUCTURES), so those
-                # read per-dir and union — compaction keeps that union
-                # short-lived.
-                if self.partition_cols:
-                    for c in visible_appends:
-                        out = (
-                            self.spark.read.schema(self.schema)
-                            .option("basePath", c["data_dir"])
-                            .parquet(c["data_dir"])
-                        )
-                        parts.append(
-                            out.withColumn(
-                                "_commit_version", F.lit(c["version"]).cast("int")
-                            ).select(*cols)
-                        )
-                else:
-                    out = self.spark.read.schema(self.schema).parquet(
-                        *[c["data_dir"] for c in visible_appends]
-                    )
-                    parts.append(
-                        out.withColumn("_commit_version", version_from_path).select(
-                            *cols
-                        )
-                    )
-
-        if not parts:
-            empty = self.spark.createDataFrame([], self.schema)
-            result = empty.withColumn("_commit_version", F.lit(None).cast("int"))
-        else:
-            result = parts[0]
-            for p in parts[1:]:
-                result = result.unionByName(p)
-        if where:
-            for c, op, v in where:
-                col = F.col(c)
-                cond = {
-                    "=": col == v, "<": col < v, "<=": col <= v,
-                    ">": col > v, ">=": col >= v,
-                }[op]
-                result = result.where(cond)
+        result = self._scan(self._visible_commits(as_of_version), where)
+        for c, op, v in where or []:
+            col = F.col(c)
+            cond = {
+                "=": col == v, "<": col < v, "<=": col <= v,
+                ">": col > v, ">=": col >= v,
+            }[op]
+            result = result.where(cond)
         return result
 
     def changes(
@@ -729,14 +706,9 @@ class VersionedParquetTable:
         not O(table) — because the version filter selects whole data dirs
         before any file IO.
         """
-        until = until_version if until_version is not None else self.latest_version()
-        if until is None or until <= since_version:
-            empty = self.spark.createDataFrame([], self.schema)
-            return empty.withColumn("_commit_version", F.lit(None).cast("int"))
+        until = (self.latest_version() or 0) if until_version is None else until_version
         window = [
-            c
-            for c in (self._load_commit(v) for v in self.versions())
-            if since_version < c["version"] <= until
+            self._load_commit(v) for v in self.versions() if since_version < v <= until
         ]
         if any(c.get("type") == "compact" for c in window):
             # a compaction in range rewrote history; its dir mixes old and
@@ -744,40 +716,9 @@ class VersionedParquetTable:
             # (still correct — the version column is materialized)
             out = self.read(as_of_version=until)
             return out.where(F.col("_commit_version") > since_version)
-        dirs = [c["data_dir"] for c in window if c.get("data_dir")]
-        if len(dirs) < len(window):
+        if not all(c.get("data_dir") for c in window):
             raise ValueError("requested change range includes vacuumed commits")
-        if not dirs:
-            empty = self.spark.createDataFrame([], self.schema)
-            return empty.withColumn("_commit_version", F.lit(None).cast("int"))
-        cols = [*self.schema.fieldNames(), "_commit_version"]
-        if self.partition_cols:
-            # partitioned roots can't share one scan (see read()); union
-            parts = []
-            for c in window:
-                out = (
-                    self.spark.read.schema(self.schema)
-                    .option("basePath", c["data_dir"])
-                    .parquet(c["data_dir"])
-                )
-                parts.append(
-                    out.withColumn(
-                        "_commit_version", F.lit(c["version"]).cast("int")
-                    ).select(*cols)
-                )
-            result = parts[0]
-            for p in parts[1:]:
-                result = result.unionByName(p)
-            return result
-        version_from_path = F.regexp_extract(
-            F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
-        ).cast("int")
-        return (
-            self.spark.read.schema(self.schema)
-            .parquet(*dirs)
-            .withColumn("_commit_version", version_from_path)
-            .select(*cols)
-        )
+        return self._scan(window)
 
     def diff(
         self,
@@ -801,11 +742,7 @@ class VersionedParquetTable:
         """
         until = until_version if until_version is not None else self.latest_version()
         cols = self.schema.fieldNames()
-        before = (
-            self.read(as_of_version=since_version).select(*cols)
-            if since_version and since_version > 0
-            else self.spark.createDataFrame([], self.schema)
-        )
+        before = self.read(as_of_version=since_version).select(*cols)
         after = self.read(as_of_version=until).select(*cols)
         tag = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
         if not key_cols:
@@ -843,10 +780,9 @@ class VersionedParquetTable:
         snapshot holds vs how many survive stats pruning for ``where``.
         The observability hook tests and capacity planning use to check a
         clustering layout actually earns its rewrite."""
-        compact, visible_appends = self._visible_commits(as_of_version)
         total_f = cand_f = total_r = cand_r = 0
         no_stats = 0
-        for c in ([compact] if compact else []) + visible_appends:
+        for c in self._visible_commits(as_of_version):
             files = c.get("files")
             if files is None:
                 no_stats += 1
@@ -865,12 +801,3 @@ class VersionedParquetTable:
             "candidate_rows": cand_r,
             "commits_without_stats": no_stats,
         }
-
-    def commits(self) -> list[dict]:
-        """Raw commit-log entries (the machine-readable log; ``history()``
-        is the DESCRIBE HISTORY DataFrame view of the same)."""
-        out = []
-        for v in self.versions():
-            with open(self._commit_file(v)) as f:
-                out.append(json.load(f))
-        return out

@@ -49,3 +49,14 @@ def test_every_query_handles_empty_tables(spark, empty_sf):
             except Exception:  # noqa: BLE001
                 pass
     assert not failures, failures
+
+
+def test_local_rows_df_zero_rows_is_an_empty_local_scan(spark):
+    from feature_store_test_spark.data import local_rows_df
+
+    df = local_rows_df(spark, [], "a long, b string, c array<string>")
+    qe = df._jdf.queryExecution()
+    assert "LogicalRDD" not in qe.analyzed().toString()
+    assert qe.executedPlan().toString().startswith("LocalTableScan <empty>")
+    assert df.schema.simpleString() == "struct<a:bigint,b:string,c:array<string>>"
+    assert df.count() == 0

@@ -344,6 +344,19 @@ def test_commit_log_records_file_stats(spark, tmp_path):
     assert all(isinstance(f["stats"]["ts"]["min"], str) for f in files)
 
 
+def _filtered(df, where):
+    for c, op, v in where:
+        col = F.col(c)
+        df = df.where(
+            {"=": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
+        )
+    return df
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
 def test_pruned_read_equals_filtered_read(spark, tmp_path):
     t = _kv_table(spark, tmp_path)
     for where in (
@@ -353,13 +366,70 @@ def test_pruned_read_equals_filtered_read(spark, tmp_path):
         [("k", ">", 10_000)],  # empty result
     ):
         pruned = t.read(where=where)
-        full = t.read()
-        for c, op, v in where:
-            col = F.col(c)
-            full = full.where(
-                {"=": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
-            )
+        full = _filtered(t.read(), where)
         assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, full.collect()))
+
+
+@pytest.mark.parametrize("compacted", [False, True], ids=["appends", "compacted"])
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "hive"])
+def test_scan_paths_agree(spark, tmp_path, partitioned, compacted):
+    """Pruned reads and the change feed equal filters over the full read,
+    with _commit_version, on every commit layout the scan builder sees."""
+    schema = T.StructType([*KV_SCHEMA.fields, T.StructField("d", T.StringType())])
+    t = VersionedParquetTable(
+        spark, str(tmp_path / "t"), schema, partition_cols=["d"] if partitioned else None
+    )
+    for i in range(4):
+        keys = range(i * 40, i * 40 + 60)  # overlapping key ranges
+        rows = [(j, j / 7.0, ts(1 + j % 27), f"p{j % 3}") for j in keys]
+        t.append(spark.createDataFrame(rows, schema).repartition(2))
+        if compacted and i == 1:
+            t.compact(cluster_by=["k"], n_files=3)
+    full = t.read()
+    for where in (
+        [("k", "=", 50)],
+        [("k", ">=", 30), ("k", "<", 130)],
+        [("d", "=", "p1"), ("k", "<=", 90)],
+        [("ts", ">", ts(20))],
+        [("k", ">", 10_000)],
+    ):
+        assert _rows(t.read(where=where)) == _rows(_filtered(full, where))
+    for v in range(t.latest_version() + 1):
+        assert _rows(t.changes(v)) == _rows(full.where(F.col("_commit_version") > v))
+
+
+def test_pruned_read_across_commits_is_one_file_scan(spark, tmp_path):
+    """A stats-pruned read that matches files of several append commits is
+    one multi-path scan, not a union of per-commit scans."""
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), KV_SCHEMA)
+    for i in range(3):  # unclustered: every commit spans the whole key range
+        rows = [(j, float(i), ts(1 + i)) for j in range(100)]
+        t.append(spark.createDataFrame(rows, KV_SCHEMA))
+    df = t.read(where=[("k", "=", 50)])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert "Union" not in plan
+    assert sorted((r.v, r._commit_version) for r in df.collect()) == [
+        (0.0, 1), (1.0, 2), (2.0, 3)
+    ]
+
+
+def test_append_rejects_type_mismatch_before_writing(spark, tmp_path):
+    import os
+
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.DoubleType())])
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
+    t.append(spark.createDataFrame([(1, 1.0)], schema))
+    data_dirs = sorted(os.listdir(tmp_path / "t" / "data"))
+    with pytest.raises(ValueError, match="schema mismatch"):
+        t.append(spark.createDataFrame([(2, "x")], "k long, v string"))
+    assert sorted(os.listdir(tmp_path / "t" / "data")) == data_dirs
+    assert t.versions() == [1]
+    # nullability is not part of the table's schema contract
+    not_null = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.DoubleType(), False)]
+    )
+    assert t.append(spark.createDataFrame([(3, 3.0)], not_null)) == 2
 
 
 def test_clustered_compaction_tightens_pruning(spark, tmp_path):
@@ -662,6 +732,16 @@ def test_merge_matches_upsert_rule(spark, tmp_path):
     )
 
 
+def test_upsert_of_empty_updates_commits_nothing(spark, tmp_path):
+    fg = make_fg(spark, tmp_path)
+    fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
+    empty = spark.createDataFrame(
+        [], "customer_id long, purchase_timestamp timestamp, purchase_value double"
+    )
+    assert fg.upsert(empty, {"purchase_value": "purchase_value"}) is None
+    assert fg.table.versions() == [1]
+
+
 def test_merge_rejects_duplicate_source_keys(spark, tmp_path):
     fg = make_fg(spark, tmp_path)
     src = spark.createDataFrame(
@@ -705,6 +785,11 @@ def test_concurrent_append_publish_race_retries_to_next_version(spark, tmp_path)
     got = {r.x for r in t.read().collect()}
     assert got == {1, 2, 99}  # nobody's commit was clobbered
     assert t.versions() == [1, 2, 3]
+    # the retried data dir was renamed to its new version, so each row
+    # reads back the version of the commit that published it
+    got = {(r.x, r._commit_version) for r in t.read().collect()}
+    assert got == {(1, 1), (99, 2), (2, 3)}
+    assert {r.x for r in t.changes(2).collect()} == {2}
 
 
 def test_compact_aborts_on_publish_race(spark, tmp_path):
