@@ -62,11 +62,15 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import json
+import math
 import os
 import tempfile
 import time
+import urllib.parse
 import uuid
 
+import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -103,6 +107,82 @@ def _stat_value(v):
     return v
 
 
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and math.isnan(v)
+
+
+def _partition_value(raw: str, dtype: T.DataType):
+    """A hive directory value (``col=raw``) as ``collect()`` returns it."""
+    if raw == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    v = urllib.parse.unquote(raw)
+    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return int(v)
+    if isinstance(dtype, T.FloatType):
+        return float(np.float32(v))
+    if isinstance(dtype, T.DoubleType):
+        return float(v)
+    if isinstance(dtype, T.BooleanType):
+        return v == "true"
+    if isinstance(dtype, T.TimestampType):
+        return _dt.datetime.fromisoformat(v)
+    return v  # strings, and dates (the directory value is the isoformat)
+
+
+def _footer_bounds(md: pq.FileMetaData, col: int):
+    """(min, max) of leaf column ``col`` over every row group of a parquet
+    footer, (None, None) when every value is NULL, or None when a bound is
+    unknown: a row group holding values has no min/max (the writer drops
+    them above 4 KiB) or a NaN bound."""
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        s = rg.column(col).statistics
+        if s is not None and s.has_null_count and s.null_count == rg.num_rows:
+            continue  # all NULL in this row group
+        if s is None or not s.has_min_max or _is_nan(s.min) or _is_nan(s.max):
+            return None
+        lo = s.min if lo is None else min(lo, s.min)
+        hi = s.max if hi is None else max(hi, s.max)
+    return lo, hi
+
+
+def _naive(v):
+    """Footer timestamps are tz-aware UTC; ``collect()`` gives naive local."""
+    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        return v.astimezone().replace(tzinfo=None)
+    return v
+
+
+def _file_entry(path: str, data_dir: str, stat_types: dict) -> dict | None:
+    """The commit-log entry of one written part file (absolute ``path``
+    under ``data_dir``): rows, bytes and min/max per ``stat_types`` column,
+    all from its parquet footer, except hive partition columns, which the
+    file does not hold: their min = max is the ``col=value`` directory.
+    None for a file with no rows."""
+    md = pq.read_metadata(path)
+    if md.num_rows == 0:
+        return None
+    leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    bounds = {c: _footer_bounds(md, leaves[c]) for c in stat_types if c in leaves}
+    for part in os.path.relpath(path, data_dir).split(os.sep)[:-1]:
+        name, _, raw = part.partition("=")
+        name = urllib.parse.unquote(name)
+        if name in stat_types:
+            v = _partition_value(raw, stat_types[name])
+            bounds[name] = None if _is_nan(v) else (v, v)
+    return {
+        "path": path,
+        "rows": md.num_rows,
+        "bytes": os.path.getsize(path),
+        "stats": {
+            c: {"min": _stat_value(_naive(b[0])), "max": _stat_value(_naive(b[1]))}
+            for c in stat_types
+            if (b := bounds.get(c)) is not None
+        },
+    }
+
+
 def _columns(schema: T.StructType) -> list[tuple[str, str]]:
     """(name, type) pairs; ``simpleString`` drops nullability at every depth."""
     return [(f.name, f.dataType.simpleString()) for f in schema.fields]
@@ -119,6 +199,10 @@ def _may_match(stats: dict, col: str, op: str, value) -> bool:
     mn, mx = s.get("min"), s.get("max")
     if mn is None or mx is None:
         return False
+    # Spark orders NaN above every value and has NaN = NaN; Python's
+    # comparisons are all False on NaN, so a NaN bound or value never prunes
+    if any(map(_is_nan, (mn, mx, value))):
+        return True
     v = _stat_value(value)
     if op == "=":
         return mn <= v <= mx
@@ -221,16 +305,19 @@ class VersionedParquetTable:
 
     def _write_data(self, df: DataFrame, version: int) -> dict:
         """Write ``df`` as a new data dir named after ``version`` and return
-        the commit body: data_dir, schema, layout and per-file stats.
+        the commit body: data_dir, schema, layout, write time and one entry
+        per part file (absolute path, rows, bytes, min/max per eligible
+        column).
 
-        The stats are a row count + min/max per eligible column per file,
-        collected in ONE scan grouped by ``_metadata.file_path`` (the
-        write-time stats Delta keeps in its log; Iceberg in manifests). At
-        100 TB these are what turn a point read into an O(files-touched)
-        operation instead of a full scan — the log stays tiny (stats rows,
-        not data rows) and the scan is executor-parallel over freshly
-        written, page-cached files.
+        The stats are the write-time stats Delta keeps in its log (Iceberg
+        in manifests), taken from the footers the parquet writer has just
+        written: a few KiB read per file, in this process, and no Spark job
+        reads the data back. At 100 TB these are what turn a point read
+        into an O(files-touched) operation instead of a full scan, and the
+        log stays tiny (one entry per file, not per row). A column whose
+        bounds are unknown gets no stats entry, so it never prunes.
         """
+        t0 = time.perf_counter()
         data_dir = os.path.join(
             self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
         )
@@ -239,34 +326,17 @@ class VersionedParquetTable:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(data_dir)
 
-        stat_cols = [
-            f.name for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)
-        ]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in stat_cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        rows = (
-            self.spark.read.schema(df.schema)
-            .parquet(data_dir)
-            .groupBy(F.col("_metadata.file_path").alias("__path"))
-            .agg(*aggs)
-            .collect()
+        stat_types = {
+            f.name: f.dataType for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)
+        }
+        root = os.path.abspath(data_dir)
+        paths = sorted(
+            os.path.join(d, n)
+            for d, _, names in os.walk(root)
+            for n in names
+            if not n.startswith(("_", "."))  # _SUCCESS, .crc: not data
         )
-        files = [
-            {
-                "path": r["__path"].removeprefix("file://"),
-                "rows": r["__rows"],
-                "stats": {
-                    c: {
-                        "min": _stat_value(r[f"__mn_{c}"]),
-                        "max": _stat_value(r[f"__mx_{c}"]),
-                    }
-                    for c in stat_cols
-                },
-            }
-            for r in rows
-        ]
+        files = [e for e in (_file_entry(p, root, stat_types) for p in paths) if e]
         return {
             "version": version,
             "data_dir": data_dir,
@@ -274,6 +344,7 @@ class VersionedParquetTable:
             "schema": df.schema.jsonValue(),
             "partition_cols": self.partition_cols,
             "files": files,
+            "write_s": time.perf_counter() - t0,
         }
 
     # -- schema evolution ----------------------------------------------------
@@ -491,7 +562,9 @@ class VersionedParquetTable:
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY analog: one row per commit — version, type,
-        operation, timestamp, file/row counts — straight from the log."""
+        operation, timestamp, file/row counts, bytes written and write time
+        (data write + footer pass; both NULL for commits logged before they
+        were recorded) — straight from the log."""
         rows = []
         for c in self.commits():
             files = c.get("files") or []
@@ -505,12 +578,15 @@ class VersionedParquetTable:
                     sum(f.get("rows") or 0 for f in files),
                     c.get("base_version"),
                     c.get("restored_from"),
+                    sum(f["bytes"] for f in files) if "write_s" in c else None,
+                    c.get("write_s"),
                 )
             )
         return self.spark.createDataFrame(
             rows,
             "version int, type string, op string, ts_unix double, "
-            "n_files int, n_rows long, base_version int, restored_from int",
+            "n_files int, n_rows long, base_version int, restored_from int, "
+            "n_bytes long, write_s double",
         )
 
     def vacuum(self) -> list[int]:

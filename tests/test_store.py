@@ -3,7 +3,11 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
+import urllib.parse
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -189,8 +193,6 @@ def test_partition_cols_must_exist(spark, tmp_path):
 def test_partial_commit_files_are_invisible(spark, tmp_path):
     """Atomicity: stray .tmp files and data without a published commit JSON
     must be invisible to readers (files-first, rename-to-publish)."""
-    import os
-
     schema = T.StructType([T.StructField("x", T.LongType())])
     t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
     t.append(spark.createDataFrame([(1,)], schema))
@@ -286,8 +288,6 @@ def test_upsert_rejects_duplicate_keys(spark, tmp_path):
 
 
 def test_vacuum_after_compaction(spark, tmp_path):
-    import os
-
     schema = T.StructType([T.StructField("x", T.LongType())])
     t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
     for i in range(4):
@@ -336,12 +336,27 @@ def _kv_table(spark, tmp_path, n=1000, commits=4):
 
 def test_commit_log_records_file_stats(spark, tmp_path):
     t = _kv_table(spark, tmp_path, n=100, commits=1)
-    files = t.commits()[0]["files"]
+    commit = t.commits()[0]
+    files = commit["files"]
     assert files and all(f["rows"] > 0 for f in files)
     ks = [f["stats"]["k"] for f in files]
     assert min(s["min"] for s in ks) == 0 and max(s["max"] for s in ks) == 99
     # timestamps serialize as isoformat strings (lexicographically ordered)
     assert all(isinstance(f["stats"]["ts"]["min"], str) for f in files)
+    # bytes written and write time, per file and per commit, in history()
+    assert all(f["bytes"] == os.path.getsize(f["path"]) > 0 for f in files)
+    assert commit["write_s"] > 0
+    (h,) = t.history().collect()
+    assert h.n_bytes == sum(f["bytes"] for f in files)
+    assert h.write_s == commit["write_s"]
+    assert t.history().columns[-2:] == ["n_bytes", "write_s"]
+    # a commit logged before bytes and write time were recorded: both NULL
+    for f in commit["files"]:
+        del f["bytes"]
+    del commit["write_s"]
+    t._rewrite_commit(commit)
+    (h,) = t.history().collect()
+    assert (h.n_files, h.n_rows, h.n_bytes, h.write_s) == (len(files), 100, None, None)
 
 
 def _filtered(df, where):
@@ -414,9 +429,248 @@ def test_pruned_read_across_commits_is_one_file_scan(spark, tmp_path):
     ]
 
 
-def test_append_rejects_type_mismatch_before_writing(spark, tmp_path):
-    import os
+def test_nan_bounds_never_prune(spark, tmp_path):
+    """Spark orders NaN above every value and has NaN = NaN, so a file
+    holding NaN may match ``>`` and ``= NaN`` predicates: a pruned read
+    still equals the filtered full read, also for a log whose stats hold
+    NaN bounds."""
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("d", T.DoubleType())])
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
+    t.append(spark.createDataFrame([(1, 1.0), (2, float("nan"))], schema).coalesce(1))
+    wheres = ([("d", ">", 5.0)], [("d", "=", float("nan"))], [("d", "<", 5.0)])
 
+    def check():
+        for where in wheres:
+            got = sorted(r.k for r in t.read(where=where).collect())
+            assert got == sorted(r.k for r in _filtered(t.read(), where).collect())
+            assert len(got) == 1
+
+    check()
+    commit = t.commits()[-1]
+    for f in commit["files"]:  # the bounds a Spark min/max scan records
+        f["stats"]["d"] = {"min": 1.0, "max": float("nan")}
+    t._rewrite_commit(commit)
+    check()
+
+
+@pytest.mark.parametrize("root", ["uri probe", "uri%20pct"])
+def test_pruned_reads_under_a_root_needing_escapes(spark, tmp_path, root):
+    """Logged file paths are plain filesystem paths, so stats-pruned reads
+    work under a table root holding a space or a ``%``."""
+    fg = make_fg(spark, tmp_path / root)
+    fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
+    fg.ingest(spark.createDataFrame([row(2, 2, 20.0, 20.0, 6.0, 6.0)], FG_SCHEMA))
+    assert fg.get_latest(2)["latest_purchase_value"] == 20.0
+    assert fg.exists(1) and not fg.exists(99)
+    got = fg.table.read(where=[("customer_id", "=", 1)])
+    assert [r.latest_purchase_value for r in got.collect()] == [10.0]
+
+
+def test_file_uri_paths_in_log_still_read_and_prune(spark, tmp_path):
+    """Logs holding Spark's ``file:`` URIs as file paths read, and prune,
+    exactly as logs holding plain paths."""
+    t = _kv_table(spark, tmp_path, n=400, commits=4)
+    t.compact(cluster_by=["k"], n_files=4)
+    t.append(spark.createDataFrame([(j, 0.5, ts(3)) for j in range(400, 500)], KV_SCHEMA))
+    wheres = ([("k", "=", 150)], [("k", ">=", 380), ("k", "<", 450)], [("ts", ">", ts(20))])
+
+    def snapshot():
+        return [
+            (_rows(t.read(where=w)), len(t.read(where=w).inputFiles()), t.skipping_report(w))
+            for w in wheres
+        ]
+
+    before = snapshot()
+    for c in t.commits():
+        for f in c["files"]:
+            f["path"] = "file:" + f["path"]
+        t._rewrite_commit(c)
+    assert all(f["path"].startswith("file:/") for c in t.commits() for f in c["files"])
+    assert snapshot() == before
+    assert any(n < before[0][2]["total_files"] for _, n, _ in before)
+
+
+_ALL_TYPES = T.StructType(
+    [
+        T.StructField("b", T.ByteType()),
+        T.StructField("sh", T.ShortType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("l", T.LongType()),
+        T.StructField("f", T.FloatType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("bo", T.BooleanType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("nothing", T.IntegerType()),
+        T.StructField("arr", T.ArrayType(T.LongType())),
+    ]
+)
+
+
+def _all_types_df(spark, n):
+    """``n`` rows of every stat type, every seventh row all NULL."""
+    rows = [
+        (None,) * len(_ALL_TYPES) if j % 7 == 3 else (
+            j % 100 - 50, j * 3 - 900, j * 1001, j * 10**12, j / 3.0, -j / 7.0,
+            f"s{j:05d}é", j % 2 == 0, dt.date(2024, 1, 1) + dt.timedelta(days=j % 40),
+            dt.datetime(2024, 1, 1, 3, 4, 5, 123456) + dt.timedelta(minutes=j), None, [j],
+        )
+        for j in range(n)
+    ]
+    return spark.createDataFrame(rows, _ALL_TYPES)
+
+
+def _stats_case_types(spark, path):
+    t = VersionedParquetTable(spark, path, _ALL_TYPES)
+    t.append(_all_types_df(spark, 90).repartition(3))
+    return t, set()
+
+
+def _stats_case_row_groups(spark, path):
+    t = VersionedParquetTable(spark, path, _ALL_TYPES)
+    spark.conf.set("parquet.block.size", "2048")
+    try:
+        t.append(_all_types_df(spark, 3000).coalesce(2))
+    finally:
+        spark.conf.unset("parquet.block.size")
+    files = t.commits()[-1]["files"]
+    assert all(pq.read_metadata(f["path"]).num_row_groups > 1 for f in files)
+    return t, set()
+
+
+def _stats_case_hive(spark, path):
+    schema = T.StructType(
+        [*KV_SCHEMA.fields, T.StructField("p_int", T.IntegerType()), T.StructField("p_str", T.StringType())]
+    )
+    t = VersionedParquetTable(spark, path, schema, partition_cols=["p_int", "p_str"])
+    strs = ["plain", "a b/c:d", None]
+    rows = [
+        (j, j / 7.0, ts(1 + j % 27), None if j % 5 == 4 else j % 3, strs[j % 3]) for j in range(60)
+    ]
+    t.append(spark.createDataFrame(rows, schema))
+    return t, set()
+
+
+def _stats_case_compact(spark, path):
+    t = VersionedParquetTable(spark, path, KV_SCHEMA)
+    for i in range(2):
+        rows = [(j, j / 7.0, ts(1 + i)) for j in range(i * 50, i * 50 + 80)]
+        t.append(spark.createDataFrame(rows, KV_SCHEMA))
+    t.compact(cluster_by=["k"], n_files=3)
+    assert "_commit_version" in t.commits()[-1]["files"][0]["stats"]
+    return t, set()
+
+
+def _stats_case_empty(spark, path):
+    t = VersionedParquetTable(spark, path, KV_SCHEMA)
+    t.append(spark.createDataFrame([], KV_SCHEMA))
+    assert t.commits()[-1]["files"] == []
+    return t, set()
+
+
+def _stats_case_long_string(spark, path):
+    """Parquet keeps no min/max for values above 4 KiB: no stats entry."""
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("s", T.StringType())])
+    t = VersionedParquetTable(spark, path, schema)
+    t.append(spark.createDataFrame([(1, "x" * 5000), (2, "y"), (3, None)], schema).coalesce(1))
+    return t, {"s"}
+
+
+def _stats_case_nan(spark, path):
+    """A NaN bound gets no stats entry, so the column never prunes."""
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("d", T.DoubleType()), T.StructField("f", T.FloatType())]
+    )
+    t = VersionedParquetTable(spark, path, schema)
+    rows = [(1, 1.0, float("nan")), (2, float("nan"), 2.0), (3, 0.5, None)]
+    t.append(spark.createDataFrame(rows, schema).coalesce(1))
+    return t, {"d", "f"}
+
+
+def _scan_file_stats(spark, commit):
+    """Per-file rows and min/max the way a Spark scan of the written files
+    computes them (one job grouped by ``_metadata.file_path``), keyed by
+    plain filesystem path."""
+    from feature_store_test_spark.store.table import _STAT_TYPES, _stat_value
+
+    schema = T.StructType.fromJson(commit["schema"])
+    cols = [f.name for f in schema.fields if isinstance(f.dataType, _STAT_TYPES)]
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
+    rows = (
+        spark.read.schema(schema)
+        .parquet(commit["data_dir"])
+        .groupBy(F.col("_metadata.file_path").alias("__path"))
+        .agg(*aggs)
+        .collect()
+    )
+    return {
+        urllib.parse.unquote(urllib.parse.urlparse(r["__path"]).path): {
+            "rows": r["__rows"],
+            "stats": {
+                c: {"min": _stat_value(r[f"__mn_{c}"]), "max": _stat_value(r[f"__mx_{c}"])}
+                for c in cols
+            },
+        }
+        for r in rows
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _stats_case_types, _stats_case_row_groups, _stats_case_hive, _stats_case_compact,
+        _stats_case_empty, _stats_case_long_string, _stats_case_nan,
+    ],
+    ids=lambda f: f.__name__.removeprefix("_stats_case_"),
+)
+def test_footer_stats_equal_a_scan_of_the_written_files(spark, tmp_path, case):
+    """The commit's per-file rows and min/max, read from parquet footers,
+    equal a Spark scan of the same files, byte for byte in the log; the
+    only differences are the conservative omissions, where the scan's
+    bound is NaN or the footer holds none."""
+    t, omitted = case(spark, str(tmp_path / "t"))
+    commit = t.commits()[-1]
+    scan = _scan_file_stats(spark, commit)
+    logged = {f["path"]: f for f in commit["files"]}
+    assert sorted(logged) == sorted(scan)
+    assert all(os.path.isabs(p) and os.path.isfile(p) for p in logged)
+    for path, want in scan.items():
+        got = logged[path]
+        assert got["rows"] == want["rows"]
+        for c in omitted:
+            assert c not in got["stats"]
+        want_stats = {c: s for c, s in want["stats"].items() if c not in omitted}
+        assert json.dumps(got["stats"]) == json.dumps(want_stats)
+
+
+def test_append_reads_nothing_back(spark, tmp_path):
+    """An append runs exactly the jobs of a plain parquet write of the same
+    frame: its file stats come from the footers, not from a scan."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [(j, j / 7.0, ts(1 + j % 27)) for j in range(300)], KV_SCHEMA
+    ).repartition(3)
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), KV_SCHEMA)
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs("plain-parquet-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    appended = jobs("versioned-append", lambda: t.append(df))
+    assert appended == plain >= 1
+    assert t.read().count() == 300
+
+
+def test_append_rejects_type_mismatch_before_writing(spark, tmp_path):
     schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.DoubleType())])
     t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
     t.append(spark.createDataFrame([(1, 1.0)], schema))
@@ -907,7 +1161,6 @@ def test_vacuum_crash_window_is_clean_and_retryable(spark, tmp_path):
     parquet path-not-found), and the retained vacuum_dir lets the next
     vacuum() finish the deletion idempotently."""
     import json as _json
-    import os
 
     schema = T.StructType([T.StructField("x", T.LongType())])
     t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
