@@ -644,67 +644,6 @@ def main() -> None:
             },
         }
 
-    # K-interval sessionizer throughput (round 9, r8 verdict item 5): the
-    # array-state cost of max_open_intervals=K, measured before anyone
-    # turns it on in production. 10x-replica events through the stateful
-    # sessionizer at K=1 (original scalar state) and K=4 (array state),
-    # availableNow file-source stream -> noop sink, warm-then-min-of-2
-    # with the two variants ALTERNATING inside the window (the first
-    # streaming query of a session pays state-store + Python-worker init
-    # measured at ~45s of pure warmup — order alternation keeps that out
-    # of the comparison, the same discipline as the query A/Bs).
-    session_scale = None
-    if with_scale and scale_dir:
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        from feature_store_test_spark.streaming.stateful import (
-            stateful_sessions,
-        )
-
-        _set_profile(*SCALE_PROFILE)
-        _ev_path = scale_dir + "/events.parquet"
-        _n_ev = spark.read.parquet(_ev_path).count()
-        _ev_schema = spark.read.parquet(_ev_path).schema
-
-        def _run_sessions_once(k: int) -> float:
-            ckpt = _tempfile.mkdtemp(prefix=f"bench_sess_k{k}_")
-            try:
-                stream = (
-                    spark.readStream.schema(_ev_schema)
-                    .parquet(_ev_path)
-                    .withWatermark("ts", "10 minutes")
-                )
-                t0 = time.perf_counter()
-                q = (
-                    stateful_sessions(
-                        stream, gap="30 minutes", max_open_intervals=k
-                    )
-                    .writeStream.format("noop")
-                    .option("checkpointLocation", ckpt)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                return time.perf_counter() - t0
-            finally:
-                _shutil.rmtree(ckpt, ignore_errors=True)
-
-        _run_sessions_once(1)
-        _run_sessions_once(4)  # warm both state-fold paths
-        _sess: dict[int, list[float]] = {1: [], 4: []}
-        for _ in range(2):
-            for k in (1, 4):
-                _sess[k].append(_run_sessions_once(k))
-        _set_profile(*BASE_PROFILE)
-        session_scale = {
-            "replica_events": _n_ev,
-            "k1_events_per_sec": round(_n_ev / min(_sess[1])),
-            "k4_events_per_sec": round(_n_ev / min(_sess[4])),
-            "k4_over_k1_wall": round(min(_sess[4]) / min(_sess[1]), 3),
-        }
-
     # Reference-architecture throughput comparison: the reference engineers
     # features with eager single-threaded pandas (groupby/agg). Time the
     # same workload both ways on the same events table.
@@ -858,7 +797,6 @@ def main() -> None:
     detail["per_job_floor_sec"] = per_job_floor_sec
     detail["plan_construction"] = construct
     detail["bpe_scale"] = bpe_scale
-    detail["session_scale"] = session_scale
     # floor_net_ratio_vs_duckdb moved INTO the headline result block
     # (r9 verdict item 1c) — it rides into detail via dict(result) above.
     self_path = os.path.join(

@@ -7,9 +7,11 @@ nondeterministic pandas ``groupby().agg('last')``
 always defined by an explicit total order (event time + unique tiebreak),
 never by physical row order.
 
-Scale: one hash shuffle on the key; ``row_number`` needs only an
-in-partition sort. At 100 TB prefer feeding this from a table partitioned /
-clustered by the key so the shuffle is avoided entirely.
+Scale: both forms plan as one hash shuffle on the key with a sort on each
+side of it, and both ship one row per key per input partition (Spark 4.1
+``explain()``). The window form gets a partial ``WindowGroupLimit`` below
+the exchange; the ``max_by`` form plans as a ``SortAggregate``, because its
+struct buffer is not a type ``HashAggregate`` can hold.
 """
 
 from __future__ import annotations
@@ -45,11 +47,9 @@ def latest_per_key_agg(
     """Latest-per-key as an AGGREGATION: max_by(whole row, order tuple).
 
     Same result as the ranking-window form when ``max_of`` is a total
-    order (largest tuple = latest), but executes as a hash aggregate with
-    map-side partial max — the shuffle carries ONE candidate row per key
-    per input partition instead of every row, and no in-partition sort
-    happens. At 100 TB this is the preferred online-view materialization;
-    the window form remains for cases needing ranks beyond #1.
+    order (largest tuple = latest), and the same shuffle (module
+    docstring). The store's online view uses this form; ``process_batch``
+    uses the window form.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     order_cols = [F.col(c) if isinstance(c, str) else c for c in max_of]

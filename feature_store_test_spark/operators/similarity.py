@@ -1229,14 +1229,6 @@ def _pq_fit(
     return codebooks
 
 
-def _sq_l2(a: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance between an array column and a literal centroid
-    (ordered zip_with fold — deterministic double accumulation)."""
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    diffs = F.zip_with(a, lit, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],

@@ -7,9 +7,9 @@ carries a declared StructType — no ``inferSchema`` in production paths
 
 ``read_csv`` covers the reference's historical/inference CSV inputs;
 ``read_json``/``read_parquet`` round out the batch formats;
-``stream_source`` is the streaming twin (same declared schema) feeding the
-inference pipeline, with ``maxFilesPerTrigger`` as the micro-batch sizing
-knob.
+``read_with_quarantine`` is the permissive ingest read that keeps malformed
+lines as rows. The streaming inference pipeline builds its own declared-schema
+``readStream`` (``InferencePipeline.run_stream``).
 """
 
 from __future__ import annotations
@@ -46,52 +46,6 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
 
 def read_parquet(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write ``df`` as a bucketed (+ optionally sorted) catalog table.
-
-    Bucketing is the storage half of a co-located join: two tables
-    bucketed by the same key into the same bucket count join with NO
-    Exchange — each task reads matching bucket files from both sides
-    (and with ``sort_cols`` == join key, no Sort either). At 100 TB this
-    turns the recurring fact-to-fact shuffle (the most expensive stage in
-    the plan) into a one-off layout cost at write time, exactly like
-    clustered/bucketed tables in Hive/Iceberg.
-    """
-    writer = (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def stream_source(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if fmt == "parquet":
-        return reader.parquet(path)
-    if fmt == "csv":
-        return reader.option("header", True).csv(path)
-    if fmt == "json":
-        return reader.json(path)
-    raise ValueError(f"unsupported stream format {fmt!r}")
 
 
 def read_with_quarantine(

@@ -3,11 +3,11 @@
 Offline store = append-only commit-logged parquet history (every ingest is a
 new immutable version — the reference's SageMaker offline store,
 /root/reference/core/feature_store_manager.py:96-102, minus AWS).
-Online store = latest-per-key view DERIVED from the history by a ranking
-window — upserts are appends of computed rows, never in-place mutation.
+Online store = latest-per-key view DERIVED from the history by a ``max_by``
+aggregation (``FeatureGroup._latest``) — upserts are appends of
+computed rows, never in-place mutation.
 """
 
-from feature_store_test_spark.store.aggview import IncrementalAggView
 from feature_store_test_spark.store.feature_group import FeatureGroup, FeatureStore
 from feature_store_test_spark.store.serving import ServingSession
 from feature_store_test_spark.store.table import VersionedParquetTable
@@ -15,7 +15,6 @@ from feature_store_test_spark.store.table import VersionedParquetTable
 __all__ = [
     "FeatureGroup",
     "FeatureStore",
-    "IncrementalAggView",
     "ServingSession",
     "VersionedParquetTable",
 ]

@@ -121,9 +121,9 @@ class FeatureGroup:
 
     # -- online store -------------------------------------------------------
     def _latest(self, hist: DataFrame, strict_event_time: bool) -> DataFrame:
-        """Latest row per key of ``hist`` (the aggregation form: map-side
-        partial max_by → one candidate row per key per partition crosses
-        the shuffle, vs every version for the ranking-window form)."""
+        """Latest row per key of ``hist`` via ``latest_per_key_agg``: a
+        partial ``max_by`` per partition, so one candidate row per key per
+        partition crosses the shuffle (see operators/latest.py)."""
         if strict_event_time:
             max_of = [self.event_time_col, "_commit_version"]
         else:

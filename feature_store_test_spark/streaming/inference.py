@@ -220,20 +220,10 @@ class InferencePipeline:
         return self.process_batch(to_retry, attempt=2)
 
     # ---------------------------------------------------------------- stream
-    def run_stream(
-        self,
-        input_dir: str,
-        checkpoint_dir: str,
-        max_files_per_trigger: int | None = None,
-    ) -> None:
+    def run_stream(self, input_dir: str, checkpoint_dir: str) -> None:
         """Structured Streaming replay of a parquet event directory:
         readStream → foreachBatch(process_batch), availableNow (drain all)."""
-        reader = (
-            self.spark.readStream.schema(EVENT_SCHEMA)
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(input_dir)
+        stream = self.spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
 
         q = (
             stream.writeStream.foreachBatch(

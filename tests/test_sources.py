@@ -9,7 +9,6 @@ from feature_store_test_spark.sources import (
     PURCHASES_SCHEMA,
     read_csv,
     read_json,
-    stream_source,
 )
 
 
@@ -47,47 +46,6 @@ def test_json_roundtrip(spark, sf_dir, tmp_path):
     back = read_json(spark, path, PURCHASES_SCHEMA)
     assert back.schema == PURCHASES_SCHEMA
     assert back.count() == src.count()
-
-
-def test_stream_source_schema(spark, sf_dir, tmp_path):
-    src = purchases(spark, sf_dir)
-    path = str(tmp_path / "stream_parquet")
-    src.write.parquet(path)
-    stream = stream_source(spark, path, PURCHASES_SCHEMA, max_files_per_trigger=1)
-    assert stream.isStreaming
-    assert stream.schema == PURCHASES_SCHEMA
-
-
-def test_bucketed_tables_join_without_exchange(spark, sf_dir):
-    """Co-located join: lineitem and orders bucketed by their join key into
-    the same bucket count must SortMergeJoin with zero Exchange (no
-    shuffle) and zero Sort (sortBy at write time) — the bucketing payoff
-    that removes the fact-to-fact shuffle at scale."""
-    from feature_store_test_spark.data import load_table
-    from feature_store_test_spark.sources import write_bucketed
-
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_quantity")
-    orders = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "li_bucketed", ["l_orderkey"], 8, sort_cols=["l_orderkey"])
-    write_bucketed(orders, "ord_bucketed", ["o_orderkey"], 8, sort_cols=["o_orderkey"])
-    try:
-        a = spark.table("li_bucketed")
-        b = spark.table("ord_bucketed")
-        # hint forces SMJ so the tiny test tables don't broadcast
-        joined = a.hint("merge").join(
-            b, a.l_orderkey == b.o_orderkey
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert plan.count("Sort ") == 0 or "Sort [l_orderkey" not in plan.split(
-            "SortMergeJoin"
-        )[0], plan
-        want = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-        assert joined.count() == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS ord_bucketed")
 
 
 def test_quarantine_split_json_and_csv(spark, tmp_path):

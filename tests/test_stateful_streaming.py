@@ -1,60 +1,10 @@
-"""applyInPandasWithState: executor-state fold across real micro-batches."""
+"""Spark's native stateful streaming operators, checked against their batch
+answers on a drained replay: watermarked tumbling windows and a watermarked
+stream-stream interval join. Per-key feature state is not kept in the Spark
+state store; ``InferencePipeline`` folds it through the feature table
+(tests/test_streaming.py, tests/test_checkpoint_recovery.py)."""
 
 from __future__ import annotations
-
-import os
-import time
-
-import pytest
-from pyspark.sql import functions as F
-
-from feature_store_test_spark.sources import stream_source
-from feature_store_test_spark.streaming.stateful import stateful_incremental_avg
-from tests.test_streaming import closed_form_state, events_as_purchases
-
-
-def test_stateful_fold_across_micro_batches(spark, sf_dir, tmp_path):
-    ev = events_as_purchases(spark, sf_dir)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # two files with distinct mtimes → two micro-batches in arrival order
-    # that matches event-time order → state must equal the closed form
-    early = ev.where(F.col("purchase_timestamp") < "2024-01-15")
-    late = ev.where(F.col("purchase_timestamp") >= "2024-01-15")
-    early.coalesce(1).write.parquet(src + "/b1")
-    time.sleep(1.1)  # file-source orders batches by modification time
-    late.coalesce(1).write.parquet(src + "/b2")
-
-    stream = stream_source(
-        spark,
-        src + "/*",
-        ev.schema,
-        max_files_per_trigger=1,
-    )
-    q = (
-        stateful_incremental_avg(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("state_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    out = spark.table("state_out")
-    # update mode emits one row per key per batch; the final state is the
-    # one with the highest event count (monotonically increasing)
-    final = {}
-    for r in out.collect():
-        if r.customer_id not in final or r.n_events > final[r.customer_id][1]:
-            final[r.customer_id] = (r.inc_avg_value, r.n_events)
-    want = closed_form_state(spark, sf_dir)
-    assert set(final) == set(want)
-    for cid, (n, inc_avg) in want.items():
-        got_avg, got_n = final[cid]
-        assert got_n == n, cid
-        assert got_avg == pytest.approx(inc_avg, abs=1e-6), cid
 
 
 def test_watermarked_streaming_windows_match_batch(spark, sf_dir, tmp_path):
@@ -146,179 +96,3 @@ def test_stream_stream_interval_join(spark, sf_dir, tmp_path):
     q.awaitTermination()
     got = sorted((r.s_id, r.p_id) for r in spark.table("ss_join").collect())
     assert got == want and len(got) > 0
-
-
-def test_stateful_sessions_close_on_gap_and_timeout(spark, sf_dir, tmp_path):
-    """Custom EventTimeTimeout sessionizer: over a drained stream, closed
-    sessions must match the batch session_window aggregation for every
-    session whose end + gap precedes the final watermark; later sessions
-    may still sit in state (the documented tail contract)."""
-    from feature_store_test_spark.data import load_table
-    from feature_store_test_spark.streaming.stateful import stateful_sessions
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .where(F.col("user_id") < 30)
-        .select("user_id", "ts")
-    )
-    src = tmp_path / "src"
-    ev.where(F.col("user_id") % 2 == 0).coalesce(1).write.mode("append").parquet(str(src))
-    ev.where(F.col("user_id") % 2 == 1).coalesce(1).write.mode("append").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withWatermark("ts", "0 seconds")
-    )
-    out = tmp_path / "out"
-    q = (
-        stateful_sessions(stream, gap="30 minutes")
-        .writeStream.format("parquet")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    batch = {
-        (r.user_id, r["w.start"], r["w.end"], r.n_events)
-        for r in ev.groupBy(
-            "user_id", F.session_window("ts", "30 minutes").alias("w")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("w.start").alias("w.start"),
-                F.col("w.end").alias("w.end"), "n_events")
-        .collect()
-    }
-    # session_window's end = last_ts + gap; the custom operator records the
-    # LAST EVENT time as end — align by shifting batch ends back 30 min
-    import datetime
-
-    gap = datetime.timedelta(minutes=30)
-    batch = {(u, s, e - gap, n) for (u, s, e, n) in batch}
-
-    assert got <= batch
-    wm = ev.agg(F.max("ts")).first()[0]
-    provably_closed = {t for t in batch if t[2] + gap < wm}
-    assert provably_closed <= got
-    assert len(got) > 0
-
-
-def test_stateful_decayed_spend_matches_batch_exactly(spark, sf_dir, tmp_path):
-    """The streaming decayed counter converges to q145's batch answer
-    BIT-EXACTLY, regardless of how events split across micro-batches —
-    the scaled term is an integer, integer addition commutes."""
-    from feature_store_test_spark.data import load_table
-    from feature_store_test_spark.queries.analytics import (
-        _DECAY_ANCHOR,
-        _DECAY_W,
-        q145_decayed_spend,
-    )
-    from feature_store_test_spark.streaming.stateful import stateful_decayed_spend
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # split mid-month -> two micro-batches; a user's events straddle both
-    early = ev.where(F.col("ts") < "2024-01-15")
-    late = ev.where(F.col("ts") >= "2024-01-15")
-    early.coalesce(1).write.parquet(src + "/b1")
-    time.sleep(1.1)
-    late.coalesce(1).write.parquet(src + "/b2")
-
-    stream = stream_source(spark, src + "/*", ev.schema, max_files_per_trigger=1)
-    q = (
-        stateful_decayed_spend(stream, _DECAY_ANCHOR, _DECAY_W)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("decay_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    final = {}
-    for r in spark.table("decay_out").collect():
-        if r.user_id not in final or r.n_in_window > final[r.user_id][0]:
-            final[r.user_id] = (r.n_in_window, r.decayed_spend)
-    want = {
-        r.user_id: (r.n_in_window, r.decayed_spend)
-        for r in q145_decayed_spend(spark, sf_dir).collect()
-    }
-    assert final == want  # exact, including every double bit
-
-
-def test_stateful_decayed_spend_10x_shuffled_arrival_late_tail(
-    spark, sf_dir, tmp_path
-):
-    """Round-5 scale extension (VERDICT item): bit-exact batch-stream
-    parity on a 10x key-shifted replica, with micro-batches arriving OUT
-    of event-time order and a watermark-late tail (the earliest events
-    arrive LAST). The integer scaled terms commute, so the converged
-    state must equal q145's batch answer on the same replica exactly —
-    every double bit."""
-    from feature_store_test_spark.data import load_table
-    from feature_store_test_spark.queries.analytics import (
-        _DECAY_ANCHOR,
-        _DECAY_W,
-        q145_decayed_spend,
-    )
-    from feature_store_test_spark.streaming.stateful import stateful_decayed_spend
-
-    base = load_table(spark, "events", sf_dir)
-    offset = base.agg(F.max("user_id") + 1).collect()[0][0]
-    replica = base
-    for i in range(1, 10):
-        replica = replica.unionByName(
-            base.withColumn(
-                "user_id", F.col("user_id") + F.lit(i * offset).cast("long")
-            )
-        )
-    rep_dir = tmp_path / "rep10x"
-    replica.write.parquet(str(rep_dir / "events.parquet"))
-
-    ev = load_table(spark, "events", str(rep_dir)).select("user_id", "ts", "value")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # four arrival files in SHUFFLED event-time order; the EARLIEST slice
-    # lands last = a late tail far behind any watermark a time-based
-    # operator would carry
-    slices = [
-        ev.where(F.col("ts") >= "2024-01-22"),
-        ev.where((F.col("ts") >= "2024-01-08") & (F.col("ts") < "2024-01-15")),
-        ev.where((F.col("ts") >= "2024-01-15") & (F.col("ts") < "2024-01-22")),
-        ev.where(F.col("ts") < "2024-01-08"),  # late tail
-    ]
-    for i, sl in enumerate(slices):
-        sl.coalesce(1).write.parquet(f"{src}/b{i}")
-        time.sleep(1.1)  # file source orders micro-batches by mtime
-
-    stream = stream_source(spark, src + "/*", ev.schema, max_files_per_trigger=1)
-    q = (
-        stateful_decayed_spend(stream, _DECAY_ANCHOR, _DECAY_W)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("decay10x_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt10x"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    final = {}
-    for r in spark.table("decay10x_out").collect():
-        if r.user_id not in final or r.n_in_window > final[r.user_id][0]:
-            final[r.user_id] = (r.n_in_window, r.decayed_spend)
-    want = {
-        r.user_id: (r.n_in_window, r.decayed_spend)
-        for r in q145_decayed_spend(spark, str(rep_dir)).collect()
-    }
-    assert final == want  # exact at 10x, shuffled arrival, late tail

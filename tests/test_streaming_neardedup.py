@@ -6,6 +6,7 @@ keep-first. The crawl-ingest capability exact streaming dedup
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -94,3 +95,13 @@ def test_neardup_ingest_string_ids(spark, tmp_path):
     assert r2["s3://c"]["matched_id"] == "s3://a"
     assert b1.schema == b2.schema  # first-batch report must not fork
     assert sorted(r["uri"] for r in ing.corpus().collect()) == ["s3://a", "s3://b"]
+
+
+def test_neardedup_duplicate_ids_in_batch_raise(spark, tmp_path):
+    ing = NearDupIngest(spark, str(tmp_path / "nd"))
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (1, "alpha beta gamma delta epsilon")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match="duplicate ids"):
+        ing.process_batch(batch)
