@@ -266,33 +266,25 @@ def _hyperplane_coefs(n_planes: int, dim: int) -> list[list[float]]:
     ]
 
 
-def lsh_bucket(vec_col: str | Column, n_planes: int, dim: int) -> Column:
+def _sql_name(name: str) -> str:
+    """``name`` as a SQL identifier for one column: backtick-quoted, inner
+    backticks doubled, so a dot never resolves a struct field."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def lsh_bucket(vec_col: str, n_planes: int, dim: int) -> Column:
     """Random-hyperplane bucket id: one sign bit per plane, as a bit string.
 
     Cosine-LSH property: P(two vectors agree on a plane) = 1 - θ/π, so
     near-duplicate vectors land in the same bucket with high probability
     while the corpus spreads over 2^n_planes buckets.
+
+    ``vec_col`` names one column. The expression is one ``F.expr`` parse:
+    the Column-API loop analyzed n_planes nested fold trees per call
+    (~0.3s of q38's fn); the SQL form builds the same tree (repr
+    round-trips doubles exactly).
     """
-    # single-parse SQL form (round 11, the r6 fusion playbook): the
-    # Column-API loop eagerly analyzed n_planes nested fold trees per
-    # call (~0.3s of q38's fn); one F.expr parse builds the IDENTICAL
-    # expression tree (repr round-trips doubles exactly), execution
-    # unchanged.
-    v_sql = f"`{vec_col}`" if isinstance(vec_col, str) else None
-    if v_sql is None:
-        # Column input: keep the API form (no SQL name to splice)
-        v = vec_col
-        coefs = _hyperplane_coefs(n_planes, dim)
-        bits = []
-        for plane in coefs:
-            c = F.array(*[F.lit(x) for x in plane])
-            d = F.aggregate(
-                F.zip_with(v, c, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bits)
+    v_sql = _sql_name(vec_col)
     parts = []
     for plane in _hyperplane_coefs(n_planes, dim):
         arr = ", ".join(f"{float(x)!r}D" for x in plane)
@@ -320,9 +312,7 @@ def _grid_dirs(g: int, dim: int) -> list[list[float]]:
     return dirs
 
 
-def _grid_cells(
-    vec_col: str | Column, threshold: float, dim: int, g: int = 2
-) -> Column:
+def _grid_cells(vec_col: str, threshold: float, dim: int, g: int = 2) -> Column:
     """ε-grid cell vector (array<long> of ``g`` coordinates) of a
     vector's normalized projections onto pinned orthonormal directions —
     the COMPLETE sub-bucketing primitive for cosine-threshold pair
@@ -335,44 +325,33 @@ def _grid_cells(
     multiplies across coordinates and sharpens as t → 1 (ε shrinks):
     strong for SemDeDup-style t ≥ 0.9, weak for loose thresholds —
     which is why callers engage it cost-based, only where all-pairs
-    would go quadratic."""
+    would go quadratic.
+
+    ``vec_col`` names one column; one ``F.expr`` parse, as in
+    ``lsh_bucket``."""
     import math
 
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     # ε derives from (threshold − 5e-7), not the raw threshold: the
     # emitted filter is round(cos, 6) ≥ t, which admits true cosines down
     # to t − 5e-7, and grid coverage must include everything the filter
     # can admit or the output would depend on the oversize routing in
     # that half-ulp band (exact plan-split contract).
     eps = math.sqrt(max(2.0 * (1.0 - (threshold - 5e-7)), 1e-12))
-    if isinstance(vec_col, str):
-        # single-parse SQL form — same rationale as lsh_bucket (round 11)
-        v_sql = f"`{vec_col}`"
-        nrm_sql = (
-            f"sqrt(aggregate({v_sql}, 0D, (acc, x) -> acc"
-            " + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        cells_sql = []
-        for u in _grid_dirs(g, dim):
-            arr = ", ".join(f"{float(x)!r}D" for x in u)
-            proj = (
-                f"aggregate(zip_with({v_sql}, array({arr}), "
-                "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, x) -> acc + x)"
-                f" / {nrm_sql}"
-            )
-            cells_sql.append(f"CAST(floor(({proj}) / {eps!r}D) AS BIGINT)")
-        return F.expr("array(" + ", ".join(cells_sql) + ")")
-    nrm = l2_norm(v)
-    cells = []
+    v_sql = _sql_name(vec_col)
+    nrm_sql = (
+        f"sqrt(aggregate({v_sql}, 0D, (acc, x) -> acc"
+        " + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    )
+    cells_sql = []
     for u in _grid_dirs(g, dim):
-        c = F.array(*[F.lit(x) for x in u])
-        proj = F.aggregate(
-            F.zip_with(v, c, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ) / nrm
-        cells.append(F.floor(proj / F.lit(eps)).cast("long"))
-    return F.array(*cells)
+        arr = ", ".join(f"{float(x)!r}D" for x in u)
+        proj = (
+            f"aggregate(zip_with({v_sql}, array({arr}), "
+            "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, x) -> acc + x)"
+            f" / {nrm_sql}"
+        )
+        cells_sql.append(f"CAST(floor(({proj}) / {eps!r}D) AS BIGINT)")
+    return F.expr("array(" + ", ".join(cells_sql) + ")")
 
 
 def threshold_pairs_within_buckets(

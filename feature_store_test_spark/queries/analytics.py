@@ -382,6 +382,16 @@ def q100_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checks are independent — Spark runs their stages concurrently under one
 # action (the union).
 # ---------------------------------------------------------------------------
+def _q105_ck_hint(sf_dir: str) -> str:
+    """q105's orders⋈customer join hint: the in-job SHUFFLE_HASH below 8 MB
+    of orders, the customer broadcast above (see q105)."""
+    from feature_store_test_spark.data import _table_bytes
+
+    if _table_bytes(f"{sf_dir}/orders.parquet") < 8 * 1024 * 1024:
+        return "SHUFFLE_HASH(c)"
+    return "BROADCAST(c)"
+
+
 @register(
     "q105_referential_audit",
     oracle="""
@@ -447,14 +457,10 @@ def q105_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # therefore SIZE-GATED like the other cost-based plan splits: small
     # orders (floor-bound regime, < 8 MB) take the in-job SHJ, larger
     # corpora keep the dim broadcast — which is also the 100 TB plan.
-    from feature_store_test_spark.data import _table_bytes, register_temp_views
+    from feature_store_test_spark.data import register_temp_views
 
     register_temp_views(spark, sf_dir)
-    ck_hint = (
-        "SHUFFLE_HASH(c)"
-        if _table_bytes(f"{sf_dir}/orders.parquet") < 8 * 1024 * 1024
-        else "BROADCAST(c)"
-    )
+    ck_hint = _q105_ck_hint(sf_dir)
     return spark.sql(
         f"""
         WITH per_order AS (

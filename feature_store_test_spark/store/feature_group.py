@@ -149,33 +149,32 @@ class FeatureGroup:
             how="left_semi",
         )
 
-    def _key_slice_latest(self, key_value, strict_event_time: bool = False) -> DataFrame:
-        """Latest record for ONE key via the stats-pruned read path: the
-        table's per-file min/max skips every file whose key range excludes
-        the key, so after compact(cluster_by=[key]) a point read lists ~1
-        file instead of scanning the table. Latest-per-key over only this
-        key's rows is identical to filtering the full online view."""
-        hist = self.table.read(where=[(self.key_col, "=", key_value)])
-        return self._latest(hist, strict_event_time)
-
     def exists(self, key_value) -> bool:
-        return (
-            self.table.read(where=[(self.key_col, "=", key_value)])
-            .limit(1)
-            .count()
-            > 0
-        )
+        """Does the key have a stored record? The driver-side read of
+        ``get_latest``: no Spark job."""
+        return bool(self.table._point_read(self.key_col, key_value))
 
     def get_latest(self, key_value) -> dict | None:
-        """Point read of the latest record (get_latest_features :184-204).
+        """Point read of the latest record (get_latest_features :184-204),
+        equal to ``online_view().where(key == key_value)`` collected as a
+        dict, or None for an absent key.
 
-        Stats-pruned key-slice scan (see _key_slice_latest); at serving
-        scale the residual is cached / key-clustered (documented scope:
-        micro-batch freshness, like the reference outsourcing ms-latency
-        serving to AWS).
+        No Spark job: the commit log names each file and its key bounds, so
+        the key's rows are read in this process with pyarrow from the
+        stats-pruned files only (``table._point_read``). After
+        ``compact(cluster_by=[key])`` that is ~1 file; on unclustered
+        appends it is every commit's files, each pruned to the row groups
+        whose key range holds the key. The latest row is picked in Python
+        in parity order: max of (``_commit_version``, event time), a NULL
+        event time below any value, as Spark orders the struct.
         """
-        rows = self._key_slice_latest(key_value).collect()
-        return rows[0].asDict() if rows else None
+        rows = self.table._point_read(self.key_col, key_value)
+        if not rows:
+            return None
+        et = self.event_time_col
+        latest = max(rows, key=lambda r: (r["_commit_version"], r[et] is not None, r[et]))
+        del latest["_commit_version"]
+        return latest
 
     # -- upsert (the feature-store core) ------------------------------------
     def upsert(self, updates: DataFrame, value_col_map: dict[str, str]) -> int | None:

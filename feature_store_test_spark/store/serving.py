@@ -3,11 +3,12 @@
 Reference parity: ``get_latest_features``
 (/root/reference/core/feature_store_manager.py:184-204) answers a single-key
 read in milliseconds from a managed online store; the reference outsources
-that latency tier to AWS. ``FeatureGroup.get_latest`` is a stats-pruned
-Spark job — correct, but hundreds of milliseconds of scheduling floor per
-call. ``ServingSession`` closes the gap for request-path reads: ONE Spark
-job snapshots the online view, then every lookup is a local dict probe
-(microseconds, no job).
+that latency tier to AWS. ``FeatureGroup.get_latest`` runs no Spark job
+either, but reads the key's rows from every stats-candidate parquet file
+with pyarrow: tens of milliseconds per call on an unclustered history, and
+it grows with the number of commits. ``ServingSession`` serves the request
+path: ONE Spark job snapshots the online view, then every lookup is a
+local dict probe (microseconds, no IO).
 
 Scale design (100 TB): the snapshot is the ONLINE view — one row per key,
 never history — so its size is key cardinality, not event volume. Beyond

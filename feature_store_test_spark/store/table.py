@@ -64,16 +64,21 @@ import functools
 import json
 import math
 import os
+import re
 import tempfile
 import time
 import urllib.parse
 import uuid
 
 import numpy as np
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _LOG_DIR = "_commits"
 _DATA_DIR = "data"
@@ -126,7 +131,9 @@ def _partition_value(raw: str, dtype: T.DataType):
         return v == "true"
     if isinstance(dtype, T.TimestampType):
         return _dt.datetime.fromisoformat(v)
-    return v  # strings, and dates (the directory value is the isoformat)
+    if isinstance(dtype, T.DateType):
+        return _dt.date.fromisoformat(v)
+    return v
 
 
 def _footer_bounds(md: pq.FileMetaData, col: int):
@@ -154,6 +161,39 @@ def _naive(v):
     return v
 
 
+def _hive_values(path: str, data_dir: str, types: dict) -> dict:
+    """The ``col=value`` directories between ``data_dir`` and the file at
+    ``path``, typed by ``types`` (partition column -> Spark type)."""
+    out = {}
+    for part in os.path.relpath(path, data_dir).split(os.sep)[:-1]:
+        name, _, raw = part.partition("=")
+        name = urllib.parse.unquote(name)
+        if name in types:
+            out[name] = _partition_value(raw, types[name])
+    return out
+
+
+def _data_files(data_dir: str) -> list[str]:
+    """Absolute paths of the part files under ``data_dir``, sorted."""
+    root = os.path.abspath(data_dir)
+    return sorted(
+        os.path.join(d, n)
+        for d, _, names in os.walk(root)
+        for n in names
+        if not n.startswith(("_", "."))  # _SUCCESS, .crc: not data
+    )
+
+
+def _fs_path(path: str) -> str:
+    """A logged file path as a filesystem path: older logs hold Spark's
+    ``file:`` URIs, whose path part Hadoop takes literally (unescaped)."""
+    return re.sub(r"^file:(//[^/]*)?", "", path)
+
+
+# the data dir of an append commit: v<version>-<8 hex>, see _write_data
+_VERSION_DIR = r"/v(\d{10})-[0-9a-f]{8}/"
+
+
 def _file_entry(path: str, data_dir: str, stat_types: dict) -> dict | None:
     """The commit-log entry of one written part file (absolute ``path``
     under ``data_dir``): rows, bytes and min/max per ``stat_types`` column,
@@ -165,12 +205,8 @@ def _file_entry(path: str, data_dir: str, stat_types: dict) -> dict | None:
         return None
     leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
     bounds = {c: _footer_bounds(md, leaves[c]) for c in stat_types if c in leaves}
-    for part in os.path.relpath(path, data_dir).split(os.sep)[:-1]:
-        name, _, raw = part.partition("=")
-        name = urllib.parse.unquote(name)
-        if name in stat_types:
-            v = _partition_value(raw, stat_types[name])
-            bounds[name] = None if _is_nan(v) else (v, v)
+    for name, v in _hive_values(path, data_dir, stat_types).items():
+        bounds[name] = None if _is_nan(v) else (v, v)
     return {
         "path": path,
         "rows": md.num_rows,
@@ -330,13 +366,7 @@ class VersionedParquetTable:
             f.name: f.dataType for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)
         }
         root = os.path.abspath(data_dir)
-        paths = sorted(
-            os.path.join(d, n)
-            for d, _, names in os.walk(root)
-            for n in names
-            if not n.startswith(("_", "."))  # _SUCCESS, .crc: not data
-        )
-        files = [e for e in (_file_entry(p, root, stat_types) for p in paths) if e]
+        files = [e for e in (_file_entry(p, root, stat_types) for p in _data_files(root)) if e]
         return {
             "version": version,
             "data_dir": data_dir,
@@ -729,9 +759,7 @@ class VersionedParquetTable:
                 df = df.withColumn("_commit_version", F.lit(c["version"]).cast("int"))
             parts.append(df.select(*cols))
         if flat:
-            version = F.regexp_extract(
-                F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
-            ).cast("int")
+            version = F.regexp_extract(F.col("_metadata.file_path"), _VERSION_DIR, 1).cast("int")
             df = self.spark.read.schema(self.schema).parquet(*flat)
             parts.append(df.withColumn("_commit_version", version).select(*cols))
         if not parts:
@@ -765,6 +793,57 @@ class VersionedParquetTable:
             }[op]
             result = result.where(cond)
         return result
+
+    def _point_read(self, col: str, value) -> list[dict]:
+        """The rows of the latest snapshot where ``col == value``, each the
+        ``Row.asDict()`` that ``read(where=[(col, "=", value)]).collect()``
+        gives, ``_commit_version`` included — read in this process with
+        pyarrow, so no Spark job runs.
+
+        The files read are the stats candidates of every visible commit (a
+        commit that predates stats: its whole dir); inside them the filter
+        prunes row groups by their min/max. As in ``_scan``, a compaction's
+        files carry ``_commit_version`` and an append file's version is its
+        data-dir name. Hive partition columns come from the file's
+        ``col=value`` directories, and columns a file lacks (added later by
+        schema evolution) read as NULL. Values convert as ``collect()``
+        converts them (pyspark's Arrow-to-Row converter under the session's
+        ``binaryAsBytes``: naive local timestamps, Row structs).
+        """
+        if value is None:
+            return []  # col = NULL holds for no row
+        where = [(col, "=", value)]
+        parts = {f.name: f.dataType for f in self.schema.fields if f.name in self.partition_cols}
+        files = {}  # filesystem path -> its hive partition values
+        for c in self._visible_commits(None):
+            paths = self._candidate_files(c, where)
+            for p in _data_files(c["data_dir"]) if paths is None else map(_fs_path, paths):
+                files[p] = _hive_values(p, c["data_dir"], parts)
+        # Spark has NaN = NaN; a partition column is matched on its directory
+        nan, expr = _is_nan(value), None
+        if col in parts:
+            files = {p: h for p, h in files.items() if h[col] == value or nan and _is_nan(h[col])}
+        else:
+            expr = pc.is_nan(pc.field(col)) if nan else pc.field(col) == value
+        if not files:
+            return []
+        phys = T.StructType([f for f in self._compact_schema.fields if f.name not in parts])
+        got = ds.dataset(list(files), schema=to_arrow_schema(phys), format="parquet").to_table(
+            columns=[*phys.fieldNames(), "__filename"], filter=expr
+        )
+        as_bytes = self.spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")
+        rows = ArrowTableToRowsConversion.convert(
+            got.drop_columns("__filename"), phys, return_as_tuples=True,
+            binary_as_bytes=as_bytes.lower() == "true",
+        )
+        cols = [*self.schema.fieldNames(), "_commit_version"]
+        out = []
+        for values, path in zip(rows, got["__filename"].to_pylist()):
+            r = {**dict(zip(phys.fieldNames(), values)), **files[path]}
+            if r["_commit_version"] is None:
+                r["_commit_version"] = int(re.search(_VERSION_DIR, path).group(1))
+            out.append({c: r[c] for c in cols})
+        return out
 
     def changes(
         self, since_version: int, until_version: int | None = None

@@ -3,8 +3,8 @@
 Parity target: the reference's get_latest_features
 (/root/reference/core/feature_store_manager.py:184-204) — single-key reads
 answered from an online store in milliseconds. The session must agree
-exactly with FeatureGroup.get_latest (the Spark-job point read) and answer
-lookups orders of magnitude under the Spark job floor.
+exactly with FeatureGroup.get_latest (the driver-side read of the key's
+files) and answer each lookup from its snapshot, with no file IO.
 """
 
 from __future__ import annotations

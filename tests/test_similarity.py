@@ -21,6 +21,33 @@ def test_lsh_bucket_deterministic(spark, sf_dir):
     assert 2 <= n_buckets <= 16  # 4 planes → at most 16 buckets, spread out
 
 
+def test_bucket_and_grid_read_a_name_holding_a_dot_and_a_backtick(spark, sf_dir):
+    """A column named ``d.emb`x`` is one column, not a struct field, and
+    its buckets and grid cells equal those of the same vectors under a
+    plain name; a struct ``d`` with field ``emb`x`` beside it is not read."""
+    from feature_store_test_spark.operators.similarity import _grid_cells
+
+    odd = "d.emb`x"
+    emb = load_table(spark, "embeddings", sf_dir).select(
+        "vec_id",
+        "embedding",
+        F.col("embedding").alias(odd),
+        F.struct(F.array(F.lit(-1.0)).alias("emb`x")).alias("d"),
+    )
+
+    def out(name):
+        df = emb.select(
+            "vec_id",
+            lsh_bucket(name, 4, 64).alias("b"),
+            _grid_cells(name, 0.9, 64).alias("c"),
+        )
+        return sorted((r.vec_id, r.b, tuple(r.c)) for r in df.collect())
+
+    plain = out("embedding")
+    assert len(plain) > 0 and len({b for _, b, _ in plain}) > 1
+    assert out(odd) == plain
+
+
 def test_lsh_ann_is_bucket_restricted_exact(spark, sf_dir):
     """Within a bucket, the LSH result must equal brute force restricted to
     that bucket — approximation comes only from bucket pruning."""

@@ -646,26 +646,27 @@ def test_footer_stats_equal_a_scan_of_the_written_files(spark, tmp_path, case):
         assert json.dumps(got["stats"]) == json.dumps(want_stats)
 
 
+def _jobs(spark, group, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_append_reads_nothing_back(spark, tmp_path):
     """An append runs exactly the jobs of a plain parquet write of the same
     frame: its file stats come from the footers, not from a scan."""
-    sc = spark.sparkContext
     df = spark.createDataFrame(
         [(j, j / 7.0, ts(1 + j % 27)) for j in range(300)], KV_SCHEMA
     ).repartition(3)
     t = VersionedParquetTable(spark, str(tmp_path / "t"), KV_SCHEMA)
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    plain = jobs("plain-parquet-write", lambda: df.write.parquet(str(tmp_path / "plain")))
-    appended = jobs("versioned-append", lambda: t.append(df))
+    plain = _jobs(spark, "plain-parquet-write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    appended = _jobs(spark, "versioned-append", lambda: t.append(df))
     assert appended == plain >= 1
     assert t.read().count() == 300
 
@@ -792,6 +793,194 @@ def test_point_read_uses_pruned_path_after_clustering(spark, tmp_path):
     rec = fg.get_latest(2)
     assert rec["latest_purchase_value"] == 20.0
     assert fg.exists(2) and not fg.exists(99)
+
+
+_PR_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("et", T.TimestampType()),
+        T.StructField("v", T.DoubleType()),
+        T.StructField("region", T.StringType()),
+        T.StructField("day", T.DateType()),
+        T.StructField("n", T.IntegerType()),
+        T.StructField("blob", T.BinaryType()),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField(
+            "info",
+            T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]),
+        ),
+    ]
+)
+
+
+def _pr_rows(i):
+    """Commit ``i``: 25 keys overlapping the previous commit's, NaN and NULL
+    values, NULL event times, a NULL and an escaped region, and one key with
+    a second row whose event time is NULL, so (version, event time) stays
+    unique per key while NULL must rank below a value."""
+    rows = [
+        (
+            k,
+            None if k % 13 == 0 else dt.datetime(2024, 1, 1 + (k + i) % 20, k % 24),
+            float("nan") if k % 7 == 0 else None if k % 11 == 0 else k + i / 10,
+            [None, "a b/c:d", "x"][k % 3],
+            dt.date(2024, 2, 1 + k % 2),
+            i,
+            bytes([k % 256, i]),
+            [str(k)] if k % 5 else None,
+            (k, None if k % 4 else "s"),
+        )
+        for k in range(i * 10, i * 10 + 25)
+    ]
+    k = i * 10 + 5
+    rows.append((k, None, -1.0, "x", dt.date(2024, 2, 3), -i, None, [], None))
+    if i == 0:
+        rows.append((None, ts(1), 0.0, "x", dt.date(2024, 2, 1), 0, None, None, None))
+    return rows
+
+
+def _pr_frame(spark, i, extra=None):
+    df = spark.createDataFrame(_pr_rows(i), _PR_SCHEMA).repartition(2)
+    return df.withColumn(extra, F.col("k") / 3.0) if extra else df
+
+
+def _pr_append(spark, fg, *commits):
+    for i in commits:
+        fg.ingest(_pr_frame(spark, i))
+
+
+def _pr_flat(spark, fg):
+    _pr_append(spark, fg, 0, 1, 2)
+
+
+def _pr_compacted(spark, fg):
+    _pr_append(spark, fg, 0, 1)
+    fg.table.compact()
+    _pr_append(spark, fg, 2)
+
+
+def _pr_clustered(spark, fg):
+    _pr_append(spark, fg, 0, 1)
+    fg.table.compact(cluster_by=["k"], n_files=3)
+    _pr_append(spark, fg, 2)
+
+
+def _pr_deleted(spark, fg):
+    _pr_append(spark, fg, 0, 1)
+    fg.table.delete("k % 3 = 0")
+    _pr_append(spark, fg, 2)
+
+
+def _pr_restored(spark, fg):
+    _pr_append(spark, fg, 0, 1, 2)
+    fg.table.restore(2)
+    _pr_append(spark, fg, 3)
+
+
+def _pr_evolved(spark, fg):
+    _pr_append(spark, fg, 0)
+    for i in (1, 2):  # commit 2 carries the new column, commit 3 lacks it
+        fg.table.append(_pr_frame(spark, i, extra="score" if i == 1 else None), merge_schema=True)
+    assert fg.table.schema.fieldNames()[-1] == "score"
+
+
+def _pr_pre_stats(spark, fg):
+    _pr_append(spark, fg, 0, 1, 2)
+    commit = fg.table.commits()[1]
+    del commit["files"]
+    fg.table._rewrite_commit(commit)
+
+
+def _pr_file_uris(spark, fg):
+    _pr_clustered(spark, fg)
+    for c in fg.table.commits():
+        for f in c["files"]:
+            f["path"] = "file:" + f["path"]
+        fg.table._rewrite_commit(c)
+
+
+_PR_CASES = {
+    # name: (build, partition_cols, root)
+    "flat": (_pr_flat, None, "t"),
+    "hive": (_pr_flat, ["region", "day"], "t"),
+    "compacted": (_pr_compacted, None, "t"),
+    "clustered": (_pr_clustered, None, "t"),
+    "hive_clustered": (_pr_clustered, ["region"], "t"),
+    "hive_key": (_pr_flat, ["k"], "t"),
+    "deleted": (_pr_deleted, None, "t"),
+    "restored": (_pr_restored, ["region"], "t"),
+    "evolved": (_pr_evolved, None, "t"),
+    "pre_stats": (_pr_pre_stats, ["region", "day"], "t"),
+    "file_uris": (_pr_file_uris, None, "t"),
+    "escaped_root": (_pr_compacted, ["region"], "a b%20c"),
+}
+
+
+def _same_record(got, want) -> bool:
+    """Equal key for key in the same order, value for value with NaN equal
+    to NaN, and each value of the same Python type."""
+    if got is None or want is None:
+        return got is want
+    return list(got) == list(want) and all(
+        type(g) is type(w) and (g == w or g != g and w != w)
+        for g, w in zip(got.values(), want.values())
+    )
+
+
+@pytest.mark.parametrize("case", list(_PR_CASES))
+def test_point_reads_equal_the_online_view(spark, tmp_path, case):
+    """``get_latest(k)`` equals the online view's row for ``k`` as a dict,
+    type for type, and ``exists(k)`` whether the snapshot holds a row for
+    ``k``, for every stored key and an absent one, on every commit layout
+    the driver-side read meets."""
+    build, partition_cols, root = _PR_CASES[case]
+    fg = FeatureStore(spark, str(tmp_path / root)).create(
+        "fg", _PR_SCHEMA, "k", "et", partition_cols=partition_cols
+    )
+    build(spark, fg)
+    view = {r.k: r.asDict() for r in fg.online_view().collect()}
+    stored = {r.k for r in fg.table.read().select("k").collect()}
+    keys = sorted(k for k in view if k is not None)
+    assert len(keys) >= 30
+    # the view covers the value cases the read must reproduce
+    assert any(r["et"] is None for r in view.values())
+    assert any(r["v"] is None for r in view.values())
+    assert any(r["v"] != r["v"] for r in view.values())
+    for k in [*keys, 999]:
+        got, want = fg.get_latest(k), view.get(k)
+        assert _same_record(got, want), (k, got, want)
+        assert fg.exists(k) == (k in stored)
+    assert 999 not in stored
+    assert fg.get_latest(None) is None and not fg.exists(None)
+
+
+@pytest.mark.parametrize("partition_cols", [None, ["k"]], ids=["flat", "hive_key"])
+def test_point_read_of_a_nan_key(spark, tmp_path, partition_cols):
+    """Spark has NaN = NaN, so a NaN key is a stored key like any other,
+    also when the key is the partition column."""
+    schema = T.StructType([T.StructField("k", T.DoubleType()), T.StructField("et", T.TimestampType())])
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et", partition_cols)
+    fg.ingest(spark.createDataFrame([(float("nan"), ts(1)), (1.5, ts(1))], schema))
+    fg.ingest(spark.createDataFrame([(float("nan"), ts(2))], schema))
+    view = {repr(r.k): r.asDict() for r in fg.online_view().collect()}
+    assert view["nan"]["et"] == ts(2)
+    for k in (float("nan"), 1.5):
+        got = fg.get_latest(k)
+        assert _same_record(got, view[repr(k)]) and fg.exists(k)
+    assert fg.get_latest(2.5) is None and not fg.exists(2.5)
+
+
+def test_point_reads_run_no_spark_job(spark, tmp_path):
+    """``get_latest`` and ``exists`` read in the driver: zero Spark jobs,
+    while the same group's online view runs at least one."""
+    fg = make_fg(spark, tmp_path)
+    fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
+    fg.ingest(spark.createDataFrame([row(1, 2, 20.0, 15.0, 6.0, 7.0)], FG_SCHEMA))
+    assert _jobs(spark, "point-read-get-latest", lambda: fg.get_latest(1)) == 0
+    assert _jobs(spark, "point-read-exists", lambda: fg.exists(1)) == 0
+    assert _jobs(spark, "point-read-absent", lambda: fg.get_latest(2)) == 0
+    assert _jobs(spark, "point-read-online-view", lambda: fg.online_view().collect()) >= 1
+    assert fg.get_latest(1)["latest_purchase_value"] == 20.0
 
 
 def test_schema_evolution_widens_and_backfills_null(spark, tmp_path):
