@@ -4,10 +4,11 @@ Prints ONE compact JSON line (kept well under the driver's stdout tail
 capture — round 1 lost the parsed result to truncation):
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "duckdb_total_sec": N,
-     "scale10x": {...}, "throughput": {...}, "sf": <sf>}
+     "scale10x": {...}, "sf": <sf>}
 
-Per-query DuckDB timings and the full 10x-scale per-query breakdown go to
-BENCH_SELF.json next to this file instead of stdout.
+Per-query DuckDB timings, job counts, plan construction and the full
+10x-scale per-query breakdown go to BENCH_SELF.json next to this file
+instead of stdout.
 
 The scale10x block is the number that matters for the 100 TB story: at
 sf0.1 most headline queries sit on Spark's ~0.2-0.3s per-job floor, so
@@ -15,21 +16,19 @@ same-SF ratios vs an embedded single-node engine measure fixed overhead,
 not plan quality. The 10x point (scaleprobe replica, ~6M-row lineitem)
 amortizes the floor and shows how both engines' totals actually grow.
 
-TIMING PROTOCOL (round 8): Spark and DuckDB are timed INTERLEAVED, per
-query — within each query's min-of-N window the two engines' runs
-alternate, so both sample the same host conditions (this VM's hypervisor
-steal moves absolute totals ~40% within a day; separate whole-engine
-passes let that drift land on one engine's total only, and the gate
-ratio inherited it). Two full passes are min-merged per query per engine.
+Every Spark number comes from ``harness.run_query`` (the protocol sweep,
+scaleprobe and plans share): per query, one timed plan construction
+(``plan_construction_sec``), the min of 2 executions of the prepared
+physical plan (``queries``; a plan that binds caches is rebuilt in each
+timed run) and the jobs of the first execution (``job_counts``).
 
-Each query executes fully, every partition drained (no driver-side collect
-cost for large result sets). Timed runs use PREPARED-PLAN semantics: the
-first run pays eager plan construction (fn()), later runs re-execute the
-same prepared physical plan via a fresh clone() per run (see
-execute_prepared — data still reads cold and re-shuffles every run,
-REST-validated; only Catalyst re-optimization of the unchanged tree is
-shed). The per-run construction cost an unprepared client would pay is
-reported separately, per query, in plan_construction_sec.
+TIMING PROTOCOL: Spark and DuckDB are timed INTERLEAVED, per query — each
+query's DuckDB min-of-2 runs right after its run_query, so both engines
+sample the same host conditions (this VM's hypervisor steal moves absolute
+totals ~40% within a day; whole-engine passes minutes apart let that drift
+land on one engine's total only). Two full passes are min-merged per query
+per engine: a load spike hits a contiguous block of queries in one pass,
+and the second pass samples a different time window.
 
 Skip the 10x block with SPARK_GRAFT_BENCH_SCALE=0 (e.g. quick local loops).
 """
@@ -38,177 +37,75 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
-HEADLINE = [
-    "q01_pricing_summary",       # scan + 6-group agg over lineitem
-    "q05_local_supplier_volume", # 6-table join
-    "q08_latest_event_per_user", # ranking window (online-view primitive)
-    "q09_running_total",         # frame window over orders
-    "q15_asof_join",             # merge-scan as-of join
-    "q16_engineer_features",     # feature-engineering agg
-    "q18_incremental_avg",       # window + weighted fold
-    "q21_minhash_near_dups",     # MinHash+LSH dedup pipeline
-    "q26_token_counts",          # regexp text analysis
-    "q28_cosine_topk",           # brute-force ANN
-    "q34_tumbling_windows",      # event-time windowed agg
-    "q40_sessionize",            # gap sessionization
-    "q41_salted_agg",            # skew-bounded two-stage agg
-    "q42_sql_shipping_priority", # pure-SQL 3-table join + topk
-    "q76_large_orders",          # IN-over-HAVING semi join (TPC-H Q18 shape)
-    "q78_lonely_late_supplier",  # EXISTS + NOT EXISTS self-joins (TPC-H Q21 shape)
-    "q81_sequence_packing",      # running-sum context packing
-    "q82_activity_window_join",  # binned interval join
-    "q87_token_budget_sample",   # hash-ordered token-budget sampling
-    "q88_media_features",        # stub media encoder (Arrow binary->array path)
-    "q89_funnel_stages",         # sequence-pattern funnel analytics
-    "q97_price_histogram",       # single partial-agg equi-width histogram
-    "q100_event_transitions",    # per-user lag window -> transition matrix
-    "q101_distinctive_terms",    # explode + tf/df broadcast join + window
-    "q102_decontamination",      # 8-gram overlap vs broadcast eval set
-    "q105_referential_audit",    # 4-way broadcast anti-join sweep
-    "q106_spend_rank_profile",   # rank-family windows over join+agg
-    "q109_group_topk_share",     # per-group top-k + share (one shuffle)
-    "q110_incremental_dedup",    # batch-vs-corpus fingerprint anti join
-    "q111_minhash_estimate_quality",  # sketch audit: est vs exact Jaccard
-]
-
-# (shuffle_partitions, maxPartitionBytes, aqe, openCostInBytes, prefer_smj)
-# — module-level so plans.py captures plans under the EXACT profile the
-# headline numbers measure (r8 verdict: PLANS.md showed q42's SMJ while
-# the bench's SHJ preference was precisely what changed that plan).
-# Round 11 (r10 verdict item 2): the base profile's shuffle-partition
-# count derives from the GRANTED cores ($SPARK_GRAFT_CPUS via
-# session.default_parallelism) instead of a flat 4, so a low-core driver
-# probe actually runs narrower plans — min(cpus, 4) keeps every c>=4
-# number identical to the r5-r10 measured optimum (4 partitions at
-# sf0.1: post-shuffle stages hold ~KBs per partition, fatter tasks shed
-# pure per-task floor). The cores-SENSITIVITY signal lives at the 10x
-# point (scale10x.queries below), where parallelism exists; at sf0.1 the
-# single-row-group fixtures cap scans at one task regardless of cores.
-from feature_store_test_spark.session import default_parallelism as _dp  # noqa: E402
-
-BASE_PROFILE = (min(_dp(), 4), 32 * 1024 * 1024, False, 2 * 1024 * 1024, False)
-SCALE_PROFILE = (32, 4 * 1024 * 1024, True, 512 * 1024, True)
-
-# Exact-version allowlist for the clone() pure-execution body (r8 ADVICE:
-# exact pin, not a prefix; r9 ADVICE: ONE copy — ab.py imports this).
-# clone()'s rebuild-shuffles-from-scratch behavior is REST-validated on
-# these builds only; any other build falls back to the noop-save body.
-CLONE_VALIDATED_VERSIONS = ("4.1.2",)
+from feature_store_test_spark.harness import (
+    BASE_PROFILE,
+    HEADLINE,
+    SCALE_PROFILE,
+    WARM_SF_DIR,
+    execute_prepared,
+    harness_session,
+    run_query,
+    set_profile,
+)
+from feature_store_test_spark.oracle import duckdb_connection
+from feature_store_test_spark.registry import all_queries
 
 
-def set_profile(spark, profile) -> None:
-    sh, split_bytes, aqe, open_cost, prefer_smj = profile
-    spark.conf.set("spark.sql.shuffle.partitions", str(sh))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
-    spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
-    spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-    spark.conf.set(
-        "spark.sql.join.preferSortMergeJoin", str(prefer_smj).lower()
-    )
+def settle(spark) -> None:
+    """Collect earlier garbage NOW instead of inside the next timed query
+    (q01 absorbed multi-second GC debt from 30 warmup plans)."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(2.0)
 
 
-def profile_desc(profile) -> str:
-    """Human-readable profile summary for generated artifacts (PLANS.md
-    header, SCALE_SWEEP protocol string) — derived from the tuple so the
-    prose can never drift from the values (code-review r9)."""
-    sh, split_bytes, aqe, _open_cost, prefer_smj = profile
-    return (
-        f"{sh} shuffle partitions / {split_bytes // (1024 * 1024)}MB splits"
-        f" / AQE {'on' if aqe else 'off'}"
-        f" / {'SMJ default' if prefer_smj else 'SHJ preferred'}"
-    )
+def measure_pass(spark, specs, data_dir: str) -> tuple[dict, dict]:
+    """One interleaved pass: per headline query, run_query then DuckDB's
+    min-of-2 over the query's oracle SQL on the same parquet.
+
+    DuckDB runs the raw SQL each time and so re-pays parse+bind per run
+    (sub-ms; Spark's analysis is reported separately as construction).
+    PREPARE/EXECUTE was tried and reverted: re-EXECUTING q82's oracle on
+    this DuckDB build trips an internal error that FATALs the connection.
+    """
+    con = duckdb_connection(data_dir)
+    spark_out: dict[str, dict] = {}
+    duck_out: dict[str, float] = {}
+    for name in HEADLINE:
+        spark_out[name] = run_query(spark, specs[name], data_dir)
+        sql = specs[name].oracle
+        if sql is not None:
+            runs = []
+            for _ in range(2):
+                t0 = time.perf_counter()
+                con.execute(sql).fetchall()
+                runs.append(time.perf_counter() - t0)
+            duck_out[name] = min(runs)
+    con.close()
+    return spark_out, duck_out
+
+
+def measure(spark, specs, data_dir: str) -> tuple[dict, dict]:
+    """Two passes, min-merged per query per engine."""
+    s1, d1 = measure_pass(spark, specs, data_dir)
+    s2, d2 = measure_pass(spark, specs, data_dir)
+    spark_out = {
+        n: {
+            "construct_s": min(s1[n]["construct_s"], s2[n]["construct_s"]),
+            "exec_s": min(s1[n]["exec_s"], s2[n]["exec_s"]),
+            "jobs": s1[n]["jobs"],
+        }
+        for n in s1
+    }
+    return spark_out, {n: min(d1[n], d2[n]) for n in d1}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from feature_store_test_spark.registry import (
-        all_queries,
-        live_cache_count,
-        persistent_rdd_ids,
-        release_caches,
-        release_new_rdds,
-    )
-    from feature_store_test_spark.session import get_spark
-
-    # Local-bench scan parallelism: the sf0.1 files are ~1-10 MB, so the
-    # 128 MB default split yields 1-3 scan partitions on a 32-thread local
-    # master. Small splits spread the scan; a real cluster at 100 TB keeps
-    # the default (128 MB splits ≈ one task per HDFS/S3 block).
-    spark = get_spark(
-        app_name="fsts-bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "16m",
-            "spark.sql.files.openCostInBytes": "512k",
-            # Single-node bench protocol (round 5, each A/B-measured ~-0.3
-            # to -0.9s over the 30-query set on a quiet box):
-            # - shuffle/broadcast lz4 OFF: compression trades CPU for
-            #   network, and local[32] has no network — on a real cluster
-            #   keep the defaults ON.
-            "spark.shuffle.compress": "false",
-            "spark.shuffle.spill.compress": "false",
-            "spark.broadcast.compress": "false",
-            "spark.rdd.compress": "false",
-            # - everything is PROCESS_LOCAL in one JVM; never wait for
-            #   locality tiers.
-            "spark.locality.wait": "0ms",
-            # - throughput GC: G1's concurrent machinery costs more than it
-            #   saves on 2-second queries; Parallel scavenge wins ~0.9s
-            #   across the set. Cluster executors with 10s+ tasks keep G1.
-            "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-            # - plan-construction floor: constraint propagation is O(n^2)
-            #   in expression count and only derives isNotNull/filter
-            #   inferences these NOT NULL parquet fixtures never need; DPP
-            #   searches for partition-pruning subqueries but no table here
-            #   is partitioned. Both stay ON in the default session.
-            "spark.sql.constraintPropagation.enabled": "false",
-            "spark.sql.optimizer.dynamicPartitionPruning.enabled": "false",
-        },
-    )
-
-    # Partition counts AND runtime re-planning sized to the DATA, the same
-    # discipline a 100 TB deployment applies in the opposite direction
-    # (brief: size shuffle.partitions/maxPartitionBytes to the target SF).
-    # At sf0.1 a post-shuffle stage holds ~KBs per partition, so 32
-    # shuffle partitions mean 32 near-empty tasks per stage and the
-    # per-task floor (~4 ms here) dominates — see BASE_PROFILE below
-    # for the measured optimum. AQE is OFF at the toy profile: adaptive
-    # execution submits one scheduler job per query STAGE (so its runtime
-    # stats can re-plan the next stage), and with ~60 ms per-job latency
-    # in this VM that tripled the job count (286 vs 134 over the headline
-    # set) for stats that are trivially tiny — measured ~1s over the set.
-    # The 10x replica keeps AQE ON with the wider layout (32 partitions,
-    # 4 MB splits): there runtime coalescing/skew handling is the point,
-    # which is exactly the 100 TB configuration story.
-    # Base profile prefers shuffle-hash over sort-merge (round 8): at
-    # sf0.1 every equi-join side fits its partition in memory, so SMJ's
-    # two sorts are pure cost. Round-9 correction: the r8 claim that this
-    # conf changes q42's plan was wrong — q42's SHUFFLE_HASH hint had
-    # been consumed by a nearer join (fixed at the query; the hint now
-    # forces SHJ regardless of this conf), so the preference currently
-    # changes NO headline plan; it stays as the declared strategy for
-    # any future non-hinted equi-join at this profile. The scale profile
-    # keeps the SMJ default: SHJ's per-partition build must fit executor
-    # memory, which a 100 TB fact-fact join does not guarantee — there
-    # AQE + sort-merge is the safe plan.
-    # Round-5 A/B over the whole headline set (min-merged of 2 full runs
-    # each, quiet box): shuffle partitions 8 -> 4 and openCostInBytes
-    # 512k -> 2m are each worth ~0.3s and compose (-0.44s total vs the
-    # 8/512k control; 4m open-cost and 2 partitions both over-shoot).
-    # Both follow the same size-to-the-data discipline: at sf0.1 a
-    # post-shuffle stage holds ~KBs per partition, so fewer+fatter tasks
-    # shed pure per-task floor; the scale profile keeps narrow splits.
-    # Round-9 re-litigation under the pure-execution protocol: global 8
-    # partitions re-measured — wins on the fact joins (q78/q42/q105
-    # ~−0.04 each) cancel against losses on the window/text set
-    # (q21/q111/q88/q89); 4 stays.
-    def _set_profile(*profile) -> None:
-        set_profile(spark, profile)
-
-    _set_profile(*BASE_PROFILE)
+    spark = harness_session("fsts-bench")
+    set_profile(spark, BASE_PROFILE)
     specs = all_queries()
 
     # build (or reuse) the 10x replica BEFORE any timing so its write jobs
@@ -220,571 +117,99 @@ def main() -> None:
 
         scale_dir = ensure_replica(spark)
 
-    # The clone() pure-execution body below depends on a private Catalyst
-    # property — that a cloned physical plan rebuilds its shuffle
-    # dependencies and broadcast futures from scratch — which is
-    # REST-validated on THIS Spark build only (r7 ADVICE: version-pin it).
-    # On any other build, fall back to the noop-save body, which is honest
-    # by construction (a fresh QueryExecution per run) at the cost of
-    # re-paying Catalyst re-optimization inside the timed window.
-    import pyspark
-
-    clone_validated = pyspark.__version__ in CLONE_VALIDATED_VERSIONS
-
-    def execute_prepared(df) -> None:
-        # PURE-EXECUTION body (round 7): clone the memoized physical plan
-        # and run it to exhaustion. Each clone() is a fresh tree whose
-        # lazy shuffle dependencies and broadcast futures rebuild from
-        # scratch — VALIDATED via the UI REST API: consecutive runs each
-        # re-read the parquet input and re-write the full shuffle output
-        # (q78: 22.7 MiB shuffle written on run 1 AND run 2; the
-        # un-cloned executedPlan().execute() form instead reused map
-        # outputs — 0 B on run 2 — and is exactly the cheat this guards
-        # against). What the clone SHEDS is Catalyst re-OPTIMIZATION of
-        # the same unchanged tree, which the previous noop-save body paid
-        # inside every timed window (a new QueryExecution per save; ~50ms
-        # on the big TPC-H trees) — that cost is construction, reported
-        # separately in plan_construction_sec, and a prepared statement
-        # does not re-plan per execution in any engine. DuckDB's loop
-        # still re-parses its SQL each run; that asymmetry now runs in
-        # DuckDB's favor and stays documented. count() forces every
-        # partition of the result through the same row pipeline the noop
-        # sink drained.
-        #
-        # AQE CAVEAT (REST-validated the same way): AdaptiveSparkPlanExec
-        # clones share the query's AdaptiveExecutionContext, whose stage
-        # cache REUSES materialized shuffle stages across clones (run 2
-        # shuffle-write = 0 B) — so under the AQE scale profile this body
-        # would cheat. There the noop-save path runs instead: at 10x the
-        # queries are seconds long, re-optimization is noise, and AQE's
-        # per-stage runtime replanning is genuinely part of execution.
-        if (
-            not clone_validated
-            or spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        ):
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df._jdf.queryExecution().executedPlan().clone().execute().count()
-
-    # warm each query's JVM/codegen path once on the smallest SF so measured
-    # times reflect steady-state execution, not first-call JIT noise (cold
-    # first runs measured 3-8x slower than warm on identical plans) — via
-    # the SAME body the timed runs use, so the clone/count path is what
-    # gets JIT-warmed
+    # warm both execution bodies: the AQE scale profile times the
+    # noop-save body, run_query drains the clone() body at the base
+    # profile (and releases the caches of both)
     for name in HEADLINE:
-        wdf = specs[name].fn(spark, "/root/testdata/sf0.001")
-        execute_prepared(wdf)
-        # ALSO warm the noop-save body: the AQE scale profile (and the
-        # non-validated-version fallback) times THAT path, and the
-        # clone/count warmup above leaves its write machinery JIT-cold
-        # (r7 ADVICE)
-        wdf.write.format("noop").mode("overwrite").save()
+        specs[name].fn(spark, WARM_SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        run_query(spark, specs[name], WARM_SF_DIR, runs=1)
+    settle(spark)
 
-    # drop warmup-run caches, then isolate each timed query: clearing the
-    # cache between queries keeps one operator's cached intermediates from
-    # evicting (and re-deriving) another's mid-measurement — each query's
-    # time includes building exactly its own caches, nothing else's.
-    # Each query is measured as the MIN of two cold runs: single-shot
-    # timings on a shared 32-thread JVM occasionally absorb a multi-second
-    # GC pause from the preceding 20 queries' garbage (observed 0.6s
-    # queries reading 4s+); min-of-two keeps the cold protocol while
-    # shedding one-off pauses.
-    # settle before timing: collect the warmup loop's garbage NOW instead
-    # of inside the first timed query (q01 was absorbing multi-second GC
-    # debt from 30 warmup plans)
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(2.0)
-    baseline_rdds = persistent_rdd_ids(spark)
+    spark_x1, duck_x1 = measure(spark, specs, sf_dir)
+    timings = {n: round(r["exec_s"], 3) for n, r in spark_x1.items()}
+    duck_timings = {n: round(t, 3) for n, t in duck_x1.items()}
+    job_counts = {n: r["jobs"] for n, r in spark_x1.items()}
+    construct = {n: round(r["construct_s"], 4) for n, r in spark_x1.items()}
 
-    from feature_store_test_spark.oracle import duckdb_connection
-
-    def time_pair(
-        data_dir: str, n_runs: int = 2
-    ) -> tuple[dict[str, float], dict[str, float]]:
-        # INTERLEAVED two-engine timing (round 8, the r7 verdict's item 2):
-        # for each query, Spark and DuckDB runs ALTERNATE inside the same
-        # min-of-N window, so both engines sample the same host conditions.
-        # The previous protocol timed all DuckDB queries in a separate
-        # whole pass — on a VM whose hypervisor steal moved absolute
-        # totals ~40% within a day, that let drift land on one engine's
-        # total only, and the gate ratio inherited it (r7: DuckDB +35% vs
-        # r6 on near-identical SQL). Interleaving cancels the drift in
-        # BOTH directions; min-of-N per engine per query is unchanged.
-        #
-        # Spark side is the PREPARED-PLAN protocol (round 5, the judge's
-        # own suggestion; tightened round 7 to pure execution — see
-        # execute_prepared): the first run constructs the query (fn() —
-        # eager JVM analysis of the whole tree, the cost reported
-        # per-query in plan_construction_sec); later runs re-execute the
-        # SAME prepared plan, which is exactly what a production pipeline
-        # (or any engine's prepared statement) does — data is still read
-        # cold from parquet every run. Queries that persist intermediates
-        # inside fn() are rebuilt every run instead: releasing their
-        # caches between runs severs the plan's cache binding, so reuse
-        # would silently change THEIR plan semantics.
-        #
-        # DuckDB side runs the query's oracle SQL raw each run (same
-        # min-of-N). KNOWN RESIDUAL ASYMMETRY (r5 ADVICE, resolved by
-        # documentation): DuckDB re-pays parse+bind per run (sub-ms;
-        # Spark's analysis cost is reported separately as
-        # plan_construction_sec). The PREPARE/EXECUTE symmetric form was
-        # tried and REVERTED: on this DuckDB build, re-EXECUTING one
-        # headline oracle (q82) trips an internal error ("Attempted to
-        # access index N within vector") that FATALs the connection for
-        # every later statement — raw SQL in the loop is the robust
-        # protocol, and the bias it keeps is orders of magnitude below
-        # the per-query floor being measured.
-        con = duckdb_connection(data_dir)
-        s_out: dict[str, float] = {}
-        d_out: dict[str, float] = {}
-        for name in HEADLINE:
-            sql = specs[name].oracle
-            s_runs: list[float] = []
-            d_runs: list[float] = []
-            df = None
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                if df is None:
-                    df = specs[name].fn(spark, data_dir)
-                execute_prepared(df)
-                s_runs.append(time.perf_counter() - t0)
-                if live_cache_count() or persistent_rdd_ids(spark) - baseline_rdds:
-                    df = None  # plan binds caches the harness releases
-                spark.catalog.clearCache()
-                release_caches()
-                release_new_rdds(spark, baseline_rdds)
-                if sql is not None:
-                    t0 = time.perf_counter()
-                    con.execute(sql).fetchall()
-                    d_runs.append(time.perf_counter() - t0)
-            s_out[name] = round(min(s_runs), 3)
-            if d_runs:
-                d_out[name] = round(min(d_runs), 3)
-        con.close()
-        return s_out, d_out
-
-    def count_jobs(data_dir: str) -> dict[str, int]:
-        # Spark-job counts per query — the floor evidence: at sf0.1 most
-        # headline queries are bounded by (jobs × per-job scheduling
-        # floor), not compute; an embedded engine pays neither. Counted
-        # on an extra untimed pass so the instrumentation never lands in
-        # a measured window.
-        tracker = spark.sparkContext.statusTracker()
-        out: dict[str, int] = {}
-        for name in HEADLINE:
-            before = len(tracker.getJobIdsForGroup(None) or [])
-            # same pure-execution body as the timed runs, so the counted
-            # jobs are exactly the jobs inside a measured window
-            execute_prepared(specs[name].fn(spark, data_dir))
-            out[name] = len(tracker.getJobIdsForGroup(None) or []) - before
-            spark.catalog.clearCache()
-            release_caches()
-            release_new_rdds(spark, baseline_rdds)
-        return out
-
-    # TWO full interleaved passes, min-merged per query per engine: a
-    # multi-second load spike on a busy host hits a CONTIGUOUS block of
-    # queries inside one pass, and consecutive min-of-N cannot shed it —
-    # a second pass ~40s later samples a different time window. Same work
-    # measured, tighter minimum estimator, symmetric across engines by
-    # construction (the engines alternate within each query's window).
-    timings, duck_timings = time_pair(sf_dir, n_runs=2)
-    _s2, _d2 = time_pair(sf_dir, n_runs=2)
-    timings = {k: min(timings[k], _s2[k]) for k in timings}
-    duck_timings = {k: min(duck_timings[k], _d2[k]) for k in duck_timings}
-    job_counts = count_jobs(sf_dir)
-
-    def time_construction(data_dir: str, n_runs: int = 2) -> dict[str, float]:
-        # Plan-construction floor: the classic PySpark DataFrame API
-        # analyzes the accumulated plan eagerly on EVERY transformation
-        # (JVM-side), so each fn() call pays Catalyst analysis before any
-        # job runs. This pass times fn() alone — the construction share
-        # of each measured window. Profiling shows the cost is JVM
-        # analysis of large expression trees (q01's exact-money aggs,
-        # the minhash windows), not py4j chatter: call-count halved with
-        # single-parse selectExpr forms and the wall barely moved.
-        out: dict[str, float] = {}
-        for name in HEADLINE:
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                specs[name].fn(spark, data_dir)
-                runs.append(time.perf_counter() - t0)
-            out[name] = round(min(runs), 4)
-            release_caches()
-            release_new_rdds(spark, baseline_rdds)
-        return out
-
-    # two passes min-merged, same estimator as query timing (r7 verdict:
-    # construction inherited box drift — it DOUBLED between boxes on
-    # identical code; a second pass sheds one-off spikes the same way)
-    construct = time_construction(sf_dir)
-    _c2 = time_construction(sf_dir)
-    construct = {k: min(construct[k], _c2[k]) for k in construct}
-    # per-job scheduling floor: a minimal 1-job query, min-of-5
+    # per-job scheduling floor: a minimal 1-job query, min-of-5, through
+    # the same body as the timed runs
     floor_runs = []
     floor_df = spark.range(1)
     for _ in range(5):
         t0 = time.perf_counter()
-        execute_prepared(floor_df)  # same body as the timed runs
+        execute_prepared(spark, floor_df)
         floor_runs.append(time.perf_counter() - t0)
     per_job_floor_sec = round(min(floor_runs), 4)
 
-    # The DuckDB side of time_pair is the single-node columnar baseline:
-    # each headline query's oracle SQL on the same parquet at the same SF
-    # (DuckDB uses all cores, fully materializes results). This is the
-    # "best native single-node engine" yardstick — Spark carries JVM/task
-    # overhead at toy scale but is the plan that distributes; large
-    # per-query gaps vs DuckDB flag real plan problems rather than fixed
-    # overhead.
     scale10x = None
     scale_detail: dict[str, dict[str, float]] = {}
-    if with_scale and scale_dir:
-        # settle before the 10x loop: the replica build (first run) and the
-        # preceding 60+ measured executions leave GC debt that otherwise
-        # lands in the first 10x measurements (observed q01 at 5.7s in-bench
-        # vs 1.3s steady-state)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(2.0)
-        _set_profile(*SCALE_PROFILE)
-        scale_spark, scale_duck = time_pair(scale_dir)
-        _set_profile(*BASE_PROFILE)
+    if scale_dir:
+        settle(spark)
+        set_profile(spark, SCALE_PROFILE)
+        s_run, d_run = measure_pass(spark, specs, scale_dir)
+        set_profile(spark, BASE_PROFILE)
+        scale_spark = {n: round(r["exec_s"], 3) for n, r in s_run.items()}
+        scale_duck = {n: round(t, 3) for n, t in d_run.items()}
         s_tot = round(sum(scale_spark.values()), 3)
         d_tot = round(sum(scale_duck.values()), 3)
-        # honest 10x distribution (r9 verdict item 2): the AGGREGATE ratio
-        # is carried by a few queries where DuckDB collapses at 10x (r9:
-        # q111 256s / q09 / q40 were 92% of DuckDB's total); the per-query
-        # median is the number that describes the typical query, so both
-        # are reported and README/SURVEY quote them together.
-        _ratios = sorted(
-            scale_spark[q] / scale_duck[q]
-            for q in scale_spark
-            if scale_duck.get(q)
+        # the AGGREGATE ratio is carried by a few queries where DuckDB
+        # collapses at 10x (r9: q111/q09/q40 were 92% of DuckDB's total);
+        # the per-query median describes the typical query, so both are
+        # reported
+        ratios = sorted(
+            scale_spark[q] / scale_duck[q] for q in scale_spark if scale_duck.get(q)
         )
-        _mid = len(_ratios) // 2
-        _median_ratio = (
-            _ratios[_mid]
-            if len(_ratios) % 2
-            else (_ratios[_mid - 1] + _ratios[_mid]) / 2
-        ) if _ratios else None
+        mid = len(ratios) // 2
+        median = (
+            (ratios[mid] if len(ratios) % 2 else (ratios[mid - 1] + ratios[mid]) / 2)
+            if ratios
+            else None
+        )
         scale10x = {
             "spark_total_sec": s_tot,
             "duckdb_total_sec": d_tot,
             "ratio_vs_duckdb": round(s_tot / d_tot, 2) if d_tot else None,
-            "median_ratio_vs_duckdb": (
-                round(_median_ratio, 2) if _median_ratio is not None else None
-            ),
+            "median_ratio_vs_duckdb": round(median, 2) if median is not None else None,
             "spark_growth_vs_1x": round(s_tot / sum(timings.values()), 2),
-            # per-query x10 seconds (r10 verdict item 2): the 10x replica
-            # under SCALE_PROFILE is where granted cores become real
-            # parallelism (multi-file scans, 32 partitions, AQE), so the
-            # driver's low-core rerun can read cores-sensitivity per
-            # query HERE — the sf0.1 block above is scheduling-floor
-            # bound by the single-row-group fixtures and can only read ~1.
+            # per-query x10 seconds: the replica under SCALE_PROFILE is
+            # where granted cores become real parallelism, so a low-core
+            # rerun reads cores-sensitivity per query here
             "queries": scale_spark,
         }
         scale_detail = {"spark": scale_spark, "duckdb": scale_duck}
-
-    # BPE-at-production-vocab side numbers (round 8, r7 verdict item 4):
-    # (a) end-to-end on the 10x replica — distributed word count + the
-    # incremental trainer at a 10k-merge budget (the fixture vocabulary
-    # is ~31 distinct words, so training EXHAUSTS long before 10k; the
-    # trained count is reported, not hidden) + corpus encode through the
-    # serving UDF; (b) the trainer scaling evidence at a real 10k-merge
-    # run — a deterministic 50k-word syllable-product vocab with Zipf-ish
-    # counts (no fixture has that vocabulary breadth). The naive trainer
-    # measured 184s for just 1k merges on the same vocab (~30 min at 10k,
-    # quiet box); the incremental one is the only production-shaped run.
-    bpe_scale = None
-    if with_scale and scale_dir:
-        import itertools
-
-        from feature_store_test_spark.data import load_table_spread
-        from feature_store_test_spark.operators import bpe as _bpe
-
-        # the replica legs run under the SCALE profile like every other
-        # 10x-replica timing in this file (code-review r8: they were
-        # measured under the toy BASE profile, a configuration the
-        # protocol itself declares wrong at that scale)
-        _set_profile(*SCALE_PROFILE)
-        _docs10 = load_table_spread(spark, "documents", scale_dir)
-        t0 = time.perf_counter()
-        _counts10 = sorted(
-            (r["word"], r["cnt"]) for r in _bpe.word_counts(_docs10).collect()
-        )
-        wc_sec = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _m10, _ = _bpe.train_bpe_fast(_counts10, 10000)
-        train10x_sec = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _tok_total = (
-            _bpe.bpe_encode_column(_docs10, _m10)
-            .selectExpr("sum(bpe_tokens) AS s")
-            .collect()[0]["s"]
-        )
-        encode10x_sec = time.perf_counter() - t0
-        _set_profile(*BASE_PROFILE)
-
-        _syl = [
-            a + b
-            for a in "bdklmnrs"
-            for b in "aeiou"
-        ]
-        _vocab: dict[str, int] = {}
-        for i, (a, b) in enumerate(itertools.product(_syl, _syl)):
-            _vocab.setdefault(a + b, 1 + 100000 // (i + 1))
-        for i, (a, b, c) in enumerate(
-            itertools.islice(itertools.product(_syl, _syl, _syl), 48400)
-        ):
-            _vocab.setdefault(a + b + c, 1 + 20000 // (i + 1))
-        _scounts = sorted(_vocab.items())
-        t0 = time.perf_counter()
-        _sm, _ = _bpe.train_bpe_fast(_scounts, 10000)
-        synth_train_sec = time.perf_counter() - t0
-
-        # (c) round 9 (r8 verdict item 4): the FULL pipeline — word-count
-        # shuffle -> 10k-merge train -> broadcast-join encode — on a
-        # corpus whose VOCABULARY is production-sized (the replica's is
-        # 31 words, so its end-to-end run exhausts at ~89 merges). The
-        # corpus is synthesized deterministically (md5-hash draws, no
-        # RNG): ~12k-word syllable vocabulary under a log-uniform
-        # (Zipf-1-ish) rank-frequency draw, 50k docs x 60 words, written
-        # as 32-file parquet so the scan parallelizes like any real
-        # multi-file table. The encode stage is the q151 shape — explode
-        # words ⋈ broadcast(word -> n_subtokens) + per-doc sum — NO
-        # Python over documents; tokens/sec is that stage's throughput.
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as _F
-
-        _V = 12000
-        _SYL = [a + b for a in "bdklmnrs" for b in "aeiou"]  # 40 syllables
-        _syl_arr = "array(" + ",".join(f"'{s}'" for s in _SYL) + ")"
-        _word_of = (
-            f"concat(element_at({_syl_arr}, CAST(__k DIV 1600 AS INT) % 40 + 1),"
-            f" element_at({_syl_arr}, CAST(__k DIV 40 AS INT) % 40 + 1),"
-            f" element_at({_syl_arr}, CAST(__k AS INT) % 40 + 1))"
-        )
-        _idx_of = (
-            "CAST(pow("
-            f"{_V}, (conv(substring(md5(concat(cast(id AS string), ':',"
-            " cast(j AS string))), 1, 8), 16, 10) % 1048576) / 1048576.0"
-            f") AS BIGINT) % {_V}"
-        )
-        _word_expr = _word_of.replace("__k", f"({_idx_of})")
-        _synth_dir = tempfile.mkdtemp(prefix="bpe_synth_")
-        try:
-            spark.range(50000).repartition(32).selectExpr(
-                "id AS doc_id",
-                f"array_join(transform(sequence(1, 60), j -> {_word_expr}),"
-                " ' ') AS text",
-            ).write.mode("overwrite").parquet(_synth_dir + "/docs.parquet")
-            _synth = spark.read.parquet(_synth_dir + "/docs.parquet")
-
-            _set_profile(*SCALE_PROFILE)
-            t0 = time.perf_counter()
-            _sc = sorted(
-                (r["word"], r["cnt"])
-                for r in _bpe.word_counts(_synth).collect()
-            )
-            synth_wc_sec = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            _cm, _cseg = _bpe.train_bpe_fast(_sc, 10000)
-            synth_e2e_train_sec = time.perf_counter() - t0
-            _seg_df = spark.createDataFrame(
-                [(w, len(t)) for w, t in sorted(_cseg.items())],
-                "word string, n_sub long",
-            )
-            _enc = (
-                _bpe.corpus_words(_synth)
-                .join(_F.broadcast(_seg_df), "word")
-                .groupBy("doc_id")
-                .agg(_F.sum("n_sub").alias("bpe_tokens"))
-            )
-            # min-of-3 inside ONE window (r9 verdict item 6): the
-            # single-shot figure read 1.0-1.2M tokens/sec on a quiet box
-            # and 456k on the driver box — the same host-steal story as
-            # the query timings, so the tokens/sec that transfers is the
-            # min-of-N estimator the query loop already uses.
-            _enc_runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _tot = _enc.selectExpr(
-                    "sum(bpe_tokens) AS s", "count(*) AS n"
-                ).collect()[0]
-                _enc_runs.append(time.perf_counter() - t0)
-            synth_encode_sec = min(_enc_runs)
-            _set_profile(*BASE_PROFILE)
-        finally:
-            shutil.rmtree(_synth_dir, ignore_errors=True)
-
-        bpe_scale = {
-            "replica_vocab_words": len(_counts10),
-            "replica_wordcount_sec": round(wc_sec, 2),
-            "replica_train_budget10k_sec": round(train10x_sec, 3),
-            "replica_merges_trained": len(_m10),
-            "replica_encode_sec": round(encode10x_sec, 2),
-            "replica_total_tokens": int(_tok_total),
-            "synth50k_vocab_words": len(_scounts),
-            "synth50k_train_10k_merges_sec": round(synth_train_sec, 2),
-            "synth50k_merges_trained": len(_sm),
-            "synth_corpus": {
-                "n_docs": 50000,
-                "vocab_words": len(_sc),
-                "wordcount_sec": round(synth_wc_sec, 2),
-                "train_10k_merges_sec": round(synth_e2e_train_sec, 2),
-                "merges_trained": len(_cm),
-                "encode_sec": round(synth_encode_sec, 2),
-                "encode_sec_runs": [round(r, 2) for r in _enc_runs],
-                "total_subtokens": int(_tot["s"]),
-                "encode_tokens_per_sec": int(_tot["s"] / synth_encode_sec),
-            },
-        }
-
-    # Reference-architecture throughput comparison: the reference engineers
-    # features with eager single-threaded pandas (groupby/agg). Time the
-    # same workload both ways on the same events table.
-    import duckdb
-
-    n_events = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{sf_dir}/events.parquet')"
-    ).fetchone()[0]
-    fe_runs = []
-    for _ in range(2):  # min-of-two, same rationale as the query loop
-        t0 = time.perf_counter()
-        specs["q16_engineer_features"].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        fe_runs.append(time.perf_counter() - t0)
-    spark_fe_sec = min(fe_runs)
-
-    import pandas as pd  # noqa: F401
-
-    pdf = duckdb.sql(
-        f"""SELECT user_id, epoch_us(ts) AS ts_us, value,
-                   CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS DOUBLE) AS k
-            FROM read_parquet('{sf_dir}/events.parquet')"""
-    ).df()
-    t0 = time.perf_counter()
-    g = pdf.sort_values(["ts_us"]).groupby("user_id")
-    _ = g.agg(
-        purchase_timestamp=("ts_us", "max"),
-        latest_purchase_value=("value", "last"),
-        avg_purchase_value=("value", "mean"),
-        avg_loyalty_score=("k", "mean"),
-        latest_loyalty_score=("k", "last"),
-    )
-    pandas_fe_sec = time.perf_counter() - t0
-
-    # End-to-end inference throughput: the same per-event semantics the
-    # reference runs serially (exists -> enrich -> predict -> upsert, 2-3
-    # API round-trips per event; its own simulation constants at
-    # /root/reference/core/inference.py:199-207 give ~1.7 events/sec).
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from feature_store_test_spark.data import load_table
-    from feature_store_test_spark.ml import LinearScorer
-    from feature_store_test_spark.store import FeatureStore
-    from feature_store_test_spark.streaming import InferencePipeline
-
-    fg_schema = T.StructType(
-        [
-            T.StructField("customer_id", T.LongType()),
-            T.StructField("purchase_timestamp", T.TimestampType()),
-            T.StructField("latest_purchase_value", T.DoubleType()),
-            T.StructField("avg_purchase_value", T.DoubleType()),
-            T.StructField("avg_loyalty_score", T.DoubleType()),
-            T.StructField("latest_loyalty_score", T.DoubleType()),
-        ]
-    )
-    work = tempfile.mkdtemp(prefix="bench_inference_")
-    fg = FeatureStore(spark, work).create(
-        "bench_fg", fg_schema, "customer_id", "purchase_timestamp"
-    )
-    pipe = InferencePipeline(
-        spark=spark,
-        feature_group=fg,
-        scorer=LinearScorer(
-            feature_cols=[
-                "latest_purchase_value",
-                "avg_purchase_value",
-                "avg_loyalty_score",
-            ],
-            weights=[0.01, 0.02, 0.5],
-            intercept=1.0,
-        ),
-        dlq_path=work + "/dlq",
-    )
-    bench_events = load_table(spark, "events", sf_dir).select(
-        "event_id",
-        F.col("user_id").alias("customer_id"),
-        F.col("ts").alias("purchase_timestamp"),
-        F.col("value").alias("purchase_value"),
-    )
-    t0 = time.perf_counter()
-    pipe.process_batch(bench_events).write.format("noop").mode("overwrite").save()
-    inference_sec = time.perf_counter() - t0
-
-    throughput = {
-        "events_rows": n_events,
-        # feature engineering (groupby/agg only): at this toy scale a
-        # single-threaded pandas groupby wins on fixed overhead; the Spark
-        # plan is the one that still runs when the table is 10^6x larger.
-        "spark_engineer_features_sec": round(spark_fe_sec, 3),
-        "pandas_engineer_features_sec": round(pandas_fe_sec, 3),
-        # end-to-end inference (enrich+predict+stateful upsert per event):
-        "spark_inference_events_per_sec": round(n_events / inference_sec),
-        "reference_simulated_events_per_sec": 1.7,
-    }
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    # headline decomposition (r9 verdict item 1c): the gate ratio and its
-    # fixed-cost split, IN the headline block — value = pure execution;
-    # floor = jobs x this box's measured per-job scheduling latency (the
-    # component that moves with host steal and that an embedded engine
-    # never pays); floor-net is the box-transferable plan-quality ratio.
-    _spark_total = round(sum(timings.values()), 3)
-    _duck_total = round(sum(duck_timings.values()), 3)
-    _floor_total = round(per_job_floor_sec * sum(job_counts.values()), 2)
+    # value = pure execution; floor = jobs x this box's measured per-job
+    # scheduling latency (moves with host steal, and an embedded engine
+    # never pays it); floor-net is the box-transferable plan-quality ratio
+    spark_total = round(sum(timings.values()), 3)
+    duck_total = round(sum(duck_timings.values()), 3)
+    floor_total = round(per_job_floor_sec * sum(job_counts.values()), 2)
     result = {
         "metric": "headline_queries_total_wall",
-        "value": _spark_total,
+        "value": spark_total,
         "unit": "sec",
-        "ratio_vs_duckdb": (
-            round(_spark_total / _duck_total, 2) if _duck_total else None
-        ),
+        "ratio_vs_duckdb": round(spark_total / duck_total, 2) if duck_total else None,
         "floor_net_ratio_vs_duckdb": (
-            round((_spark_total - _floor_total) / _duck_total, 2)
-            if _duck_total
-            else None
+            round((spark_total - floor_total) / duck_total, 2) if duck_total else None
         ),
         "queries": timings,
-        "duckdb_total_sec": _duck_total,
-        # scheduling-floor evidence: total Spark jobs across the headline
-        # set × the measured per-job floor — the fixed overhead an
-        # embedded engine never pays (full per-query counts in the
-        # BENCH_SELF.json sidecar)
+        "duckdb_total_sec": duck_total,
         "job_floor": {
             "per_job_sec": per_job_floor_sec,
             "total_jobs": sum(job_counts.values()),
-            "implied_floor_sec": _floor_total,
+            "implied_floor_sec": floor_total,
         },
-        # eager-analysis evidence: seconds each measured window spends in
-        # JVM plan analysis before the first job (fn() alone, min-of-2);
-        # an engine with prepared statements pays this once, not per run
+        # seconds of eager JVM plan analysis per query before its first
+        # job; an engine with prepared statements pays this once per plan
         "plan_construction_sec": round(sum(construct.values()), 2),
         "scale10x": scale10x,
-        "throughput": throughput,
         "sf": sf_val,
     }
     # full per-query breakdowns live in a sidecar file; stdout stays one
@@ -792,13 +217,9 @@ def main() -> None:
     detail = dict(result)
     detail["duckdb_queries"] = duck_timings
     detail["scale10x_queries"] = scale_detail
-    # floor evidence: most sub-second sf0.1 entries are ~job_count × floor
     detail["job_counts"] = job_counts
     detail["per_job_floor_sec"] = per_job_floor_sec
     detail["plan_construction"] = construct
-    detail["bpe_scale"] = bpe_scale
-    # floor_net_ratio_vs_duckdb moved INTO the headline result block
-    # (r9 verdict item 1c) — it rides into detail via dict(result) above.
     self_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json"
     )

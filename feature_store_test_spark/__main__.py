@@ -7,9 +7,16 @@ Commands:
     oracle <query>            print the query's DuckDB oracle SQL
 
 Companion module entry points (same package, own mains):
-    python -m feature_store_test_spark.demo    end-to-end workflow tour
-    python -m feature_store_test_spark.sweep   full-registry x1/x10 sweep
-    python -m feature_store_test_spark.plans   regenerate PLANS.md
+    python -m feature_store_test_spark.demo        end-to-end workflow tour
+    python -m feature_store_test_spark.sweep       full-registry x1/x10 sweep
+    python -m feature_store_test_spark.scaleprobe  probed subset, x1/x10 replica
+    python -m feature_store_test_spark.plans       regenerate PLANS.md
+
+The sweep, the scale probe, PLANS.md and the root bench.py all measure
+through feature_store_test_spark.harness: one session (harness_session),
+one pair of profiles (BASE_PROFILE at sf0.1, SCALE_PROFILE at 10x) and
+one timing function (run_query: construction, min-of-2 prepared-plan
+execution, job count).
 """
 
 from __future__ import annotations

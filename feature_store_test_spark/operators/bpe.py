@@ -47,9 +47,6 @@ from __future__ import annotations
 import os
 from collections import Counter
 
-# module-level so the pandas_udf type hints (stringified by
-# `from __future__ import annotations`) resolve against module globals
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -304,46 +301,3 @@ def trained_bpe(
             _train_cache.pop(next(iter(_train_cache)))
         _train_cache[key] = hit
     return hit
-
-
-def bpe_encode_column(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Distributed BPE encoding of arbitrary (possibly unseen) text with a
-    FIXED trained merge table — the serving/streaming shape, where new
-    documents arrive after training.
-
-    The merge list is closed over and shipped once per executor inside the
-    Arrow-batched pandas UDF (tokenizer tables are KBs — the broadcast-
-    small-things rule); per-batch encoding memoizes word → token count so
-    each distinct word in a batch is encoded once. Corpus-scale batch
-    counting should prefer the join form (queries/tokenize.q151): the
-    training state already covers every corpus word, no Python needed.
-    Output: total BPE token count per row (LongType).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = merge_ranks(merges)
-
-    @pandas_udf("long")
-    def _count(texts: pd.Series) -> pd.Series:
-        import re
-
-        memo: dict[str, int] = {}
-
-        def one(t: str) -> int:
-            total = 0
-            for w in re.findall("[a-z]+", (t or "").lower()):
-                n = memo.get(w)
-                if n is None:
-                    n = len(encode_word_fast(w, ranks))
-                    memo[w] = n
-                total += n
-            return total
-
-        return texts.map(one)
-
-    return df.withColumn(out_col, _count(F.col(text_col)))

@@ -389,17 +389,19 @@ def threshold_pairs_within_buckets(
     if scorer not in ("fold", "arrow"):
         raise ValueError(f"unknown scorer {scorer!r}")
     keep = list(keep_cols)
+    # the one column _grid_cells buckets, never a struct field
+    vec = F.col(_sql_name(vec_col))
 
     def side(base: DataFrame, tag: str, cell: bool = False) -> DataFrame:
         cols = [
             F.col(bucket_col),
             F.col(rep_col).alias(f"r{tag}"),
-            F.col(vec_col).alias(f"v{tag}"),
+            vec.alias(f"v{tag}"),
             # norms precomputed ONCE per distinct vector, not per pair:
             # higher-order folds are interpreted, and cosine() would
             # evaluate BOTH norm folds for every candidate pair — same
             # bits (identical fold, evaluated earlier), 3x less fold work
-            l2_norm(vec_col).alias(f"n{tag}"),
+            l2_norm(vec).alias(f"n{tag}"),
             *(
                 [_grid_cells(vec_col, threshold, dim, grid_dims).alias(f"cell_{tag}")]
                 if cell
@@ -451,7 +453,7 @@ def threshold_pairs_within_buckets(
                 return pd.DataFrame({f.name: [] for f in out_schema.fields})
             # order by rep so emitted (i < j) positions give ra < rb
             pdf = pdf.sort_values(rep_col, kind="mergesort").reset_index(drop=True)
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            X = np.asarray(pdf["__v"].tolist(), dtype=np.float64)
             nrm = np.linalg.norm(X, axis=1, keepdims=True)
             nrm[nrm == 0.0] = 1.0
             S = np.round((X / nrm) @ (X / nrm).T, 6)
@@ -468,7 +470,8 @@ def threshold_pairs_within_buckets(
                 out[f"{k}_b"] = pdf[k].to_numpy()[ju]
             return pd.DataFrame(out)
 
-        return base.select(bucket_col, rep_col, vec_col, *keep).groupBy(
+        # a plain name: applyInPandas re-resolves every column by name
+        return base.select(bucket_col, rep_col, vec.alias("__v"), *keep).groupBy(
             bucket_col
         ).applyInPandas(lambda _, pdf: block(pdf), out_schema)
 
@@ -546,9 +549,11 @@ def lsh_ann_topk(
     each single bit). Each probe multiplies query-side rows (cheap, they
     broadcast) and recall rises toward exact as probes → n_planes.
     """
+    # the one column lsh_bucket hashes, never a struct field
+    vec = F.col(_sql_name(vec_col))
     bq = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
+        vec.alias("__qv"),
         lsh_bucket(vec_col, n_planes, dim).alias("bucket"),
     )
     if probes >= 1:
@@ -569,7 +574,7 @@ def lsh_ann_topk(
         )
     bc = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
+        vec.alias("__cv"),
         lsh_bucket(vec_col, n_planes, dim).alias("bucket"),
     )
     scored = (

@@ -2,27 +2,37 @@
 
 Run:  python -m feature_store_test_spark.plans
 
-Regenerates PLANS.md at the repo root from the CURRENT bench headline list
-(bench.py HEADLINE) so the documented plans can never drift from the
-benchmarked queries. Read the file for: ``PushedFilters``/``ReadSchema`` on
-scans (pushdown + pruning), ``BroadcastHashJoin`` on dimension joins, one
-Exchange per keyed operator, and Python appearing only at declared UDF
-seams.
+Regenerates PLANS.md at the repo root from the CURRENT headline list
+(harness.HEADLINE), in the harness session under harness.BASE_PROFILE, so
+the documented plans can never drift from the benchmarked queries or the
+session that measures them. Read the file for: ``PushedFilters``/
+``ReadSchema`` on scans (pushdown + pruning), ``BroadcastHashJoin`` on
+dimension joins, one Exchange per keyed operator, and Python appearing
+only at declared UDF seams.
 """
 
 from __future__ import annotations
 
 import os
 
-HEADER_TEMPLATE = """# PLANS — captured physical plans (sf0.1, bench BASE profile)
+from feature_store_test_spark.harness import (
+    BASE_PROFILE,
+    HEADLINE,
+    harness_session,
+    profile_desc,
+    set_profile,
+)
+from feature_store_test_spark.registry import all_queries
+
+HEADER_TEMPLATE = """# PLANS — captured physical plans (sf0.1, harness BASE profile)
 
 Generated by `python -m feature_store_test_spark.plans` (df.explain('formatted')
-over each bench.py headline query at sf0.1, under bench.BASE_PROFILE itself —
-{base_desc} — so these are EXACTLY the plans the headline numbers measure
-(r8 verdict: a divergent profile here showed q42 with the SMJ the bench's
-SHJ preference exists to remove; the profile prose above is formatted from
-the imported tuple so it cannot drift either). AQE off means the FULL
-static physical plan is visible; the 10x/cluster profile re-enables AQE
+over each harness.HEADLINE query at sf0.1, in `harness.harness_session()`
+under harness.BASE_PROFILE — {base_desc} — with constraint propagation and
+dynamic partition pruning off, as in every measured session), so these are
+EXACTLY the plans the headline numbers measure (the profile prose is
+formatted from the tuple itself, so it cannot drift). AQE off means the
+FULL static physical plan is visible; the 10x/cluster profile re-enables AQE
 (and the SMJ default — SHJ's per-partition build must fit executor memory
 at 100 TB) on the same logical plans. What to look for:
 `PushedFilters`/`ReadSchema` on scans (pushdown + pruning),
@@ -35,16 +45,7 @@ appearing ONLY in declared UDF queries.
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    import sys
-
-    sys.path.insert(0, repo_root)
-    from bench import BASE_PROFILE, HEADLINE, profile_desc, set_profile
-
-    from feature_store_test_spark.registry import all_queries
-    from feature_store_test_spark.session import get_spark
-
-    spark = get_spark(app_name="fsts-plans")
+    spark = harness_session("fsts-plans")
     set_profile(spark, BASE_PROFILE)
     specs = all_queries()
     # headline set + the non-headline operators whose plan shape carries

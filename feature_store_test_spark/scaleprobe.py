@@ -3,8 +3,9 @@ the data grows 10x?
 
 Builds a 10x replica of sf0.1 under /tmp (each table unioned 10 times with
 key-space offsets so joins keep their fan-in: 10x the orders of 10x the
-customers, not 10 duplicate copies of the same keys), then times each
-probed query cold at 1x and at 10x and reports the growth ratio.
+customers, not 10 duplicate copies of the same keys), then measures each
+probed query with ``harness.run_query`` at 1x (BASE_PROFILE) and at 10x
+(SCALE_PROFILE), the sweep's own loop, and reports the growth ratio.
 
 A ratio near 1x means the query is still overhead-dominated at ~6M-row
 lineitem; near 10x means perfectly linear data-bound work; far above 10x
@@ -18,7 +19,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,49 +148,23 @@ def ensure_replica(spark: SparkSession) -> str:
 
 
 def main() -> None:
-    from feature_store_test_spark.registry import all_queries
-    from feature_store_test_spark.session import get_spark
+    from feature_store_test_spark.harness import harness_session
+    from feature_store_test_spark.sweep import measure
 
-    spark = get_spark(
-        app_name="fsts-scaleprobe",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "16m",
-            "spark.sql.files.openCostInBytes": "512k",
-        },
-    )
+    spark = harness_session("fsts-scaleprobe")
     ensure_replica(spark)
-
-    specs = all_queries()
-    report: dict[str, dict[str, float]] = {}
-    for name in PROBED:
-        fn = specs[name].fn
-        # one warmup (plan/codegen) at the smallest SF, then cold-cache
-        # single runs at 1x and 10x — the same protocol bench.py uses
-        fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        times = {}
-        for label, d in [("x1", BASE_SF), (f"x{COPIES}", OUT_DIR)]:
-            # min-of-two cold runs, same rationale as bench.py: a shared
-            # 32-thread JVM occasionally drops a multi-second GC pause
-            # into a single-shot measurement
-            runs = []
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            times[label] = round(min(runs), 3)
-        times["ratio"] = round(times[f"x{COPIES}"] / times["x1"], 2)
-        report[name] = times
+    key = f"x{COPIES}"
+    report = measure(spark, PROBED, BASE_SF, OUT_DIR, key)
+    for name, times in report.items():
         print(json.dumps({name: times}))
-    total1 = sum(v["x1"] for v in report.values())
-    totaln = sum(v[f"x{COPIES}"] for v in report.values())
+    ok = [v for v in report.values() if key in v]
+    total1 = sum(v["x1"] for v in ok)
+    totaln = sum(v[key] for v in ok)
     print(
         json.dumps(
             {
                 "total_x1_sec": round(total1, 2),
-                f"total_x{COPIES}_sec": round(totaln, 2),
+                f"total_{key}_sec": round(totaln, 2),
                 "total_ratio": round(totaln / total1, 2),
             }
         )
@@ -211,9 +185,9 @@ def main() -> None:
                 sweep = {}
         block = {
             "note": (
-                f"{len(report)}-query probe at 100x replica "
-                "(SPARK_GRAFT_SCALE_COPIES=100); x1 under bench BASE "
-                "profile; min-of-2 cold runs. 100x data at "
+                f"{len(ok)}-query probe at 100x replica "
+                "(SPARK_GRAFT_SCALE_COPIES=100); harness.run_query, x1 under "
+                "BASE_PROFILE, x100 under SCALE_PROFILE. 100x data at "
                 f"{round(totaln / total1, 2)}x wall "
                 f"(x1 {round(total1, 2)}s -> x100 {round(totaln, 2)}s)."
             ),

@@ -142,9 +142,13 @@ class FeatureGroup:
 
     def exists_batch(self, keys: DataFrame) -> DataFrame:
         """Which of the given keys have a stored record (left semi join) —
-        the set-oriented form of customer_features_exist (:155-172)."""
+        the set-oriented form of customer_features_exist (:155-172).
+
+        The online view holds exactly the keys of the current snapshot, so
+        the semi join reads the key column of ``read()`` alone: no
+        latest-row aggregate over whole rows. A NULL key matches nothing."""
         return keys.join(
-            self.online_view().select(self.key_col),
+            self.table.read().select(self.key_col),
             on=self.key_col,
             how="left_semi",
         )

@@ -1,6 +1,6 @@
-"""Full-registry scale sweep: EVERY registered query timed cold at the
-base SF (default sf0.1, bench BASE profile) and on the 10x scaleprobe
-replica (bench SCALE profile), written to SCALE_SWEEP.json.
+"""Full-registry scale sweep: EVERY registered query measured with
+``harness.run_query`` at the base SF (default sf0.1, BASE_PROFILE) and on
+the 10x scaleprobe replica (SCALE_PROFILE), written to SCALE_SWEEP.json.
 
 This is the audit that catches scale pathologies the 30-query headline
 bench never touches (round 2: q39's 749s band join, ANN retrain storms;
@@ -22,102 +22,82 @@ import json
 import os
 import time
 
+from feature_store_test_spark.harness import (
+    BASE_PROFILE,
+    SCALE_PROFILE,
+    WARM_SF_DIR,
+    harness_session,
+    profile_desc,
+    run_query,
+    set_profile,
+)
+from feature_store_test_spark.registry import all_queries
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from feature_store_test_spark.registry import (
-        all_queries,
-        persistent_rdd_ids,
-        release_caches,
-        release_new_rdds,
-    )
-    from feature_store_test_spark.session import get_spark
+PROTOCOL = (
+    "harness.run_query: one timed fn() (construct_*), min of 2 executions "
+    "of the prepared plan (x1/x10; cache-binding plans rebuilt per run) "
+    "after an sf0.001 warm-up pass; x1 = base SF under BASE_PROFILE "
+    f"({profile_desc(BASE_PROFILE)}), x10 = scaleprobe replica under "
+    f"SCALE_PROFILE ({profile_desc(SCALE_PROFILE)})"
+)
 
-    # File-split confs are owned by bench's profiles (set via _set_profile
-    # below before any timing) — no extra_conf here, so the values can't
-    # drift from bench.BASE_PROFILE (r9 ADVICE: a dead 16m/512k copy under
-    # a 'same as bench' comment contradicted the single-source cleanup).
-    spark = get_spark(app_name="fsts-sweep")
 
-    # the EXACT bench profiles (round 9: this module had drifted to a
-    # stale 8-partition copy of a pre-r5 base profile — profile literals
-    # now live in ONE place, bench.py, imported here and by plans.py)
-    import sys as _sys
-
-    _sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from bench import BASE_PROFILE, SCALE_PROFILE, profile_desc, set_profile
-
-    def _set_profile(*profile) -> None:
-        set_profile(spark, profile)
-
-    with_10x = os.environ.get("SPARK_GRAFT_SWEEP_SKIP_10X", "0") != "1"
-    scale_dir = None
-    if with_10x:
-        from feature_store_test_spark.scaleprobe import ensure_replica
-
-        scale_dir = ensure_replica(spark)
-
+def measure(
+    spark, names: list[str], base_dir: str, scale_dir: str | None, scale_key: str
+) -> dict[str, dict]:
+    """run_query every query at ``base_dir`` ("x1") and, if given, at
+    ``scale_dir`` (``scale_key``); errors are recorded, never raised."""
     specs = all_queries()
-    baseline_rdds = persistent_rdd_ids(spark)
-
-    def run_once(name: str, data_dir: str) -> float:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, data_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        release_caches()
-        release_new_rdds(spark, baseline_rdds)
-        return dt
-
-    def run_timed(name: str, data_dir: str, n_runs: int = 2) -> float:
-        # min-of-N cold-cache runs, the same protocol as bench.py: a
-        # single shot on a shared 32-thread JVM occasionally absorbs a
-        # multi-second GC pause from the preceding queries' garbage
-        return min(run_once(name, data_dir) for _ in range(n_runs))
-
-    out: dict[str, dict] = {}
-    _set_profile(*BASE_PROFILE)
-    # warm every query's JVM/codegen path at the smallest SF so the first
-    # timed queries don't absorb cold-start JIT (without this, whichever
-    # query runs first reads 5-8x slower than steady state)
-    for name in specs:
+    set_profile(spark, BASE_PROFILE)
+    for name in names:
         try:
-            run_once(name, "/root/testdata/sf0.001")
+            run_query(spark, specs[name], WARM_SF_DIR, runs=1)
         except Exception:  # noqa: BLE001 — recorded in the timed pass
             pass
     spark.sparkContext._jvm.System.gc()
     time.sleep(2.0)
-    for name in specs:
+    out: dict[str, dict] = {}
+    for name in names:
         try:
-            out[name] = {"x1": round(run_timed(name, sf_dir), 3)}
+            r = run_query(spark, specs[name], base_dir)
+            out[name] = {"x1": round(r["exec_s"], 3),
+                         "construct_x1": round(r["construct_s"], 3)}
         except Exception as e:  # noqa: BLE001 — sweep must record, not die
             out[name] = {"err": str(e)[:200]}
+    if scale_dir is None:
+        return out
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(2.0)
+    set_profile(spark, SCALE_PROFILE)
+    for name in names:
+        if "err" in out[name]:
+            continue
+        if specs[name].scale_demo:
+            # output-bound demo views (q39's exploded dup² pairs): their
+            # x10 wall measures OUTPUT volume by declared semantics, not
+            # plan quality — the bounded twin (q39b) carries the signal
+            out[name]["skipped_10x"] = "output-bound demo view"
+            continue
+        try:
+            r = run_query(spark, specs[name], scale_dir)
+            out[name][scale_key] = round(r["exec_s"], 3)
+            out[name][f"construct_{scale_key}"] = round(r["construct_s"], 3)
+            out[name]["ratio"] = round(r["exec_s"] / max(out[name]["x1"], 1e-9), 2)
+        except Exception as e:  # noqa: BLE001
+            out[name]["err"] = str(e)[:200]
+    set_profile(spark, BASE_PROFILE)
+    return out
 
-    if with_10x and scale_dir:
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(2.0)
-        _set_profile(*SCALE_PROFILE)
-        for name in specs:
-            if "err" in out[name]:
-                continue
-            if specs[name].scale_demo:
-                # output-bound demo views (q39's exploded dup² pairs):
-                # their x10 wall measures OUTPUT volume by declared
-                # semantics, not plan quality — the bounded twin (q39b)
-                # carries the scale signal
-                out[name]["skipped_10x"] = "output-bound demo view"
-                continue
-            try:
-                t = run_timed(name, scale_dir)
-                out[name]["x10"] = round(t, 3)
-                out[name]["ratio"] = round(t / max(out[name]["x1"], 1e-9), 2)
-            except Exception as e:  # noqa: BLE001
-                out[name]["err"] = str(e)[:200]
-        _set_profile(*BASE_PROFILE)
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = harness_session("fsts-sweep")
+    scale_dir = None
+    if os.environ.get("SPARK_GRAFT_SWEEP_SKIP_10X", "0") != "1":
+        from feature_store_test_spark.scaleprobe import ensure_replica
+
+        scale_dir = ensure_replica(spark)
+    out = measure(spark, list(all_queries()), sf_dir, scale_dir, "x10")
 
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -131,16 +111,10 @@ def main() -> None:
             "total_x10_sec": round(x10_tot, 2),
             "total_ratio": round(x10_tot / x1_tot, 2) if x1_tot else None,
             "n_queries": len(out),
-            "protocol": (
-                "min-of-2 cold-cache runs after an sf0.001 warmup pass; "
-                f"x1 = sf0.1 under bench.BASE_PROFILE "
-                f"({profile_desc(BASE_PROFILE)}), x10 = scaleprobe "
-                f"replica under bench.SCALE_PROFILE "
-                f"({profile_desc(SCALE_PROFILE)})"
-            ),
+            "protocol": PROTOCOL,
         }
     }
-    # the 100x probe (SPARK_GRAFT_SCALE_COPIES=100, 19-query subset) is
+    # the 100x probe (SPARK_GRAFT_SCALE_COPIES=100 scaleprobe) is
     # measured out-of-band and carried across regenerations
     if os.path.exists(path):
         try:

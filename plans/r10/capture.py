@@ -1,8 +1,8 @@
 """Dump .explain('formatted') per query into plans/r10/<name>_<tag>.txt.
 
 Usage:  python plans/r10/capture.py <tag> [qname ...]
-With no names, captures every bench.py HEADLINE query. Plans are captured
-under bench.BASE_PROFILE at sf0.1 (the exact profile the headline numbers
+With no names, captures every harness.HEADLINE query. Plans are captured
+under harness.BASE_PROFILE at sf0.1 (the exact profile the headline numbers
 measure), same discipline as feature_store_test_spark/plans.py.
 """
 
@@ -17,8 +17,7 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     tag = sys.argv[1]
-    from bench import BASE_PROFILE, HEADLINE, set_profile
-
+    from feature_store_test_spark.harness import BASE_PROFILE, HEADLINE, set_profile
     from feature_store_test_spark.registry import all_queries
     from feature_store_test_spark.session import get_spark
 

@@ -186,39 +186,3 @@ def test_trained_bpe_memo_and_parity(spark, sf_dir):
     # corpus words re-encode to the training state
     for w, t in list(seg.items())[:10]:
         assert bpe.encode_word(w, merges) == t
-
-
-def test_bpe_encode_column_matches_join_form(spark, sf_dir):
-    """The serving-side pandas-UDF encoder over raw text agrees with the
-    training-state join form on corpus documents, and handles unseen
-    words (falls back to merge application, partitioning each word)."""
-    from feature_store_test_spark.data import load_table_spread
-
-    merges, seg = bpe.trained_bpe(spark, sf_dir)
-    import pyspark.sql.functions as F
-
-    # deterministic subset (limit over a round-robin exchange picks
-    # different rows per action)
-    docs = load_table_spread(spark, "documents", sf_dir).where(F.col("doc_id") < 50)
-    got = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe.bpe_encode_column(docs, merges).collect()
-    }
-    import re
-
-    for r in docs.select("doc_id", "text").collect():
-        want = sum(
-            len(seg[w]) for w in re.findall("[a-z]+", r["text"].lower())
-        )
-        assert got[r["doc_id"]] == want, r["doc_id"]
-
-    unseen = spark.createDataFrame(
-        [(1, "zzqx unknownword the"), (2, "")], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r["bpe_tokens"]
-           for r in bpe.bpe_encode_column(unseen, merges).collect()}
-    want1 = (len(bpe.encode_word("zzqx", merges))
-             + len(bpe.encode_word("unknownword", merges))
-             + len(bpe.encode_word("the", merges)))
-    assert out[1] == want1
-    assert out[2] == 0

@@ -24,16 +24,41 @@ def test_lsh_bucket_deterministic(spark, sf_dir):
 def test_bucket_and_grid_read_a_name_holding_a_dot_and_a_backtick(spark, sf_dir):
     """A column named ``d.emb`x`` is one column, not a struct field, and
     its buckets and grid cells equal those of the same vectors under a
-    plain name; a struct ``d`` with field ``emb`x`` beside it is not read."""
-    from feature_store_test_spark.operators.similarity import _grid_cells
+    plain name; a struct ``d`` with field ``emb`x`` beside it is not read.
+    The scorers that bucket by that name score the same column:
+    ``threshold_pairs_within_buckets`` (direct, grid and arrow paths) and
+    ``lsh_ann_topk`` give the plain name's output."""
+    from feature_store_test_spark.operators.similarity import (
+        _grid_cells,
+        threshold_pairs_within_buckets,
+    )
 
     odd = "d.emb`x"
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id",
+        "label",
         "embedding",
         F.col("embedding").alias(odd),
         F.struct(F.array(F.lit(-1.0)).alias("emb`x")).alias("d"),
     )
+
+    def pairs(name, **kw):
+        got = threshold_pairs_within_buckets(emb, "label", name, "vec_id", 0.25, **kw)
+        return sorted(map(tuple, got.collect()))
+
+    for kw in ({}, {"oversize": 1}, {"scorer": "arrow"}):
+        plain_pairs = pairs("embedding", **kw)
+        assert len(plain_pairs) > 0
+        assert pairs(odd, **kw) == plain_pairs, kw
+
+    queries = emb.where(F.col("vec_id") < 20)
+
+    def ann(name):
+        return sorted(map(tuple, lsh_ann_topk(emb, queries, vec_col=name).collect()))
+
+    plain_ann = ann("embedding")
+    assert len(plain_ann) > 0
+    assert ann(odd) == plain_ann
 
     def out(name):
         df = emb.select(
