@@ -29,6 +29,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory(phys_bytes: int) -> str:
+    """The default driver heap for a host with ``phys_bytes`` of physical
+    memory: 24g, or half the host when that is less — in local mode every
+    executor thread lives in the driver JVM, which must leave room for the
+    Python workers and the rest of the host."""
+    half_mib = phys_bytes // 2 // 2**20
+    return "24g" if half_mib >= 24 * 1024 else f"{half_mib}m"
+
+
 def get_spark(
     app_name: str = APP_NAME,
     master: str | None = None,
@@ -89,9 +98,14 @@ def get_spark(
         # local[32] hosts all 32 executor threads in the driver JVM: 8g
         # showed GC/eviction thrash once a few operators' caches
         # accumulated (q21 measured 3x slower late in a 30-query bench
-        # than in isolation). The box has 128 GiB; on a real cluster this
+        # than in isolation) on a 128 GiB host, while 24g on a 15 GiB host
+        # got the JVM OOM-killed beside DuckDB. On a real cluster this
         # would be spark.executor.memory instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

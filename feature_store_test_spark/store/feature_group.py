@@ -91,8 +91,10 @@ class FeatureGroup:
         committed in versions (since, until], each tagged ``_change_type``
         = 'insert' (first version this key ever appeared in) or 'update'
         (key existed in an earlier commit) — the Delta CDF contract for an
-        append-only upsert log. Incremental online-view refresh and
-        downstream retraining consume this instead of re-reading the table.
+        append-only upsert log, for downstream consumers such as
+        incremental retraining. ``ServingSession.refresh`` does not use it:
+        it reads the new commits in the driver with no Spark job, and needs
+        no insert/update split.
 
         Scale: the changed rows come from reading ONLY the new commits
         (table.changes); the insert/update classification needs each key's

@@ -24,8 +24,10 @@ Spark-side.
 
 Staleness contract: reads are as-of the snapshot's commit version
 (``version``), exactly like any online store replicating asynchronously
-from a write-ahead log; ``refresh()`` re-snapshots after upserts and is a
-no-op when the table version is unchanged.
+from a write-ahead log. ``refresh()`` replays only the commits since the
+snapshot into the dict, in this process: the dict is the checkpoint and
+the new commits the log tail, as in Delta Lake's snapshot read. Only a
+history rewrite (compaction, delete, restore) re-snapshots with Spark.
 """
 
 from __future__ import annotations
@@ -34,8 +36,22 @@ import hashlib
 from typing import Any, Iterable
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feature_store_test_spark.store.feature_group import FeatureGroup
+from feature_store_test_spark.store.table import _columns
+
+_NAN = float("nan")
+
+
+def _one_nan(key):
+    """NaN keys as one object: Spark groups them as one key, a dict not."""
+    return _NAN if key != key else key
+
+
+def _et_order(record: dict, et: str) -> tuple:
+    """An event time as Spark orders it: NULL below any value."""
+    return record[et] is not None, record[et]
 
 
 class ServingSession:
@@ -61,6 +77,8 @@ class ServingSession:
         self.n_shards = n_shards
         self.shard = shard
         self._records: dict[Any, dict] = {}
+        self._columns: list[tuple[str, str]] = []  # the snapshot's schema
+        self._stats = dict.fromkeys(("hits", "misses", "noop", "delta", "full", "rows", "commits"), 0)
         self.version: int | None = None
         self.refresh()
 
@@ -104,23 +122,72 @@ class ServingSession:
         return F.pmod(h, F.lit(self.n_shards)) == F.lit(self.shard)
 
     def refresh(self, force: bool = False) -> bool:
-        """Re-snapshot this shard of the online view; True when a new
-        snapshot was taken.
+        """Bring this shard of the snapshot up to the latest commit; False
+        when the version was unchanged (and not ``force``).
 
-        Skips the Spark job when the table's commit version is unchanged
-        (the snapshot is already current) unless ``force``.
+        If every commit since the snapshot is an append (ingest, merge)
+        with the snapshot's schema, their rows are read in this process (no
+        Spark job) and folded in ``online_view``'s order; in strict mode a
+        stored record with a greater event time (NULL lowest) stays. Else
+        — the first snapshot, ``force``, a compaction, delete, restore,
+        vacuum or schema change, or a sharded session on a key type
+        ``shard_of`` rejects — the online view is re-collected by Spark.
         """
         current = self._fg.table.latest_version()
+        stats, key, et = self._stats, self._fg.key_col, self._fg.event_time_col
         if not force and self.version == current:
+            stats.update(noop=stats["noop"] + 1, rows=0, commits=0)
             return False
-        key = self._fg.key_col
-        view = self._fg.online_view(strict_event_time=self._strict)
-        if self.n_shards > 1:
-            view = view.where(self._shard_filter(key))
-        rows = view.collect()
-        self._records = {r[key]: r.asDict() for r in rows}
+        rows = None if force or self.version is None else self._window_rows(current)
+        mode = "full" if rows is None else "delta"
+        if rows is None:
+            self._columns = _columns(self._fg.table.schema)
+            view = self._fg.online_view(strict_event_time=self._strict)
+            if self.n_shards > 1:
+                view = view.where(self._shard_filter(key))
+            rows = view.collect()
+            self._records = {_one_nan(r[key]): r.asDict() for r in rows}
+        else:  # fold into a copy: a concurrent reader sees either version whole
+            records = dict(self._records)
+            for r in rows:  # ascending, so the latest row of a key lands last
+                del r["_commit_version"]
+                k = _one_nan(r[key])
+                old = records.get(k)
+                if not self._strict or old is None or _et_order(old, et) <= _et_order(r, et):
+                    records[k] = r
+            self._records = records
+        commits = (current or 0) - (self.version or 0)
+        stats.update({mode: stats[mode] + 1, "rows": len(rows), "commits": commits})
         self.version = current
         return True
+
+    def _window_rows(self, current: int) -> list[dict] | None:
+        """This shard's rows of the commits in (``version``, ``current``]
+        in ``online_view``'s order, or None if ``refresh`` must re-collect."""
+        table, key, et = self._fg.table, self._fg.key_col, self._fg.event_time_col
+        window = [table._load_commit(v) for v in table.versions() if self.version < v <= current]
+        if _columns(table.schema) != self._columns or not all(
+            c.get("type", "append") == "append"
+            and c.get("data_dir")
+            and _columns(T.StructType.fromJson(c["schema"])) == self._columns
+            for c in window
+        ):
+            return None
+        rows = table._read_rows(window)
+        if self.n_shards > 1:
+            try:  # a NULL key has no shard, as in the Spark-side filter
+                rows = [r for r in rows if r[key] is not None and self.owns(r[key])]
+            except TypeError:
+                return None
+        if self._strict:
+            return sorted(rows, key=lambda r: (*_et_order(r, et), r["_commit_version"]))
+        return sorted(rows, key=lambda r: (r["_commit_version"], *_et_order(r, et)))
+
+    def stats(self) -> dict[str, int]:
+        """``get_record`` hits and misses, refreshes by mode (``noop``,
+        ``delta``, ``full``), and the rows read and commits applied by the
+        last refresh."""
+        return dict(self._stats)
 
     def __len__(self) -> int:
         return len(self._records)
@@ -130,12 +197,13 @@ class ServingSession:
         return self.shard_of(key_value, self.n_shards) == self.shard
 
     def exists(self, key_value) -> bool:
-        return key_value in self._records
+        return _one_nan(key_value) in self._records
 
     def get_record(self, key_value) -> dict | None:
         """Latest record for one key — no Spark job; dict semantics match
         ``FeatureGroup.get_latest`` as of the snapshot version."""
-        rec = self._records.get(key_value)
+        rec = self._records.get(_one_nan(key_value))
+        self._stats["hits" if rec is not None else "misses"] += 1
         return dict(rec) if rec is not None else None
 
     def get_records(self, key_values: Iterable) -> dict[Any, dict | None]:

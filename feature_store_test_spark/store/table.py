@@ -795,36 +795,43 @@ class VersionedParquetTable:
         return result
 
     def _point_read(self, col: str, value) -> list[dict]:
-        """The rows of the latest snapshot where ``col == value``, each the
-        ``Row.asDict()`` that ``read(where=[(col, "=", value)]).collect()``
-        gives, ``_commit_version`` included — read in this process with
-        pyarrow, so no Spark job runs.
+        """The rows of the latest snapshot where ``col == value`` (see
+        ``_read_rows``): no Spark job runs."""
+        if value is None:
+            return []  # col = NULL holds for no row
+        return self._read_rows(self._visible_commits(None), [(col, "=", value)])
 
-        The files read are the stats candidates of every visible commit (a
-        commit that predates stats: its whole dir); inside them the filter
-        prunes row groups by their min/max. As in ``_scan``, a compaction's
-        files carry ``_commit_version`` and an append file's version is its
+    def _read_rows(self, commits: list[dict], where: list[tuple] | None = None) -> list[dict]:
+        """The rows of ``commits``, each the ``Row.asDict()`` that a Spark
+        read of them gives, ``_commit_version`` included — read in this
+        process with pyarrow, so no Spark job runs. ``where``: ANDed
+        ``(col, "=", value)`` terms, NaN equal to NaN as in Spark.
+
+        The files read are the stats candidates of each commit (a commit
+        that predates stats: its whole dir); inside them the filter prunes
+        row groups by their min/max. As in ``_scan``, a compaction's files
+        carry ``_commit_version`` and an append file's version is its
         data-dir name. Hive partition columns come from the file's
         ``col=value`` directories, and columns a file lacks (added later by
         schema evolution) read as NULL. Values convert as ``collect()``
         converts them (pyspark's Arrow-to-Row converter under the session's
         ``binaryAsBytes``: naive local timestamps, Row structs).
         """
-        if value is None:
-            return []  # col = NULL holds for no row
-        where = [(col, "=", value)]
+        where = where or []
         parts = {f.name: f.dataType for f in self.schema.fields if f.name in self.partition_cols}
         files = {}  # filesystem path -> its hive partition values
-        for c in self._visible_commits(None):
+        for c in commits:
             paths = self._candidate_files(c, where)
             for p in _data_files(c["data_dir"]) if paths is None else map(_fs_path, paths):
                 files[p] = _hive_values(p, c["data_dir"], parts)
-        # Spark has NaN = NaN; a partition column is matched on its directory
-        nan, expr = _is_nan(value), None
-        if col in parts:
-            files = {p: h for p, h in files.items() if h[col] == value or nan and _is_nan(h[col])}
-        else:
-            expr = pc.is_nan(pc.field(col)) if nan else pc.field(col) == value
+        expr = None
+        for col, _, value in where:
+            nan = _is_nan(value)  # Spark has NaN = NaN; a partition column matches on its directory
+            if col in parts:
+                files = {p: h for p, h in files.items() if h[col] == value or nan and _is_nan(h[col])}
+            else:
+                term = pc.is_nan(pc.field(col)) if nan else pc.field(col) == value
+                expr = term if expr is None else expr & term
         if not files:
             return []
         phys = T.StructType([f for f in self._compact_schema.fields if f.name not in parts])
@@ -856,10 +863,9 @@ class VersionedParquetTable:
         range contains a ``delete()``/``restore()``, removed rows are NOT
         reported here — use ``diff()`` for delete-aware consumption.
 
-        Incremental consumers (downstream training jobs, online-view
-        refreshers) read ONLY the new commits' directories — O(new data),
-        not O(table) — because the version filter selects whole data dirs
-        before any file IO.
+        Incremental consumers (downstream training jobs) read ONLY the new
+        commits' directories — O(new data), not O(table) — because the
+        version filter selects whole data dirs before any file IO.
         """
         until = (self.latest_version() or 0) if until_version is None else until_version
         window = [

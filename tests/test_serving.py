@@ -9,12 +9,25 @@ files) and answer each lookup from its snapshot, with no file IO.
 
 from __future__ import annotations
 
+import datetime as dt
 import time
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from feature_store_test_spark.store import ServingSession
-from tests.test_store import FG_SCHEMA, make_fg, row
+from feature_store_test_spark.store import FeatureStore, ServingSession
+from tests.test_store import (
+    _PR_CASES,
+    _PR_SCHEMA,
+    FG_SCHEMA,
+    _jobs,
+    _pr_rows,
+    _same_record,
+    make_fg,
+    row,
+    ts,
+)
 
 
 def test_serving_matches_get_latest(spark, tmp_path):
@@ -229,3 +242,131 @@ def test_serving_staleness_under_concurrent_upserts(spark, tmp_path):
     s.refresh()
     assert s.get_record(1)["latest_purchase_value"] == committed[-1]
     assert s.refresh() is False
+
+
+def _assert_same_records(got: dict, want: dict) -> None:
+    """Equal key for key (NaN keys by repr), each record by ``_same_record``."""
+    got = {repr(k): v for k, v in got.items()}
+    want = {repr(k): v for k, v in want.items()}
+    assert got.keys() == want.keys()
+    for k, w in want.items():
+        assert _same_record(got[k], w), (k, got[k], w)
+
+
+# the builders whose commits after the base are all plain appends with the
+# table's schema: refresh() folds them in without a Spark job
+_DELTA_CASES = {"flat", "hive", "hive_key", "pre_stats"}
+
+
+@pytest.mark.parametrize("case", list(_PR_CASES))
+def test_refresh_equals_a_fresh_snapshot(spark, tmp_path, case):
+    """After a base commit, every point-read layout's commits are replayed
+    into open sessions by ``refresh()``; each session's dict then equals a
+    fresh snapshot's, in parity and strict mode and for every shard of 3.
+    The base holds a NULL key, NULL event times and a key (14) whose event
+    time lies after every later row of it: a late event strict mode keeps."""
+    build, partition_cols, root = _PR_CASES[case]
+    fg = FeatureStore(spark, str(tmp_path / root)).create(
+        "fg", _PR_SCHEMA, "k", "et", partition_cols=partition_cols
+    )
+    late = (14, dt.datetime(2030, 1, 1), 1.0, "x", dt.date(2024, 2, 1), 9, None, None, None)
+    null_key = (None, None, 5.0, "x", dt.date(2024, 2, 2), 9, None, None, None)
+    fg.ingest(spark.createDataFrame([*_pr_rows(4), late, null_key], _PR_SCHEMA))
+    shards = [(1, 0), (3, 0), (3, 1), (3, 2)]
+    sessions = {
+        (strict, n, i): ServingSession(fg, strict, n_shards=n, shard=i)
+        for strict in (False, True)
+        for n, i in shards
+    }
+    build(spark, fg)
+    for strict in (False, True):
+        fresh = ServingSession(fg, strict)
+        for n, i in shards:
+            s = sessions[strict, n, i]
+            assert s.refresh() is True and s.stats()["delta"] == (case in _DELTA_CASES)
+            assert s.version == fresh.version
+            want = {
+                k: r for k, r in fresh._records.items()
+                if n == 1 or k is not None and ServingSession.shard_of(k, n) == i
+            }
+            _assert_same_records(s._records, want)
+    whole = sessions[False, 1, 0]
+    assert whole.exists(None) and whole.get_record(14)["et"] != late[1]
+    assert sessions[True, 1, 0].get_record(14)["et"] == late[1]
+
+
+def test_refresh_of_nan_and_null_keys(spark, tmp_path):
+    """A NaN key and a NULL key keep one entry each through a delta
+    refresh; strict mode keeps a stored record whose event time is later
+    (NULL lowest) and takes the newer commit's row on a tie. A sharded
+    session on a float key, which ``shard_of`` cannot route, re-snapshots
+    instead."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.DoubleType()),
+            T.StructField("et", T.TimestampType()),
+            T.StructField("v", T.DoubleType()),
+        ]
+    )
+    nan = float("nan")
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et")
+    fg.ingest(spark.createDataFrame([(nan, ts(2), 1.0), (1.5, ts(1), 1.0), (None, ts(1), 1.0)], schema))
+    parity, strict = ServingSession(fg), ServingSession(fg, strict_event_time=True)
+    sharded = ServingSession(fg, n_shards=2, shard=0)
+    window = [(nan, ts(1), 2.0), (None, None, 2.0), (1.5, ts(1), 2.0), (2.5, ts(3), 2.0)]
+    fg.ingest(spark.createDataFrame(window, schema))
+    for s in (parity, strict):
+        assert s.refresh() and s.stats()["delta"] == 1 and len(s) == 4
+        _assert_same_records(s._records, ServingSession(fg, s._strict)._records)
+    assert parity.get_record(nan)["v"] == 2.0 and parity.get_record(None)["v"] == 2.0
+    assert strict.get_record(nan)["v"] == 1.0 and strict.get_record(None)["v"] == 1.0
+    assert strict.get_record(1.5)["v"] == 2.0
+    assert sharded.refresh() and sharded.stats()["full"] == 2
+    _assert_same_records(sharded._records, ServingSession(fg, n_shards=2, shard=0)._records)
+
+
+def test_refresh_after_appends_runs_no_spark_job(spark, tmp_path):
+    """``refresh()`` after an ingest or an upsert reads in the driver (0
+    Spark jobs); after a compaction it re-snapshots with a Spark job."""
+    fg = make_fg(spark, tmp_path)
+    fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
+    s = ServingSession(fg)
+    fg.ingest(spark.createDataFrame([row(2, 2, 20.0, 20.0, 5.0, 5.0)], FG_SCHEMA))
+    assert _jobs(spark, "refresh-after-ingest", s.refresh) == 0
+    updates = spark.createDataFrame(
+        [(1, ts(3), 30.0)],
+        "customer_id long, purchase_timestamp timestamp, purchase_value double",
+    )
+    fg.upsert(updates, {"purchase_value": "purchase_value"})
+    assert _jobs(spark, "refresh-after-upsert", s.refresh) == 0
+    assert s.get_record(1) == fg.get_latest(1) and s.get_record(1)["avg_purchase_value"] == 20.0
+    fg.table.compact()
+    assert _jobs(spark, "refresh-after-compact", s.refresh) >= 1
+    assert s.stats()["delta"] == 2 and s.stats()["full"] == 2
+
+
+def test_serving_counters(spark, tmp_path):
+    """``stats()`` counts lookups, refreshes by mode and what the last
+    refresh applied, over two appends and a compaction."""
+    fg = make_fg(spark, tmp_path)
+
+    def ingest(day, keys):
+        fg.ingest(spark.createDataFrame([row(k, day, float(k), 1.0, 1.0, 1.0) for k in keys], FG_SCHEMA))
+
+    ingest(1, range(5))
+    s = ServingSession(fg)
+    zero = dict.fromkeys(("hits", "misses", "noop", "delta", "full", "rows", "commits"), 0)
+    assert s.stats() == {**zero, "full": 1, "rows": 5, "commits": 1}
+    ingest(2, range(3, 8))
+    ingest(3, [7, 8])
+    assert s.refresh() is True
+    assert s.stats() == {**zero, "full": 1, "delta": 1, "rows": 7, "commits": 2}
+    assert s.refresh() is False
+    assert s.get_records([0, 7, 8, 99])[99] is None
+    assert s.stats() == {**zero, "hits": 3, "misses": 1, "full": 1, "delta": 1, "noop": 1}
+    fg.table.compact()
+    assert s.refresh() is True
+    assert s.stats() == {
+        **zero, "hits": 3, "misses": 1, "full": 2, "delta": 1, "noop": 1, "rows": 9, "commits": 1
+    }
+    assert s.get_record(8)["purchase_timestamp"] == ts(3) and len(s) == 9
