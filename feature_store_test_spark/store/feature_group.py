@@ -122,14 +122,18 @@ class FeatureGroup:
         )
 
     # -- online store -------------------------------------------------------
+    def _max_of(self, strict_event_time: bool) -> list[str]:
+        """The "latest" order: the row with the largest tuple of these
+        columns wins. Parity: arrival (``_commit_version``), then event
+        time; strict: event time, then arrival."""
+        order = ["_commit_version", self.event_time_col]
+        return order[::-1] if strict_event_time else order
+
     def _latest(self, hist: DataFrame, strict_event_time: bool) -> DataFrame:
         """Latest row per key of ``hist`` via ``latest_per_key_agg``: a
         partial ``max_by`` per partition, so one candidate row per key per
         partition crosses the shuffle (see operators/latest.py)."""
-        if strict_event_time:
-            max_of = [self.event_time_col, "_commit_version"]
-        else:
-            max_of = ["_commit_version", self.event_time_col]
+        max_of = self._max_of(strict_event_time)
         return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
 
     def online_view(self, strict_event_time: bool = False) -> DataFrame:
@@ -158,29 +162,28 @@ class FeatureGroup:
     def exists(self, key_value) -> bool:
         """Does the key have a stored record? The driver-side read of
         ``get_latest``: no Spark job."""
-        return bool(self.table._point_read(self.key_col, key_value))
+        return self.get_latest(key_value) is not None
 
     def get_latest(self, key_value) -> dict | None:
         """Point read of the latest record (get_latest_features :184-204),
         equal to ``online_view().where(key == key_value)`` collected as a
         dict, or None for an absent key.
 
-        No Spark job: the commit log names each file and its key bounds, so
-        the key's rows are read in this process with pyarrow from the
-        stats-pruned files only (``table._point_read``). After
+        No Spark job: ``table._read_rows`` reads the snapshot in this
+        process with pyarrow, filtered to the key, and picks its latest row
+        in parity order (``_max_of``). The commit log names each file and
+        its key bounds, so only the stats-pruned files are read: after
         ``compact(cluster_by=[key])`` that is ~1 file; on unclustered
         appends it is every commit's files, each pruned to the row groups
-        whose key range holds the key. The latest row is picked in Python
-        in parity order: max of (``_commit_version``, event time), a NULL
-        event time below any value, as Spark orders the struct.
+        whose key range holds the key.
         """
-        rows = self.table._point_read(self.key_col, key_value)
-        if not rows:
-            return None
-        et = self.event_time_col
-        latest = max(rows, key=lambda r: (r["_commit_version"], r[et] is not None, r[et]))
-        del latest["_commit_version"]
-        return latest
+        if key_value is None:
+            return None  # key = NULL holds for no row
+        table, key = self.table, self.key_col
+        rows = table._read_rows(
+            table._visible_commits(None), key, self._max_of(False), [(key, "=", key_value)]
+        )
+        return rows[0] if rows else None
 
     # -- upsert (the feature-store core) ------------------------------------
     def upsert(self, updates: DataFrame, value_col_map: dict[str, str]) -> int | None:

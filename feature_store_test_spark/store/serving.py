@@ -7,27 +7,29 @@ that latency tier to AWS. ``FeatureGroup.get_latest`` runs no Spark job
 either, but reads the key's rows from every stats-candidate parquet file
 with pyarrow: tens of milliseconds per call on an unclustered history, and
 it grows with the number of commits. ``ServingSession`` serves the request
-path: ONE Spark job snapshots the online view, then every lookup is a
-local dict probe (microseconds, no IO).
+path: it reads the online view once into a dict, in this process with the
+same reader (no Spark job), then every lookup is a local dict probe
+(microseconds, no IO).
 
 Scale design (100 TB): the snapshot is the ONLINE view — one row per key,
 never history — so its size is key cardinality, not event volume. Beyond
 one process, the view shards horizontally: a fleet of N serving processes
 each construct ``ServingSession(fg, n_shards=N, shard=i)`` and hold only
 the keys whose ``shard_of(key, N)`` equals ``i`` (~1/N of the view each).
-The shard function is md5-based so a router — which has no Spark — computes
-the same shard id client-side (``ServingSession.shard_of``) to address the
-right process; the Spark-side filter is the identical expression, so the
-fleet partitions the key space exactly. What does NOT scale is
-snapshotting history or using this for analytical scans — those stay
-Spark-side.
+The shard function is md5-based and pure Python, so a router computes the
+same shard id client-side (``ServingSession.shard_of``) to address the
+right process, and each session filters its snapshot with that same
+function, so the fleet partitions the key space exactly. What does NOT
+scale is snapshotting history or using this for analytical scans — those
+stay Spark-side.
 
 Staleness contract: reads are as-of the snapshot's commit version
 (``version``), exactly like any online store replicating asynchronously
 from a write-ahead log. ``refresh()`` replays only the commits since the
-snapshot into the dict, in this process: the dict is the checkpoint and
-the new commits the log tail, as in Delta Lake's snapshot read. Only a
-history rewrite (compaction, delete, restore) re-snapshots with Spark.
+snapshot into the dict: the dict is the checkpoint and the new commits the
+log tail, as in Delta Lake's snapshot read, and both are read by the one
+driver-side reader. A history rewrite (compaction, delete, restore) re-reads
+the whole snapshot the same way.
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ from __future__ import annotations
 import hashlib
 from typing import Any, Iterable
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_store_test_spark.store.feature_group import FeatureGroup
@@ -88,11 +89,12 @@ class ServingSession:
 
         Python ``str()`` and Spark's cast agree only for int and str;
         they diverge for bool ('True' vs 'true') and for float/decimal/
-        timestamp formatting — a router using ``str()`` there would
-        compute a different shard than the one holding the key and every
-        lookup would miss. bool is normalized explicitly; other key
-        types are rejected so the divergence is an error at routing
-        time, not a silent 100% miss rate."""
+        timestamp formatting — a router that hashed either rendering
+        against a fleet that hashed the other would compute a different
+        shard than the one holding the key, and every lookup would miss.
+        bool is normalized explicitly; other key types are rejected, so a
+        sharded session on such a key raises at its first refresh instead
+        of serving a shard no router can address."""
         if isinstance(key_value, bool):
             return "true" if key_value else "false"
         if isinstance(key_value, (int, str)):
@@ -100,94 +102,82 @@ class ServingSession:
         raise TypeError(
             "sharded serving keys must be int, str, or bool — "
             f"{type(key_value).__name__} keys render differently in "
-            "Python str() vs Spark CAST(... AS STRING), so the router "
-            "and the snapshot filter would disagree on shard ownership"
+            "Python str() vs Spark CAST(... AS STRING), so routers "
+            "could not agree on shard ownership"
         )
 
     @classmethod
     def shard_of(cls, key_value, n_shards: int) -> int:
         """Shard id for a key — pure Python, so request routers compute it
-        without Spark. Matches the snapshot filter bit-for-bit: first 15
-        md5 hex digits of the Spark-cast string rendering as an integer,
-        mod ``n_shards`` (15 hex digits = 60 bits, inside BIGINT for the
-        SQL side)."""
+        without Spark, and the one hash a session's ``refresh`` filters
+        by: first 15 md5 hex digits of the Spark-cast string rendering as
+        an integer, mod ``n_shards`` (15 hex digits = 60 bits, inside
+        BIGINT, so SQL ``pmod(conv(substring(md5(CAST(k AS STRING)), 1,
+        15), 16, 10), n)`` gives the same id)."""
         digest = hashlib.md5(cls._key_str(key_value).encode()).hexdigest()[:15]
         return int(digest, 16) % n_shards
 
-    def _shard_filter(self, key: str) -> F.Column:
-        """The JVM-side twin of ``shard_of`` (conv(md5-prefix) % N)."""
-        h = F.conv(
-            F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10
-        ).cast("bigint")
-        return F.pmod(h, F.lit(self.n_shards)) == F.lit(self.shard)
-
     def refresh(self, force: bool = False) -> bool:
         """Bring this shard of the snapshot up to the latest commit; False
-        when the version was unchanged (and not ``force``).
+        when the version was unchanged (and not ``force``). No Spark job
+        runs: ``table._read_rows`` picks the latest row per key in this
+        process, in ``online_view``'s order.
 
         If every commit since the snapshot is an append (ingest, merge)
-        with the snapshot's schema, their rows are read in this process (no
-        Spark job) and folded in ``online_view``'s order; in strict mode a
-        stored record with a greater event time (NULL lowest) stays. Else
-        — the first snapshot, ``force``, a compaction, delete, restore,
-        vacuum or schema change, or a sharded session on a key type
-        ``shard_of`` rejects — the online view is re-collected by Spark.
+        with the snapshot's schema, only those commits are read, and their
+        picked rows are folded into a copy of the dict: in parity mode the
+        newer commit's row wins; in strict mode a stored record with a
+        greater event time (NULL lowest) stays. Else — the first snapshot,
+        ``force``, a compaction, delete, restore, vacuum or schema change —
+        the whole snapshot is read into an empty dict. A sharded session
+        keeps the keys ``owns`` accepts (NULL keys belong to no shard); a
+        key type ``shard_of`` rejects raises TypeError.
         """
-        current = self._fg.table.latest_version()
-        stats, key, et = self._stats, self._fg.key_col, self._fg.event_time_col
+        table, key, et = self._fg.table, self._fg.key_col, self._fg.event_time_col
+        current, stats = table.latest_version(), self._stats
         if not force and self.version == current:
             stats.update(noop=stats["noop"] + 1, rows=0, commits=0)
             return False
-        rows = None if force or self.version is None else self._window_rows(current)
-        mode = "full" if rows is None else "delta"
-        if rows is None:
-            self._columns = _columns(self._fg.table.schema)
-            view = self._fg.online_view(strict_event_time=self._strict)
-            if self.n_shards > 1:
-                view = view.where(self._shard_filter(key))
-            rows = view.collect()
-            self._records = {_one_nan(r[key]): r.asDict() for r in rows}
-        else:  # fold into a copy: a concurrent reader sees either version whole
-            records = dict(self._records)
-            for r in rows:  # ascending, so the latest row of a key lands last
-                del r["_commit_version"]
-                k = _one_nan(r[key])
-                old = records.get(k)
-                if not self._strict or old is None or _et_order(old, et) <= _et_order(r, et):
-                    records[k] = r
-            self._records = records
-        commits = (current or 0) - (self.version or 0)
-        stats.update({mode: stats[mode] + 1, "rows": len(rows), "commits": commits})
+        window = None if force or self.version is None else self._window(current)
+        # a delta folds into a copy: a concurrent reader sees either version whole
+        mode, records = ("full", {}) if window is None else ("delta", dict(self._records))
+        if window is None:
+            self._columns, window = _columns(table.schema), table._visible_commits(current)
+        rows = table._read_rows(window, key, self._fg._max_of(self._strict))
+        if self.n_shards > 1:
+            rows = [r for r in rows if r[key] is not None and self.owns(r[key])]
+        for r in rows:
+            k = _one_nan(r[key])
+            old = records.get(k)
+            if not self._strict or old is None or _et_order(old, et) <= _et_order(r, et):
+                records[k] = r
+        self._records = records
+        stats.update({mode: stats[mode] + 1, "rows": len(rows), "commits": self._lag(current)})
         self.version = current
         return True
 
-    def _window_rows(self, current: int) -> list[dict] | None:
-        """This shard's rows of the commits in (``version``, ``current``]
-        in ``online_view``'s order, or None if ``refresh`` must re-collect."""
-        table, key, et = self._fg.table, self._fg.key_col, self._fg.event_time_col
+    def _window(self, current: int) -> list[dict] | None:
+        """The commits in (``version``, ``current``], or None unless each is
+        a plain append with the snapshot's schema."""
+        table = self._fg.table
         window = [table._load_commit(v) for v in table.versions() if self.version < v <= current]
-        if _columns(table.schema) != self._columns or not all(
-            c.get("type", "append") == "append"
-            and c.get("data_dir")
+        plain = _columns(table.schema) == self._columns and all(
+            c.get("type", "append") == "append" and c.get("data_dir")
             and _columns(T.StructType.fromJson(c["schema"])) == self._columns
             for c in window
-        ):
-            return None
-        rows = table._read_rows(window)
-        if self.n_shards > 1:
-            try:  # a NULL key has no shard, as in the Spark-side filter
-                rows = [r for r in rows if r[key] is not None and self.owns(r[key])]
-            except TypeError:
-                return None
-        if self._strict:
-            return sorted(rows, key=lambda r: (*_et_order(r, et), r["_commit_version"]))
-        return sorted(rows, key=lambda r: (r["_commit_version"], *_et_order(r, et)))
+        )
+        return window if plain else None
 
     def stats(self) -> dict[str, int]:
         """``get_record`` hits and misses, refreshes by mode (``noop``,
-        ``delta``, ``full``), and the rows read and commits applied by the
-        last refresh."""
-        return dict(self._stats)
+        ``delta``, ``full``), the records picked (one per key) and commits
+        applied by the last refresh, and ``lag``: the commits this
+        snapshot is behind the table's latest version, read now."""
+        return {**self._stats, "lag": self._lag(self._fg.table.latest_version())}
+
+    def _lag(self, version: int | None) -> int:
+        """The commits from this snapshot's version up to ``version``."""
+        return (version or 0) - (self.version or 0)
 
     def __len__(self) -> int:
         return len(self._records)

@@ -71,6 +71,7 @@ import urllib.parse
 import uuid
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
@@ -78,7 +79,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.conversion import ArrowTableToRowsConversion
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 _LOG_DIR = "_commits"
 _DATA_DIR = "data"
@@ -192,6 +193,26 @@ def _fs_path(path: str) -> str:
 
 # the data dir of an append commit: v<version>-<8 hex>, see _write_data
 _VERSION_DIR = r"/v(\d{10})-[0-9a-f]{8}/"
+
+
+def _latest_rows(got: pa.Table, key: str, max_of: list[str]) -> pa.Table:
+    """One row of ``got`` per ``key`` value: the one with the largest
+    ``max_of`` tuple, compared as Spark compares a struct (NULL lowest, NaN
+    highest). As in a Spark GROUP BY, NULL keys are one group, NaN keys
+    another, and -0.0 groups with 0.0."""
+    k = got[key]
+    k = pc.add(k, 0.0) if pa.types.is_floating(k.type) else k  # -0.0 + 0.0 is 0.0
+    group = pc.dictionary_encode(k.combine_chunks(), null_encoding="encode").indices
+    by = {"g": group}  # any order of the groups keeps each one contiguous
+    for i, c in enumerate(max_of):
+        if pa.types.is_floating(got[c].type):  # Arrow sorts NaN with NULL
+            by[f"nan{i}"] = pc.fill_null(pc.is_nan(got[c]), False)
+        by[f"v{i}"] = got[c]
+    sort_keys = [(name, "descending") for name in by]
+    order = pc.sort_indices(pa.table(by), sort_keys=sort_keys, null_placement="at_end")
+    g = group.take(order)
+    first = pa.concat_arrays([pa.array([True]), pc.not_equal(g[1:], g[:-1])])
+    return got.take(order.filter(first))
 
 
 def _file_entry(path: str, data_dir: str, stat_types: dict) -> dict | None:
@@ -794,26 +815,25 @@ class VersionedParquetTable:
             result = result.where(cond)
         return result
 
-    def _point_read(self, col: str, value) -> list[dict]:
-        """The rows of the latest snapshot where ``col == value`` (see
-        ``_read_rows``): no Spark job runs."""
-        if value is None:
-            return []  # col = NULL holds for no row
-        return self._read_rows(self._visible_commits(None), [(col, "=", value)])
-
-    def _read_rows(self, commits: list[dict], where: list[tuple] | None = None) -> list[dict]:
-        """The rows of ``commits``, each the ``Row.asDict()`` that a Spark
-        read of them gives, ``_commit_version`` included — read in this
-        process with pyarrow, so no Spark job runs. ``where``: ANDed
+    def _read_rows(
+        self, commits: list[dict], key: str, max_of: list[str], where: list[tuple] | None = None
+    ) -> list[dict]:
+        """The latest row per ``key`` value of ``commits``: the row with the
+        largest ``max_of`` tuple (``FeatureGroup._max_of``), each the
+        ``Row.asDict()`` that collecting the online view gives. It is read in
+        this process with pyarrow, so no Spark job runs. ``where``: ANDed
         ``(col, "=", value)`` terms, NaN equal to NaN as in Spark.
 
         The files read are the stats candidates of each commit (a commit
         that predates stats: its whole dir); inside them the filter prunes
         row groups by their min/max. As in ``_scan``, a compaction's files
         carry ``_commit_version`` and an append file's version is its
-        data-dir name. Hive partition columns come from the file's
+        data-dir name; hive partition columns come from the file's
         ``col=value`` directories, and columns a file lacks (added later by
-        schema evolution) read as NULL. Values convert as ``collect()``
+        schema evolution) read as NULL. Version and partition values are
+        attached as Arrow columns and the pick (``_latest_rows``) runs in
+        Arrow, so a key or event time that is a partition column takes part
+        in it and only the picked rows convert to Python, as ``collect()``
         converts them (pyspark's Arrow-to-Row converter under the session's
         ``binaryAsBytes``: naive local timestamps, Row structs).
         """
@@ -832,25 +852,31 @@ class VersionedParquetTable:
             else:
                 term = pc.is_nan(pc.field(col)) if nan else pc.field(col) == value
                 expr = term if expr is None else expr & term
-        if not files:
-            return []
         phys = T.StructType([f for f in self._compact_schema.fields if f.name not in parts])
         got = ds.dataset(list(files), schema=to_arrow_schema(phys), format="parquet").to_table(
             columns=[*phys.fieldNames(), "__filename"], filter=expr
         )
+        if not got.num_rows:
+            return []
+        paths = list(files)
+        at = pc.index_in(got["__filename"], value_set=pa.array(paths))  # each row's file
+        versions = [int(re.search(_VERSION_DIR, p).group(1)) for p in paths]
+        got = got.set_column(
+            got.schema.get_field_index("_commit_version"), "_commit_version",
+            pc.coalesce(got["_commit_version"], pa.array(versions, pa.int32()).take(at)),
+        )
+        for col, dtype in parts.items():
+            values = [files[p][col] for p in paths]
+            if isinstance(dtype, T.TimestampType):  # naive local time here, UTC in Arrow
+                values = [v and v.astimezone(_dt.timezone.utc) for v in values]
+            got = got.append_column(col, pa.array(values, to_arrow_type(dtype)).take(at))
+        names = self.schema.fieldNames()
+        got = _latest_rows(got, key, max_of).select(names)
         as_bytes = self.spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")
         rows = ArrowTableToRowsConversion.convert(
-            got.drop_columns("__filename"), phys, return_as_tuples=True,
-            binary_as_bytes=as_bytes.lower() == "true",
+            got, self.schema, return_as_tuples=True, binary_as_bytes=as_bytes.lower() == "true"
         )
-        cols = [*self.schema.fieldNames(), "_commit_version"]
-        out = []
-        for values, path in zip(rows, got["__filename"].to_pylist()):
-            r = {**dict(zip(phys.fieldNames(), values)), **files[path]}
-            if r["_commit_version"] is None:
-                r["_commit_version"] = int(re.search(_VERSION_DIR, path).group(1))
-            out.append({c: r[c] for c in cols})
-        return out
+        return [dict(zip(names, values)) for values in rows]
 
     def changes(
         self, since_version: int, until_version: int | None = None

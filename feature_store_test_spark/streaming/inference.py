@@ -167,9 +167,11 @@ class InferencePipeline:
                 )
             )
 
-        online = self.feature_group.online_view(
-            strict_event_time=self.strict_event_time
-        ).select(
+        # the seed is the online view's row of each key in the batch: the
+        # semi join drops other keys' history before the latest-row aggregate
+        fg = self.feature_group
+        hist = fg.offline_history().join(ok.select("customer_id"), "customer_id", "left_semi")
+        online = fg._latest(hist, self.strict_event_time).select(
             F.col("customer_id"),
             F.col("avg_purchase_value").alias("seed_avg_pv"),
             F.col("avg_loyalty_score").alias("seed_avg_ls"),

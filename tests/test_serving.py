@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_store_test_spark.store import FeatureStore, ServingSession
+from feature_store_test_spark.store.serving import _one_nan
 from tests.test_store import (
     _PR_CASES,
     _PR_SCHEMA,
@@ -116,7 +117,7 @@ def test_sharded_serving_partitions_key_space(spark, tmp_path):
             assert s.owns(k)
             assert s.get_record(k) == whole.get_record(k)
     assert seen == set(range(n_keys))
-    # client-side routing agrees with the Spark-side filter for every key
+    # client-side routing finds each key in exactly the shard that holds it
     for k in range(n_keys):
         sid = ServingSession.shard_of(k, n_shards)
         assert shards[sid].exists(k)
@@ -258,13 +259,24 @@ def _assert_same_records(got: dict, want: dict) -> None:
 _DELTA_CASES = {"flat", "hive", "hive_key", "pre_stats"}
 
 
+def _view_records(view: list, key: str, n: int = 1, i: int = 0) -> dict:
+    """The collected online view keyed as a session keys it, limited to
+    shard ``i`` of ``n`` (a NULL key belongs to no shard)."""
+    return {
+        _one_nan(r[key]): r.asDict()
+        for r in view
+        if n == 1 or r[key] is not None and ServingSession.shard_of(r[key], n) == i
+    }
+
+
 @pytest.mark.parametrize("case", list(_PR_CASES))
 def test_refresh_equals_a_fresh_snapshot(spark, tmp_path, case):
     """After a base commit, every point-read layout's commits are replayed
-    into open sessions by ``refresh()``; each session's dict then equals a
-    fresh snapshot's, in parity and strict mode and for every shard of 3.
-    The base holds a NULL key, NULL event times and a key (14) whose event
-    time lies after every later row of it: a late event strict mode keeps."""
+    into open sessions by ``refresh()``, and a new session reads the whole
+    layout; both dicts equal Spark's online view, in parity and strict
+    mode and for every shard of 3. The base holds a NULL key, NULL event
+    times and a key (14) whose event time lies after every later row of
+    it: a late event strict mode keeps."""
     build, partition_cols, root = _PR_CASES[case]
     fg = FeatureStore(spark, str(tmp_path / root)).create(
         "fg", _PR_SCHEMA, "k", "et", partition_cols=partition_cols
@@ -280,16 +292,14 @@ def test_refresh_equals_a_fresh_snapshot(spark, tmp_path, case):
     }
     build(spark, fg)
     for strict in (False, True):
-        fresh = ServingSession(fg, strict)
+        view = fg.online_view(strict).collect()
         for n, i in shards:
+            want = _view_records(view, "k", n, i)
             s = sessions[strict, n, i]
             assert s.refresh() is True and s.stats()["delta"] == (case in _DELTA_CASES)
-            assert s.version == fresh.version
-            want = {
-                k: r for k, r in fresh._records.items()
-                if n == 1 or k is not None and ServingSession.shard_of(k, n) == i
-            }
+            assert s.version == fg.table.latest_version()
             _assert_same_records(s._records, want)
+            _assert_same_records(ServingSession(fg, strict, n_shards=n, shard=i)._records, want)
     whole = sessions[False, 1, 0]
     assert whole.exists(None) and whole.get_record(14)["et"] != late[1]
     assert sessions[True, 1, 0].get_record(14)["et"] == late[1]
@@ -299,8 +309,7 @@ def test_refresh_of_nan_and_null_keys(spark, tmp_path):
     """A NaN key and a NULL key keep one entry each through a delta
     refresh; strict mode keeps a stored record whose event time is later
     (NULL lowest) and takes the newer commit's row on a tie. A sharded
-    session on a float key, which ``shard_of`` cannot route, re-snapshots
-    instead."""
+    session on a float key, which ``shard_of`` cannot route, raises."""
     schema = T.StructType(
         [
             T.StructField("k", T.DoubleType()),
@@ -312,25 +321,72 @@ def test_refresh_of_nan_and_null_keys(spark, tmp_path):
     fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et")
     fg.ingest(spark.createDataFrame([(nan, ts(2), 1.0), (1.5, ts(1), 1.0), (None, ts(1), 1.0)], schema))
     parity, strict = ServingSession(fg), ServingSession(fg, strict_event_time=True)
-    sharded = ServingSession(fg, n_shards=2, shard=0)
     window = [(nan, ts(1), 2.0), (None, None, 2.0), (1.5, ts(1), 2.0), (2.5, ts(3), 2.0)]
     fg.ingest(spark.createDataFrame(window, schema))
     for s in (parity, strict):
         assert s.refresh() and s.stats()["delta"] == 1 and len(s) == 4
-        _assert_same_records(s._records, ServingSession(fg, s._strict)._records)
+        _assert_same_records(s._records, _view_records(fg.online_view(s._strict).collect(), "k"))
     assert parity.get_record(nan)["v"] == 2.0 and parity.get_record(None)["v"] == 2.0
     assert strict.get_record(nan)["v"] == 1.0 and strict.get_record(None)["v"] == 1.0
     assert strict.get_record(1.5)["v"] == 2.0
-    assert sharded.refresh() and sharded.stats()["full"] == 2
-    _assert_same_records(sharded._records, ServingSession(fg, n_shards=2, shard=0)._records)
+    with pytest.raises(TypeError, match="int, str, or bool"):
+        ServingSession(fg, n_shards=2, shard=0)
+
+
+def test_snapshot_picks_on_partition_columns(spark, tmp_path):
+    """With the event time as the hive partition column, the timestamp
+    directory values take part in the pick and convert as ``collect()``
+    converts them; float keys group as Spark groups them (one NaN group,
+    -0.0 with 0.0). Sessions and ``get_latest`` equal the online view."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.FloatType()),
+            T.StructField("et", T.TimestampType()),
+            T.StructField("v", T.DoubleType()),
+        ]
+    )
+    nan = float("nan")
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et", partition_cols=["et"])
+    fg.ingest(spark.createDataFrame([(1.0, ts(5), 1.0), (2.0, None, 1.0), (-0.0, ts(2), 1.0), (nan, ts(2), 1.0)], schema))
+    fg.ingest(spark.createDataFrame([(1.0, ts(3), 2.0), (2.0, ts(1), 2.0), (0.0, ts(1), 2.0), (nan, None, 2.0)], schema))
+    for strict in (False, True):
+        want = _view_records(fg.online_view(strict).collect(), "k")
+        _assert_same_records(ServingSession(fg, strict)._records, want)
+    want = _view_records(fg.online_view().collect(), "k")
+    assert len(want) == 4 and want[2.0]["et"] == ts(1) and want[_one_nan(nan)]["et"] is None
+    for k in (1.0, 2.0, 0.0, -0.0, nan):
+        assert _same_record(fg.get_latest(k), want[_one_nan(k)]), k
+
+
+def test_snapshot_orders_float_event_times_as_spark(spark, tmp_path):
+    """A float event time orders as Spark's struct order does in both
+    modes: NaN above every value, NULL below."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("et", T.DoubleType()),
+            T.StructField("v", T.DoubleType()),
+        ]
+    )
+    nan = float("nan")
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et")
+    fg.ingest(spark.createDataFrame([(1, nan, 1.0), (2, None, 1.0), (3, 1.0, 1.0)], schema))
+    fg.ingest(spark.createDataFrame([(1, 5.0, 2.0), (2, 0.0, 2.0), (3, nan, 2.0)], schema))
+    for strict in (False, True):
+        want = _view_records(fg.online_view(strict).collect(), "k")
+        _assert_same_records(ServingSession(fg, strict)._records, want)
+    assert want[1]["v"] == 1.0 and want[2]["v"] == 2.0 and want[3]["v"] == 2.0
 
 
 def test_refresh_after_appends_runs_no_spark_job(spark, tmp_path):
-    """``refresh()`` after an ingest or an upsert reads in the driver (0
-    Spark jobs); after a compaction it re-snapshots with a Spark job."""
+    """No step of a session's life runs a Spark job: construction, a
+    refresh after an ingest, an upsert, a compaction, a delete and a
+    restore, ``refresh(force=True)``, and a sharded session."""
     fg = make_fg(spark, tmp_path)
     fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
-    s = ServingSession(fg)
+    made = []
+    assert _jobs(spark, "serving-construct", lambda: made.append(ServingSession(fg))) == 0
+    s = made[0]
     fg.ingest(spark.createDataFrame([row(2, 2, 20.0, 20.0, 5.0, 5.0)], FG_SCHEMA))
     assert _jobs(spark, "refresh-after-ingest", s.refresh) == 0
     updates = spark.createDataFrame(
@@ -341,13 +397,23 @@ def test_refresh_after_appends_runs_no_spark_job(spark, tmp_path):
     assert _jobs(spark, "refresh-after-upsert", s.refresh) == 0
     assert s.get_record(1) == fg.get_latest(1) and s.get_record(1)["avg_purchase_value"] == 20.0
     fg.table.compact()
-    assert _jobs(spark, "refresh-after-compact", s.refresh) >= 1
-    assert s.stats()["delta"] == 2 and s.stats()["full"] == 2
+    assert _jobs(spark, "refresh-after-compact", s.refresh) == 0
+    compacted = fg.table.latest_version()
+    fg.table.delete("customer_id = 2")
+    assert _jobs(spark, "refresh-after-delete", s.refresh) == 0 and not s.exists(2)
+    fg.table.restore(compacted)
+    assert _jobs(spark, "refresh-after-restore", s.refresh) == 0
+    assert s.get_record(2) == fg.get_latest(2) is not None
+    assert _jobs(spark, "refresh-force", lambda: s.refresh(force=True)) == 0
+    assert s.stats()["delta"] == 2 and s.stats()["full"] == 5
+    assert _jobs(spark, "serving-sharded", lambda: made.append(ServingSession(fg, n_shards=2, shard=1))) == 0
+    assert all(made[1].get_record(k) == s.get_record(k) for k in (1, 2) if made[1].owns(k))
 
 
 def test_serving_counters(spark, tmp_path):
-    """``stats()`` counts lookups, refreshes by mode and what the last
-    refresh applied, over two appends and a compaction."""
+    """``stats()`` counts lookups, refreshes by mode, what the last refresh
+    applied (the records it picked, one per key) and the version lag,
+    over two appends and a compaction."""
     fg = make_fg(spark, tmp_path)
 
     def ingest(day, keys):
@@ -355,16 +421,18 @@ def test_serving_counters(spark, tmp_path):
 
     ingest(1, range(5))
     s = ServingSession(fg)
-    zero = dict.fromkeys(("hits", "misses", "noop", "delta", "full", "rows", "commits"), 0)
+    zero = dict.fromkeys(("hits", "misses", "noop", "delta", "full", "rows", "commits", "lag"), 0)
     assert s.stats() == {**zero, "full": 1, "rows": 5, "commits": 1}
     ingest(2, range(3, 8))
     ingest(3, [7, 8])
+    assert s.stats()["lag"] == 2
     assert s.refresh() is True
-    assert s.stats() == {**zero, "full": 1, "delta": 1, "rows": 7, "commits": 2}
+    assert s.stats() == {**zero, "full": 1, "delta": 1, "rows": 6, "commits": 2}
     assert s.refresh() is False
     assert s.get_records([0, 7, 8, 99])[99] is None
     assert s.stats() == {**zero, "hits": 3, "misses": 1, "full": 1, "delta": 1, "noop": 1}
     fg.table.compact()
+    assert s.stats()["lag"] == 1
     assert s.refresh() is True
     assert s.stats() == {
         **zero, "hits": 3, "misses": 1, "full": 2, "delta": 1, "noop": 1, "rows": 9, "commits": 1
