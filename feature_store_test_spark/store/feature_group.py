@@ -1,7 +1,9 @@
 """Feature groups: the reference's store API re-expressed set-oriented.
 
 Reference surface (/root/reference/core/feature_store_manager.py):
-    create_feature_group    :72-106   → FeatureStore.create / FeatureGroup
+    create_feature_group    :72-106   → FeatureStore.create / FeatureGroup (one
+                                        unpartitioned commit-logged table;
+                                        files prune by per-file stats)
     ingest_features         :108-119  → FeatureGroup.ingest (one commit, not
                                         per-row PutRecord with max_workers=1)
     build_training_dataset  :121-153  → FeatureGroup.training_dataset (spark.sql)
@@ -82,43 +84,6 @@ class FeatureGroup:
         return self.spark.sql(
             f"SELECT {col_list} FROM {view} "
             f"ORDER BY {self.key_col}, {self.event_time_col} DESC"
-        )
-
-    def changes(
-        self, since_version: int, until_version: int | None = None
-    ) -> DataFrame:
-        """Key-level change data feed over the offline history: rows
-        committed in versions (since, until], each tagged ``_change_type``
-        = 'insert' (first version this key ever appeared in) or 'update'
-        (key existed in an earlier commit) — the Delta CDF contract for an
-        append-only upsert log, for downstream consumers such as
-        incremental retraining. ``ServingSession.refresh`` does not use it:
-        it reads the new commits in the driver with no Spark job, and needs
-        no insert/update split.
-
-        Scale: the changed rows come from reading ONLY the new commits
-        (table.changes); the insert/update classification needs each key's
-        first-ever version, obtained from a keys-only projection of
-        history aggregated min(_commit_version) — a shuffle of (key,
-        version) pairs, not feature payloads, then a broadcast-friendly
-        join onto the (small) change slice.
-        """
-        delta = self.table.changes(since_version, until_version)
-        first_seen = (
-            self.table.read(as_of_version=until_version)
-            .select(self.key_col, "_commit_version")
-            .groupBy(self.key_col)
-            .agg(F.min("_commit_version").alias("__first_v"))
-        )
-        return (
-            delta.join(first_seen, on=self.key_col, how="left")
-            .withColumn(
-                "_change_type",
-                F.when(
-                    F.col("_commit_version") == F.col("__first_v"), F.lit("insert")
-                ).otherwise(F.lit("update")),
-            )
-            .drop("__first_v")
         )
 
     # -- online store -------------------------------------------------------
@@ -308,19 +273,15 @@ class FeatureStore:
         schema: T.StructType,
         key_col: str,
         event_time_col: str,
-        partition_cols: list[str] | None = None,
     ) -> FeatureGroup:
-        """``partition_cols``: optional low-cardinality schema columns (e.g.
-        a derived event DATE) for hive-partitioned storage — time-range
-        reads then prune whole directories (SURVEY §4 'partition pruning')."""
+        """A feature group stored as one ``VersionedParquetTable`` under
+        ``base_path/name``. The table has one file layout, unpartitioned:
+        reads prune files by the per-file min/max stats in the commit log,
+        and ``table.compact(cluster_by=[key_col])`` makes a point read's
+        stats select ~1 file."""
         if key_col not in schema.fieldNames() or event_time_col not in schema.fieldNames():
             raise ValueError("key/event-time column must be part of the schema")
-        table = VersionedParquetTable(
-            self.spark,
-            os.path.join(self.base_path, name),
-            schema,
-            partition_cols=partition_cols,
-        )
+        table = VersionedParquetTable(self.spark, os.path.join(self.base_path, name), schema)
         fg = FeatureGroup(
             spark=self.spark,
             name=name,

@@ -14,10 +14,13 @@ environment) gives us:
   where "every put is a new version row").
 
 Scale notes: data files are written by executors (full parallelism); only
-the tiny commit JSON is driver-side. Reads hand Spark a list of parquet
-files, so partition pruning / predicate pushdown work unchanged. A real
-deployment would swap this class for Delta/Iceberg with zero API change —
-documented equivalence, same plans.
+the tiny commit JSON is driver-side. There is one file layout: every commit
+is a flat data dir of part files, and reads hand Spark one list of parquet
+files, so predicate pushdown works unchanged. Files are pruned by the
+per-file min/max stats in the log, not by directory discovery; a layout
+that serves a read pattern is a clustered ``compact(cluster_by=...)`` or
+``compact(zorder_by=...)``. A real deployment would swap this class for
+Delta/Iceberg with zero API change — documented equivalence, same plans.
 
 Delta/Iceberg adapter seam (the swap path when the packages are
 available — neither ships in this environment). Every public API here
@@ -60,17 +63,14 @@ an adapter passes the same suite.
 from __future__ import annotations
 
 import datetime as _dt
-import functools
 import json
 import math
 import os
 import re
 import tempfile
 import time
-import urllib.parse
 import uuid
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -79,7 +79,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.conversion import ArrowTableToRowsConversion
-from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _LOG_DIR = "_commits"
 _DATA_DIR = "data"
@@ -117,26 +117,6 @@ def _is_nan(v) -> bool:
     return isinstance(v, float) and math.isnan(v)
 
 
-def _partition_value(raw: str, dtype: T.DataType):
-    """A hive directory value (``col=raw``) as ``collect()`` returns it."""
-    if raw == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    v = urllib.parse.unquote(raw)
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int(v)
-    if isinstance(dtype, T.FloatType):
-        return float(np.float32(v))
-    if isinstance(dtype, T.DoubleType):
-        return float(v)
-    if isinstance(dtype, T.BooleanType):
-        return v == "true"
-    if isinstance(dtype, T.TimestampType):
-        return _dt.datetime.fromisoformat(v)
-    if isinstance(dtype, T.DateType):
-        return _dt.date.fromisoformat(v)
-    return v
-
-
 def _footer_bounds(md: pq.FileMetaData, col: int):
     """(min, max) of leaf column ``col`` over every row group of a parquet
     footer, (None, None) when every value is NULL, or None when a bound is
@@ -162,25 +142,12 @@ def _naive(v):
     return v
 
 
-def _hive_values(path: str, data_dir: str, types: dict) -> dict:
-    """The ``col=value`` directories between ``data_dir`` and the file at
-    ``path``, typed by ``types`` (partition column -> Spark type)."""
-    out = {}
-    for part in os.path.relpath(path, data_dir).split(os.sep)[:-1]:
-        name, _, raw = part.partition("=")
-        name = urllib.parse.unquote(name)
-        if name in types:
-            out[name] = _partition_value(raw, types[name])
-    return out
-
-
 def _data_files(data_dir: str) -> list[str]:
-    """Absolute paths of the part files under ``data_dir``, sorted."""
+    """Absolute paths of the part files in ``data_dir``, sorted."""
     root = os.path.abspath(data_dir)
     return sorted(
-        os.path.join(d, n)
-        for d, _, names in os.walk(root)
-        for n in names
+        os.path.join(root, n)
+        for n in os.listdir(root)
         if not n.startswith(("_", "."))  # _SUCCESS, .crc: not data
     )
 
@@ -215,27 +182,22 @@ def _latest_rows(got: pa.Table, key: str, max_of: list[str]) -> pa.Table:
     return got.take(order.filter(first))
 
 
-def _file_entry(path: str, data_dir: str, stat_types: dict) -> dict | None:
-    """The commit-log entry of one written part file (absolute ``path``
-    under ``data_dir``): rows, bytes and min/max per ``stat_types`` column,
-    all from its parquet footer, except hive partition columns, which the
-    file does not hold: their min = max is the ``col=value`` directory.
-    None for a file with no rows."""
+def _file_entry(path: str, stat_columns: list[str]) -> dict | None:
+    """The commit-log entry of one written part file (absolute ``path``):
+    rows, bytes and min/max per ``stat_columns`` column, all from its
+    parquet footer. None for a file with no rows."""
     md = pq.read_metadata(path)
     if md.num_rows == 0:
         return None
     leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
-    bounds = {c: _footer_bounds(md, leaves[c]) for c in stat_types if c in leaves}
-    for name, v in _hive_values(path, data_dir, stat_types).items():
-        bounds[name] = None if _is_nan(v) else (v, v)
     return {
         "path": path,
         "rows": md.num_rows,
         "bytes": os.path.getsize(path),
         "stats": {
             c: {"min": _stat_value(_naive(b[0])), "max": _stat_value(_naive(b[1]))}
-            for c in stat_types
-            if (b := bounds.get(c)) is not None
+            for c in stat_columns
+            if (b := _footer_bounds(md, leaves[c])) is not None
         },
     }
 
@@ -275,25 +237,10 @@ def _may_match(stats: dict, col: str, op: str, value) -> bool:
 
 
 class VersionedParquetTable:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        schema: T.StructType,
-        partition_cols: list[str] | None = None,
-    ):
-        """``partition_cols`` (must be schema columns) become hive-style
-        directory partitions inside every commit — readers filtering on
-        them get partition pruning (directories skipped before any IO),
-        the storage-layout half of the 100 TB story. Use low-cardinality
-        derived columns (event DATE, not timestamp)."""
+    def __init__(self, spark: SparkSession, path: str, schema: T.StructType):
         self.spark = spark
         self.path = path
         self.schema = schema
-        self.partition_cols = partition_cols or []
-        missing = set(self.partition_cols) - set(schema.fieldNames())
-        if missing:
-            raise ValueError(f"partition columns not in schema: {sorted(missing)}")
 
     # -- log helpers --------------------------------------------------------
     @property
@@ -317,8 +264,18 @@ class VersionedParquetTable:
         return vs[-1] if vs else None
 
     def _load_commit(self, version: int) -> dict:
+        """The commit file of ``version``. Every reader of the log goes
+        through here, so a commit in a layout this table cannot read — a
+        hive-partitioned one, whose partition values live only in its
+        directory names — is rejected here rather than read as NULLs."""
         with open(self._commit_file(version)) as f:
-            return json.load(f)
+            commit = json.load(f)
+        if commit.get("partition_cols"):
+            raise ValueError(
+                f"version {version} of {self.path} is hive-partitioned by "
+                f"{commit['partition_cols']}; partitioned layouts are not supported"
+            )
+        return commit
 
     def commits(self) -> list[dict]:
         """Raw commit-log entries (the machine-readable log; ``history()``
@@ -355,16 +312,17 @@ class VersionedParquetTable:
     # -- data files ---------------------------------------------------------
     @property
     def _compact_schema(self) -> T.StructType:
-        """Schema of snapshot-rewrite files, which MATERIALIZE the version."""
+        """Schema of snapshot-rewrite files, which MATERIALIZE the version,
+        and the read schema of every commit: an append file lacks the
+        version column and reads it as NULL."""
         return T.StructType(
             [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
         )
 
     def _write_data(self, df: DataFrame, version: int) -> dict:
         """Write ``df`` as a new data dir named after ``version`` and return
-        the commit body: data_dir, schema, layout, write time and one entry
-        per part file (absolute path, rows, bytes, min/max per eligible
-        column).
+        the commit body: data_dir, schema, write time and one entry per part
+        file (absolute path, rows, bytes, min/max per eligible column).
 
         The stats are the write-time stats Delta keeps in its log (Iceberg
         in manifests), taken from the footers the parquet writer has just
@@ -378,22 +336,14 @@ class VersionedParquetTable:
         data_dir = os.path.join(
             self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
         )
-        writer = df.write.mode("errorifexists")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(data_dir)
-
-        stat_types = {
-            f.name: f.dataType for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)
-        }
-        root = os.path.abspath(data_dir)
-        files = [e for e in (_file_entry(p, root, stat_types) for p in _data_files(root)) if e]
+        df.write.mode("errorifexists").parquet(data_dir)
+        stat_columns = [f.name for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)]
+        files = [e for e in (_file_entry(p, stat_columns) for p in _data_files(data_dir)) if e]
         return {
             "version": version,
             "data_dir": data_dir,
             "ts_unix": time.time(),
             "schema": df.schema.jsonValue(),
-            "partition_cols": self.partition_cols,
             "files": files,
             "write_s": time.perf_counter() - t0,
         }
@@ -402,22 +352,16 @@ class VersionedParquetTable:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "VersionedParquetTable":
         """Reopen an existing table from its commit log alone — the schema
-        (including any evolution) and partition layout come from the LATEST
-        commit, exactly how Delta/Iceberg readers resolve table metadata.
-        No schema argument means no drift between writer and reader."""
+        (including any evolution) comes from the LATEST commit, exactly how
+        Delta/Iceberg readers resolve table metadata. No schema argument
+        means no drift between writer and reader."""
         probe = cls(spark, path, T.StructType([]))
         latest = probe.latest_version()
         if latest is None:
             raise ValueError(f"no commits at {path}")
-        commit = probe._load_commit(latest)
-        schema = T.StructType.fromJson(commit["schema"])
+        schema = T.StructType.fromJson(probe._load_commit(latest)["schema"])
         fields = [f for f in schema.fields if f.name != "_commit_version"]
-        return cls(
-            spark,
-            path,
-            T.StructType(fields),
-            partition_cols=commit.get("partition_cols") or [],
-        )
+        return cls(spark, path, T.StructType(fields))
 
     def _evolve_schema(self, incoming: T.StructType) -> None:
         """Widen self.schema with columns new in ``incoming`` (appended at
@@ -582,8 +526,8 @@ class VersionedParquetTable:
         n_deleted). Copy-on-write like Delta's DELETE — time travel to
         any pre-delete version still sees the rows (vacuum is the
         retention boundary, same as always). At scale the rewrite cost is
-        the snapshot scan; partition-aligned predicates could rewrite
-        only affected partitions (documented trade — not implemented)."""
+        the snapshot scan: every visible file is rewritten, also the files
+        whose stats show they hold no matching row (documented trade)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         base = self.latest_version()
         if base is None:
@@ -668,24 +612,22 @@ class VersionedParquetTable:
                 if not os.path.exists(c["vacuum_dir"]):
                     c.pop("vacuum_dir")
                     self._rewrite_commit(c)
-                    # a retried COMPLETION is a vacuum of this version
-                    # (r7 ADVICE: a mid-rmtree-crashed version was
-                    # otherwise reported by neither the crashed call nor
-                    # the retry). Reporting is completion-based on both
-                    # legs — see the normal leg below — so a version is
-                    # reported by exactly ONE call, the one whose rmtree
-                    # actually finished.
+                    # a retried COMPLETION is a vacuum of this version: a
+                    # mid-rmtree-crashed version would otherwise be
+                    # reported by neither the crashed call nor the retry.
+                    # Reporting is completion-based on both legs — see the
+                    # normal leg below — so a version is reported by
+                    # exactly ONE call, the one whose rmtree finished.
                     removed.append(c["version"])
                 continue
             if c["version"] <= base and c.get("data_dir"):
-                # TOMBSTONE FIRST, then delete (round 7): the old
-                # delete-then-tombstone order had a crash window where the
-                # data was gone but the commit still pointed at it, so
-                # readers hit a raw parquet path-not-found instead of the
-                # clean "versions were vacuumed" error. Tombstone-first
-                # inverts the failure: a crash leaks the directory, and
-                # the retained vacuum_dir lets the next vacuum() finish
-                # the job (retry leg above).
+                # TOMBSTONE FIRST, then delete: delete-then-tombstone has
+                # a crash window where the data is gone but the commit
+                # still points at it, so readers hit a raw parquet
+                # path-not-found instead of the clean "versions were
+                # vacuumed" error. Tombstone-first inverts the failure: a
+                # crash leaks the directory, and the retained vacuum_dir
+                # lets the next vacuum() finish the job (retry leg above).
                 c["vacuum_dir"] = c["data_dir"]
                 c["data_dir"] = None
                 c["vacuumed"] = True
@@ -694,7 +636,7 @@ class VersionedParquetTable:
                 if not os.path.exists(c["vacuum_dir"]):
                     c.pop("vacuum_dir")
                     self._rewrite_commit(c)
-                    # completion-based reporting (code-review r8): if the
+                    # completion-based reporting: if the
                     # rmtree failed non-fatally (ignore_errors swallows
                     # e.g. EACCES) the retained vacuum_dir routes this
                     # version to the retry leg of a LATER call, which
@@ -748,44 +690,24 @@ class VersionedParquetTable:
         builder behind ``read()`` and ``changes()``.
 
         ``where`` narrows each commit to its stats-candidate files (the
-        exact predicate is the caller's). Every unpartitioned append file
-        goes into ONE multi-path scan (a union per commit grows with
-        history and chokes the optimizer); its commit version is recovered
-        from the data-dir name via ``_metadata.file_path``
+        exact predicate is the caller's); without it each commit passes its
+        whole data dir. Every commit, compactions included, goes into ONE
+        multi-path scan (a union per commit grows with history and chokes
+        the optimizer). A compaction's files carry ``_commit_version`` as a
+        real column; an append file lacks it, reads it as NULL and takes
+        its version from its data-dir name via ``_metadata.file_path``
         (input_file_name() is non-deterministic and would block pushdown).
-        A compaction's files carry ``_commit_version`` as a real column,
-        and hive-partitioned commits cannot share a scan (partition
-        discovery rejects several partitioned roots:
-        CONFLICTING_DIRECTORY_STRUCTURES), so those read per directory —
-        ``basePath`` keeps partition columns resolvable from leaf files —
-        and are unioned; compaction keeps that union short.
+        ``_read_rows`` applies the same rule.
         """
-        cols = [*self.schema.fieldNames(), "_commit_version"]
-        flat, parts = [], []
+        paths = []
         for c in commits:
-            paths = self._candidate_files(c, where) if where else None
-            paths = [c["data_dir"]] if paths is None else paths
-            if not paths:
-                continue
-            compact = c.get("type") == "compact"
-            if not compact and not self.partition_cols:
-                flat += paths
-                continue
-            df = (
-                self.spark.read.schema(self._compact_schema if compact else self.schema)
-                .option("basePath", c["data_dir"])
-                .parquet(*paths)
-            )
-            if not compact:
-                df = df.withColumn("_commit_version", F.lit(c["version"]).cast("int"))
-            parts.append(df.select(*cols))
-        if flat:
-            version = F.regexp_extract(F.col("_metadata.file_path"), _VERSION_DIR, 1).cast("int")
-            df = self.spark.read.schema(self.schema).parquet(*flat)
-            parts.append(df.withColumn("_commit_version", version).select(*cols))
-        if not parts:
+            files = self._candidate_files(c, where) if where else None
+            paths += [c["data_dir"]] if files is None else files
+        if not paths:
             return self.spark.createDataFrame([], self._compact_schema)
-        return functools.reduce(DataFrame.unionByName, parts)
+        dir_version = F.regexp_extract(F.col("_metadata.file_path"), _VERSION_DIR, 1).cast("int")
+        df = self.spark.read.schema(self._compact_schema).parquet(*paths)
+        return df.withColumn("_commit_version", F.coalesce("_commit_version", dir_version))
 
     def read(
         self,
@@ -804,6 +726,8 @@ class VersionedParquetTable:
         skipping, the Delta/Iceberg stats-pruning idea), and the exact
         predicate is applied to the surviving rows — so the result equals
         ``read().where(...)`` while a clustered point read touches ~1 file.
+        Any ``where`` and any mix of appends and a compaction read as one
+        parquet scan (``_scan``).
         """
         result = self._scan(self._visible_commits(as_of_version), where)
         for c, op, v in where or []:
@@ -826,50 +750,35 @@ class VersionedParquetTable:
 
         The files read are the stats candidates of each commit (a commit
         that predates stats: its whole dir); inside them the filter prunes
-        row groups by their min/max. As in ``_scan``, a compaction's files
-        carry ``_commit_version`` and an append file's version is its
-        data-dir name; hive partition columns come from the file's
-        ``col=value`` directories, and columns a file lacks (added later by
-        schema evolution) read as NULL. Version and partition values are
-        attached as Arrow columns and the pick (``_latest_rows``) runs in
-        Arrow, so a key or event time that is a partition column takes part
-        in it and only the picked rows convert to Python, as ``collect()``
+        row groups by their min/max. The version rule is ``_scan``'s: a
+        compaction's files carry ``_commit_version``, an append file's
+        version is its data-dir name. Columns a file lacks (added later by
+        schema evolution) read as NULL. The pick (``_latest_rows``) runs in
+        Arrow, so only the picked rows convert to Python, as ``collect()``
         converts them (pyspark's Arrow-to-Row converter under the session's
         ``binaryAsBytes``: naive local timestamps, Row structs).
         """
         where = where or []
-        parts = {f.name: f.dataType for f in self.schema.fields if f.name in self.partition_cols}
-        files = {}  # filesystem path -> its hive partition values
+        files = []  # filesystem paths
         for c in commits:
             paths = self._candidate_files(c, where)
-            for p in _data_files(c["data_dir"]) if paths is None else map(_fs_path, paths):
-                files[p] = _hive_values(p, c["data_dir"], parts)
+            files += _data_files(c["data_dir"]) if paths is None else map(_fs_path, paths)
         expr = None
         for col, _, value in where:
-            nan = _is_nan(value)  # Spark has NaN = NaN; a partition column matches on its directory
-            if col in parts:
-                files = {p: h for p, h in files.items() if h[col] == value or nan and _is_nan(h[col])}
-            else:
-                term = pc.is_nan(pc.field(col)) if nan else pc.field(col) == value
-                expr = term if expr is None else expr & term
-        phys = T.StructType([f for f in self._compact_schema.fields if f.name not in parts])
-        got = ds.dataset(list(files), schema=to_arrow_schema(phys), format="parquet").to_table(
+            term = pc.is_nan(pc.field(col)) if _is_nan(value) else pc.field(col) == value
+            expr = term if expr is None else expr & term
+        phys = self._compact_schema
+        got = ds.dataset(files, schema=to_arrow_schema(phys), format="parquet").to_table(
             columns=[*phys.fieldNames(), "__filename"], filter=expr
         )
         if not got.num_rows:
             return []
-        paths = list(files)
-        at = pc.index_in(got["__filename"], value_set=pa.array(paths))  # each row's file
-        versions = [int(re.search(_VERSION_DIR, p).group(1)) for p in paths]
+        at = pc.index_in(got["__filename"], value_set=pa.array(files))  # each row's file
+        versions = [int(re.search(_VERSION_DIR, p).group(1)) for p in files]
         got = got.set_column(
             got.schema.get_field_index("_commit_version"), "_commit_version",
             pc.coalesce(got["_commit_version"], pa.array(versions, pa.int32()).take(at)),
         )
-        for col, dtype in parts.items():
-            values = [files[p][col] for p in paths]
-            if isinstance(dtype, T.TimestampType):  # naive local time here, UTC in Arrow
-                values = [v and v.astimezone(_dt.timezone.utc) for v in values]
-            got = got.append_column(col, pa.array(values, to_arrow_type(dtype)).take(at))
         names = self.schema.fieldNames()
         got = _latest_rows(got, key, max_of).select(names)
         as_bytes = self.spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")
@@ -884,10 +793,9 @@ class VersionedParquetTable:
         """Change data feed: rows committed in versions (since, until] —
         the Delta CDF / Iceberg incremental-read idea. Insert-only view:
         on an append-only history every change is an insert at its commit
-        version; key-level insert-vs-update classification lives one
-        layer up (FeatureGroup.changes), where the key is known. If the
-        range contains a ``delete()``/``restore()``, removed rows are NOT
-        reported here — use ``diff()`` for delete-aware consumption.
+        version. If the range contains a ``delete()``/``restore()``, the
+        rows it removed are NOT reported: this is the store's one change
+        feed, and it carries no delete or update events.
 
         Incremental consumers (downstream training jobs) read ONLY the new
         commits' directories — O(new data), not O(table) — because the
@@ -906,59 +814,6 @@ class VersionedParquetTable:
         if not all(c.get("data_dir") for c in window):
             raise ValueError("requested change range includes vacuumed commits")
         return self._scan(window)
-
-    def diff(
-        self,
-        since_version: int,
-        until_version: int | None = None,
-        key_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Delete-aware change feed: snapshot difference between two
-        versions, each row tagged ``_change_type``.
-
-        Without ``key_cols``: multiset row diff (``exceptAll`` both ways)
-        → 'insert' / 'delete' rows only. With ``key_cols``: keys present
-        on one side only are 'insert'/'delete'; keys on both sides whose
-        non-key columns changed emit an 'update_pre' (old values) and
-        'update_post' (new values) pair — the Delta CDF row vocabulary.
-
-        Scale: two snapshot reads + one shuffle each on the diff keys; at
-        100 TB, consume the insert-only ``changes()`` incrementally where
-        possible and reserve ``diff`` for ranges containing rewrites —
-        exactly how Delta consumers treat versions with deletes.
-        """
-        until = until_version if until_version is not None else self.latest_version()
-        cols = self.schema.fieldNames()
-        before = self.read(as_of_version=since_version).select(*cols)
-        after = self.read(as_of_version=until).select(*cols)
-        tag = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
-        if not key_cols:
-            return tag(after.exceptAll(before), "insert").unionByName(
-                tag(before.exceptAll(after), "delete")
-            )
-        val_cols = [c for c in cols if c not in key_cols]
-        b, a = before.alias("b"), after.alias("a")
-        inserted = a.join(b, key_cols, "left_anti")
-        deleted = b.join(a, key_cols, "left_anti")
-        both = a.join(b, key_cols)
-        changed = both.where(
-            ~F.struct(*[F.col(f"a.{c}") for c in val_cols]).eqNullSafe(
-                F.struct(*[F.col(f"b.{c}") for c in val_cols])
-            )
-        )
-        pre = changed.select(
-            *key_cols, *[F.col(f"b.{c}").alias(c) for c in val_cols]
-        )
-        post = changed.select(
-            *key_cols, *[F.col(f"a.{c}").alias(c) for c in val_cols]
-        )
-        ordered = [*key_cols, *val_cols]
-        return (
-            tag(inserted.select(*ordered), "insert")
-            .unionByName(tag(deleted.select(*ordered), "delete"))
-            .unionByName(tag(pre.select(*ordered), "update_pre"))
-            .unionByName(tag(post.select(*ordered), "update_post"))
-        )
 
     def skipping_report(
         self, where: list[tuple], as_of_version: int | None = None

@@ -256,7 +256,7 @@ def _assert_same_records(got: dict, want: dict) -> None:
 
 # the builders whose commits after the base are all plain appends with the
 # table's schema: refresh() folds them in without a Spark job
-_DELTA_CASES = {"flat", "hive", "hive_key", "pre_stats"}
+_DELTA_CASES = {"flat", "pre_stats"}
 
 
 def _view_records(view: list, key: str, n: int = 1, i: int = 0) -> dict:
@@ -277,10 +277,8 @@ def test_refresh_equals_a_fresh_snapshot(spark, tmp_path, case):
     mode and for every shard of 3. The base holds a NULL key, NULL event
     times and a key (14) whose event time lies after every later row of
     it: a late event strict mode keeps."""
-    build, partition_cols, root = _PR_CASES[case]
-    fg = FeatureStore(spark, str(tmp_path / root)).create(
-        "fg", _PR_SCHEMA, "k", "et", partition_cols=partition_cols
-    )
+    build, root = _PR_CASES[case]
+    fg = FeatureStore(spark, str(tmp_path / root)).create("fg", _PR_SCHEMA, "k", "et")
     late = (14, dt.datetime(2030, 1, 1), 1.0, "x", dt.date(2024, 2, 1), 9, None, None, None)
     null_key = (None, None, 5.0, "x", dt.date(2024, 2, 2), 9, None, None, None)
     fg.ingest(spark.createDataFrame([*_pr_rows(4), late, null_key], _PR_SCHEMA))
@@ -333,11 +331,10 @@ def test_refresh_of_nan_and_null_keys(spark, tmp_path):
         ServingSession(fg, n_shards=2, shard=0)
 
 
-def test_snapshot_picks_on_partition_columns(spark, tmp_path):
-    """With the event time as the hive partition column, the timestamp
-    directory values take part in the pick and convert as ``collect()``
-    converts them; float keys group as Spark groups them (one NaN group,
-    -0.0 with 0.0). Sessions and ``get_latest`` equal the online view."""
+def test_snapshot_groups_float_keys_as_spark(spark, tmp_path):
+    """Float keys group as Spark groups them: one NaN group, and -0.0 with
+    0.0; a NULL event time ranks below any value. Sessions, in parity and
+    strict mode, and ``get_latest`` equal the online view."""
     schema = T.StructType(
         [
             T.StructField("k", T.FloatType()),
@@ -346,7 +343,7 @@ def test_snapshot_picks_on_partition_columns(spark, tmp_path):
         ]
     )
     nan = float("nan")
-    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et", partition_cols=["et"])
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et")
     fg.ingest(spark.createDataFrame([(1.0, ts(5), 1.0), (2.0, None, 1.0), (-0.0, ts(2), 1.0), (nan, ts(2), 1.0)], schema))
     fg.ingest(spark.createDataFrame([(1.0, ts(3), 2.0), (2.0, ts(1), 2.0), (0.0, ts(1), 2.0), (nan, None, 2.0)], schema))
     for strict in (False, True):

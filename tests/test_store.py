@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from feature_store_test_spark.store import FeatureStore, VersionedParquetTable
+from feature_store_test_spark.store import FeatureStore, ServingSession, VersionedParquetTable
 
 FG_SCHEMA = T.StructType(
     [
@@ -172,43 +172,6 @@ def test_exists_batch_semi_join(spark, tmp_path):
     ) == [1, 2]
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert "max_by" not in plan, plan
-
-
-def test_partitioned_table_prunes_directories(spark, tmp_path):
-    """Partition pruning: a date-filtered read must touch only the matching
-    partition directories (PartitionFilters in the scan, fewer files)."""
-    import pyspark.sql.types as T
-    from pyspark.sql import functions as F
-    from feature_store_test_spark.store import VersionedParquetTable
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-            T.StructField("event_date", T.DateType()),
-        ]
-    )
-    t = VersionedParquetTable(
-        spark, str(tmp_path / "pt"), schema, partition_cols=["event_date"]
-    )
-    df = spark.createDataFrame(
-        [(i, float(i), dt.date(2024, 1, 1 + (i % 5))) for i in range(100)], schema
-    )
-    t.append(df)
-    full = t.read()
-    one_day = full.where(F.col("event_date") == F.lit(dt.date(2024, 1, 3)))
-    assert one_day.count() == 20
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(event_date" in plan
-
-
-def test_partition_cols_must_exist(spark, tmp_path):
-    import pyspark.sql.types as T
-    from feature_store_test_spark.store import VersionedParquetTable
-
-    schema = T.StructType([T.StructField("k", T.LongType())])
-    with pytest.raises(ValueError, match="partition columns"):
-        VersionedParquetTable(spark, str(tmp_path / "x"), schema, partition_cols=["nope"])
 
 
 def test_partial_commit_files_are_invisible(spark, tmp_path):
@@ -407,14 +370,11 @@ def test_pruned_read_equals_filtered_read(spark, tmp_path):
 
 
 @pytest.mark.parametrize("compacted", [False, True], ids=["appends", "compacted"])
-@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "hive"])
-def test_scan_paths_agree(spark, tmp_path, partitioned, compacted):
+def test_scan_paths_agree(spark, tmp_path, compacted):
     """Pruned reads and the change feed equal filters over the full read,
     with _commit_version, on every commit layout the scan builder sees."""
     schema = T.StructType([*KV_SCHEMA.fields, T.StructField("d", T.StringType())])
-    t = VersionedParquetTable(
-        spark, str(tmp_path / "t"), schema, partition_cols=["d"] if partitioned else None
-    )
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
     for i in range(4):
         keys = range(i * 40, i * 40 + 60)  # overlapping key ranges
         rows = [(j, j / 7.0, ts(1 + j % 27), f"p{j % 3}") for j in keys]
@@ -435,19 +395,28 @@ def test_scan_paths_agree(spark, tmp_path, partitioned, compacted):
 
 
 def test_pruned_read_across_commits_is_one_file_scan(spark, tmp_path):
-    """A stats-pruned read that matches files of several append commits is
-    one multi-path scan, not a union of per-commit scans."""
-    t = VersionedParquetTable(spark, str(tmp_path / "t"), KV_SCHEMA)
-    for i in range(3):  # unclustered: every commit spans the whole key range
-        rows = [(j, float(i), ts(1 + i)) for j in range(100)]
-        t.append(spark.createDataFrame(rows, KV_SCHEMA))
-    df = t.read(where=[("k", "=", 50)])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan") == 1
-    assert "Union" not in plan
-    assert sorted((r.v, r._commit_version) for r in df.collect()) == [
-        (0.0, 1), (1.0, 2), (2.0, 3)
-    ]
+    """A read that matches files of several commits is one multi-path scan,
+    not a union of per-commit scans, with or without a stats-pruning
+    ``where``, also when a compaction sits between the appends: each row
+    keeps the version of the append that wrote it."""
+    layouts = (  # (name, appends before the compaction or None, versions of the appends)
+        ("appends", None, [1, 2, 3]),
+        ("compacted", 2, [1, 2, 4, 5]),
+    )
+    for name, compact_at, versions in layouts:
+        t = VersionedParquetTable(spark, str(tmp_path / name), KV_SCHEMA)
+        for i in range(len(versions)):  # unclustered: every commit spans the whole key range
+            if i == compact_at:
+                t.compact(cluster_by=["k"])
+            rows = [(j, float(i), ts(1 + i)) for j in range(100)]
+            t.append(spark.createDataFrame(rows, KV_SCHEMA))
+        for where, per_commit in ((None, 100), ([("k", "=", 50)], 1)):
+            df = t.read(where=where)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("FileScan") == 1, (name, where, plan)
+            assert "Union" not in plan, (name, where, plan)
+            want = [(float(i), v) for i, v in enumerate(versions) for _ in range(per_commit)]
+            assert sorted((r.v, r._commit_version) for r in df.collect()) == want
 
 
 def test_nan_bounds_never_prune(spark, tmp_path):
@@ -560,19 +529,6 @@ def _stats_case_row_groups(spark, path):
     return t, set()
 
 
-def _stats_case_hive(spark, path):
-    schema = T.StructType(
-        [*KV_SCHEMA.fields, T.StructField("p_int", T.IntegerType()), T.StructField("p_str", T.StringType())]
-    )
-    t = VersionedParquetTable(spark, path, schema, partition_cols=["p_int", "p_str"])
-    strs = ["plain", "a b/c:d", None]
-    rows = [
-        (j, j / 7.0, ts(1 + j % 27), None if j % 5 == 4 else j % 3, strs[j % 3]) for j in range(60)
-    ]
-    t.append(spark.createDataFrame(rows, schema))
-    return t, set()
-
-
 def _stats_case_compact(spark, path):
     t = VersionedParquetTable(spark, path, KV_SCHEMA)
     for i in range(2):
@@ -642,7 +598,7 @@ def _scan_file_stats(spark, commit):
 @pytest.mark.parametrize(
     "case",
     [
-        _stats_case_types, _stats_case_row_groups, _stats_case_hive, _stats_case_compact,
+        _stats_case_types, _stats_case_row_groups, _stats_case_compact,
         _stats_case_empty, _stats_case_long_string, _stats_case_nan,
     ],
     ids=lambda f: f.__name__.removeprefix("_stats_case_"),
@@ -783,27 +739,6 @@ def test_skipping_report_counts_all_files_without_where_effect(spark, tmp_path):
     assert rep["commits_without_stats"] == 0
 
 
-def test_pruned_read_on_partitioned_table(spark, tmp_path):
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-            T.StructField("event_date", T.StringType()),
-        ]
-    )
-    t = VersionedParquetTable(
-        spark, str(tmp_path / "pt"), schema, partition_cols=["event_date"]
-    )
-    rows = [(j, float(j), f"2024-01-{1 + j % 3:02d}") for j in range(90)]
-    t.append(spark.createDataFrame(rows, schema))
-    # partition column values survive leaf-file reads (basePath) and the
-    # stats prune on the partition column too
-    got = t.read(where=[("event_date", "=", "2024-01-02"), ("k", "<", 10)])
-    assert sorted(r.k for r in got.collect()) == [1, 4, 7]
-    rep = t.skipping_report([("event_date", "=", "2024-01-02")])
-    assert rep["candidate_files"] < rep["total_files"]
-
-
 def test_point_read_uses_pruned_path_after_clustering(spark, tmp_path):
     fg = make_fg(spark, tmp_path)
     fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
@@ -921,19 +856,16 @@ def _pr_file_uris(spark, fg):
 
 
 _PR_CASES = {
-    # name: (build, partition_cols, root)
-    "flat": (_pr_flat, None, "t"),
-    "hive": (_pr_flat, ["region", "day"], "t"),
-    "compacted": (_pr_compacted, None, "t"),
-    "clustered": (_pr_clustered, None, "t"),
-    "hive_clustered": (_pr_clustered, ["region"], "t"),
-    "hive_key": (_pr_flat, ["k"], "t"),
-    "deleted": (_pr_deleted, None, "t"),
-    "restored": (_pr_restored, ["region"], "t"),
-    "evolved": (_pr_evolved, None, "t"),
-    "pre_stats": (_pr_pre_stats, ["region", "day"], "t"),
-    "file_uris": (_pr_file_uris, None, "t"),
-    "escaped_root": (_pr_compacted, ["region"], "a b%20c"),
+    # name: (build, root)
+    "flat": (_pr_flat, "t"),
+    "compacted": (_pr_compacted, "t"),
+    "clustered": (_pr_clustered, "t"),
+    "deleted": (_pr_deleted, "t"),
+    "restored": (_pr_restored, "t"),
+    "evolved": (_pr_evolved, "t"),
+    "pre_stats": (_pr_pre_stats, "t"),
+    "file_uris": (_pr_file_uris, "t"),
+    "escaped_root": (_pr_compacted, "a b%20c"),
 }
 
 
@@ -954,10 +886,8 @@ def test_point_reads_equal_the_online_view(spark, tmp_path, case):
     type for type, and ``exists(k)`` whether the snapshot holds a row for
     ``k``, for every stored key and an absent one, on every commit layout
     the driver-side read meets."""
-    build, partition_cols, root = _PR_CASES[case]
-    fg = FeatureStore(spark, str(tmp_path / root)).create(
-        "fg", _PR_SCHEMA, "k", "et", partition_cols=partition_cols
-    )
+    build, root = _PR_CASES[case]
+    fg = FeatureStore(spark, str(tmp_path / root)).create("fg", _PR_SCHEMA, "k", "et")
     build(spark, fg)
     view = {r.k: r.asDict() for r in fg.online_view().collect()}
     stored = {r.k for r in fg.table.read().select("k").collect()}
@@ -975,14 +905,16 @@ def test_point_reads_equal_the_online_view(spark, tmp_path, case):
     assert fg.get_latest(None) is None and not fg.exists(None)
 
 
-@pytest.mark.parametrize("partition_cols", [None, ["k"]], ids=["flat", "hive_key"])
-def test_point_read_of_a_nan_key(spark, tmp_path, partition_cols):
+@pytest.mark.parametrize("compacted", [False, True], ids=["flat", "compacted"])
+def test_point_read_of_a_nan_key(spark, tmp_path, compacted):
     """Spark has NaN = NaN, so a NaN key is a stored key like any other,
-    also when the key is the partition column."""
+    also when its rows sit in a key-clustered compaction."""
     schema = T.StructType([T.StructField("k", T.DoubleType()), T.StructField("et", T.TimestampType())])
-    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et", partition_cols)
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et")
     fg.ingest(spark.createDataFrame([(float("nan"), ts(1)), (1.5, ts(1))], schema))
     fg.ingest(spark.createDataFrame([(float("nan"), ts(2))], schema))
+    if compacted:
+        fg.table.compact(cluster_by=["k"], n_files=2)
     view = {repr(r.k): r.asDict() for r in fg.online_view().collect()}
     assert view["nan"]["et"] == ts(2)
     for k in (float("nan"), 1.5):
@@ -1030,19 +962,45 @@ def test_schema_evolution_widens_and_backfills_null(spark, tmp_path):
 
 
 def test_load_reopens_table_from_log(spark, tmp_path):
-    """A reader in another session reconstructs schema + partition layout
-    from the commit log alone."""
+    """A reader in another session reconstructs the schema, evolution
+    included, from the commit log alone."""
     schema = T.StructType(
         [T.StructField("k", T.LongType()), T.StructField("d", T.StringType())]
     )
-    t = VersionedParquetTable(spark, str(tmp_path / "t"), schema, partition_cols=["d"])
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
     t.append(spark.createDataFrame([(1, "a"), (2, "b")], schema))
     t.append(spark.createDataFrame([(3, "a", 9.5)], "k long, d string, score double"),
              merge_schema=True)
     re = VersionedParquetTable.load(spark, str(tmp_path / "t"))
     assert re.schema.fieldNames() == ["k", "d", "score"]
-    assert re.partition_cols == ["d"]
-    assert re.read().count() == 3
+    assert sorted(map(tuple, re.read().collect())) == [
+        (1, "a", None, 1), (2, "b", None, 1), (3, "a", 9.5, 2)
+    ]
+
+
+def test_hive_partitioned_log_is_rejected(spark, tmp_path):
+    """A commit whose log records hive partition columns (a layout this
+    table no longer reads) makes every reader raise, naming the layout,
+    instead of reading its partition column as NULL: a snapshot read, a
+    point read, a new serving session, a session refreshing the log tail
+    and the change feed. An empty ``partition_cols``, as older
+    unpartitioned logs record it, reads."""
+    fg = make_fg(spark, tmp_path)
+    fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
+    behind = ServingSession(fg)
+    fg.ingest(spark.createDataFrame([row(2, 2, 20.0, 20.0, 6.0, 6.0)], FG_SCHEMA))
+    t = fg.table
+    commit = t._load_commit(2)
+    t._rewrite_commit({**commit, "partition_cols": []})
+    assert fg.get_latest(2)["latest_purchase_value"] == 20.0
+    t._rewrite_commit({**commit, "partition_cols": ["purchase_timestamp"]})
+    readers = (
+        t.read, lambda: fg.get_latest(1), lambda: ServingSession(fg), behind.refresh,
+        lambda: t.changes(1),
+    )
+    for read in readers:
+        with pytest.raises(ValueError, match="hive-partitioned"):
+            read()
 
 
 def test_table_changes_reads_only_new_commits(spark, tmp_path):
@@ -1070,21 +1028,6 @@ def test_table_changes_across_compaction_falls_back_correctly(spark, tmp_path):
     t.append(spark.createDataFrame([(3,)], schema))
     got = sorted(r.k for r in t.changes(v1).collect())
     assert got == [2, 3]  # the compaction itself is not a data change
-
-
-def test_feature_group_change_feed_classifies_insert_vs_update(spark, tmp_path):
-    fg = make_fg(spark, tmp_path)
-    v1 = fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
-    fg.ingest(
-        spark.createDataFrame(
-            [row(1, 2, 20.0, 15.0, 5.0, 5.0), row(2, 2, 30.0, 30.0, 7.0, 7.0)],
-            FG_SCHEMA,
-        )
-    )
-    ch = fg.changes(v1).select("customer_id", "_change_type").collect()
-    got = {(r.customer_id, r._change_type) for r in ch}
-    assert got == {(1, "update"), (2, "insert")}
-    assert fg.changes(v1).count() == 2
 
 
 def test_merge_general_clauses(spark, tmp_path):
@@ -1325,44 +1268,6 @@ def test_delete_keeps_null_predicate_rows(spark, tmp_path):
     assert n == 1
     got = {r.x for r in t.read().collect()}
     assert got == {1, None}
-
-
-def test_diff_reports_inserts_deletes_and_updates(spark, tmp_path):
-    """Delete-aware CDF: diff() tags snapshot differences with the Delta
-    change-type vocabulary, including update_pre/update_post pairs when a
-    key's values changed across the range."""
-    schema = T.StructType(
-        [T.StructField("x", T.LongType()), T.StructField("s", T.StringType())]
-    )
-    t = VersionedParquetTable(spark, str(tmp_path / "t"), schema)
-    t.append(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema))  # v1
-    t.append(spark.createDataFrame([(4, "d")], schema))                      # v2
-
-    # full-history diff: everything is an insert
-    d0 = t.diff(0)
-    assert {r["_change_type"] for r in d0.collect()} == {"insert"}
-    assert d0.count() == 4
-
-    t.delete("x = 2")                                                        # v3
-    t.append(spark.createDataFrame([(2, "B")], schema))                      # v4
-
-    d = t.diff(2, 4, key_cols=["x"])
-    by_type = {}
-    for r in d.collect():
-        by_type.setdefault(r["_change_type"], set()).add((r.x, r.s))
-    assert by_type["update_pre"] == {(2, "b")}
-    assert by_type["update_post"] == {(2, "B")}
-    assert "insert" not in by_type and "delete" not in by_type
-
-    # row-level (no keys): the same range is one delete + one insert
-    d2 = t.diff(2, 4)
-    rows = {(r["_change_type"], r.x, r.s) for r in d2.collect()}
-    assert rows == {("delete", 2, "b"), ("insert", 2, "B")}
-
-    # a pure delete range
-    d3 = t.diff(1, 3, key_cols=["x"])
-    got = {(r["_change_type"], r.x) for r in d3.collect()}
-    assert got == {("insert", 4), ("delete", 2)}
 
 
 def test_vacuum_crash_window_is_clean_and_retryable(spark, tmp_path):
