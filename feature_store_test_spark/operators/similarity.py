@@ -605,9 +605,8 @@ def lsh_ann_topk(
 # loops, the driver's per-query runs, a session serving many requests —
 # pay training once, with NO behavior change on the first call. A stale
 # hit (files rewritten in-place under the same plan) returns a stale
-# index: exactly the staleness contract of any persisted ANN index
-# (store/annindex.py), where refresh = retrain. Bounded like the dedup
-# probe cache.
+# index: exactly the staleness contract of any persisted ANN index,
+# where refresh = retrain. Bounded like the dedup probe cache.
 # ---------------------------------------------------------------------------
 _train_cache: dict[tuple, object] = {}
 _TRAIN_CACHE_MAX = 64

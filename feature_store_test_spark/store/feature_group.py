@@ -7,7 +7,7 @@ Reference surface (/root/reference/core/feature_store_manager.py):
     ingest_features         :108-119  → FeatureGroup.ingest (one commit, not
                                         per-row PutRecord with max_workers=1)
     build_training_dataset  :121-153  → FeatureGroup.training_dataset (spark.sql)
-    customer_features_exist :155-172  → FeatureGroup.exists / exists_batch
+    customer_features_exist :155-172  → FeatureGroup.exists
     get_latest_features     :184-204  → FeatureGroup.get_latest / online_view
     add_customer_features   :206-238  → FeatureGroup.upsert (new key: avg := new)
     update_customer_features:240-282  → FeatureGroup.upsert (stored key,
@@ -94,35 +94,19 @@ class FeatureGroup:
         order = ["_commit_version", self.event_time_col]
         return order[::-1] if strict_event_time else order
 
-    def _latest(self, hist: DataFrame, strict_event_time: bool) -> DataFrame:
-        """Latest row per key of ``hist`` via ``latest_per_key_agg``: a
-        partial ``max_by`` per partition, so one candidate row per key per
-        partition crosses the shuffle (see operators/latest.py)."""
-        max_of = self._max_of(strict_event_time)
-        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
-
     def online_view(self, strict_event_time: bool = False) -> DataFrame:
-        """Latest record per key.
+        """Latest record per key, via ``latest_per_key_agg``: a partial
+        ``max_by`` per partition, so one candidate row per key per
+        partition crosses the shuffle (see operators/latest.py).
 
         parity mode (default): last-ARRIVAL wins (commit sequence, then
         event time) — reproduces the reference's put-overwrites behavior
         including its retry-out-of-order quirk (§2.13 Q5).
         strict mode: last-EVENT-TIME wins regardless of arrival.
         """
-        return self._latest(self.offline_history(), strict_event_time)
-
-    def exists_batch(self, keys: DataFrame) -> DataFrame:
-        """Which of the given keys have a stored record (left semi join) —
-        the set-oriented form of customer_features_exist (:155-172).
-
-        The online view holds exactly the keys of the current snapshot, so
-        the semi join reads the key column of ``read()`` alone: no
-        latest-row aggregate over whole rows. A NULL key matches nothing."""
-        return keys.join(
-            self.table.read().select(self.key_col),
-            on=self.key_col,
-            how="left_semi",
-        )
+        max_of = self._max_of(strict_event_time)
+        hist = self.offline_history()
+        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
 
     def exists(self, key_value) -> bool:
         """Does the key have a stored record? The driver-side read of

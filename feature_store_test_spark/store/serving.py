@@ -9,7 +9,10 @@ with pyarrow: tens of milliseconds per call on an unclustered history, and
 it grows with the number of commits. ``ServingSession`` serves the request
 path: it reads the online view once into a dict, in this process with the
 same reader (no Spark job), then every lookup is a local dict probe
-(microseconds, no IO).
+(microseconds, no IO). The session also seeds the stream:
+``InferencePipeline`` holds one, refreshes it before each micro-batch and
+reads the batch's keys from it, so the driver holds one record per key per
+pipeline.
 
 Scale design (100 TB): the snapshot is the ONLINE view — one row per key,
 never history — so its size is key cardinality, not event volume. Beyond
@@ -19,7 +22,9 @@ the keys whose ``shard_of(key, N)`` equals ``i`` (~1/N of the view each).
 The shard function is md5-based and pure Python, so a router computes the
 same shard id client-side (``ServingSession.shard_of``) to address the
 right process, and each session filters its snapshot with that same
-function, so the fleet partitions the key space exactly. What does NOT
+function, so the fleet partitions the key space exactly. The dict is
+O(keys), but a whole-snapshot read decodes every visible file before it
+picks, so its peak memory still grows with the history. What does NOT
 scale is snapshotting history or using this for analytical scans — those
 stay Spark-side.
 

@@ -4,7 +4,7 @@ The reference processes one event at a time with 2-3 HTTPS round-trips each
 (/root/reference/core/inference.py:183-225: exists-check → get → predict →
 put). Here each micro-batch does the whole thing set-oriented (§3.3):
 
-    batch → validate (failures → DLQ) → seed join against the online view
+    batch → validate (failures → DLQ) → seed join against the online store
     → per-key sequential fold (mapInPandas) applying, per event in time
     order: enrich (defaults on miss, :121-126) → linear predict →
     (old+new)/2 state update (§2.13 Q4) → one ingest of final state rows
@@ -14,9 +14,14 @@ The per-key fold is the genuinely-sequential semantics (each event's
 features depend on the previous event's update): a row_number window
 clusters the batch by key and sorts it by (key, event time, event id), and
 one mapInPandas call per partition folds each key's events in order. State
-continuity across micro-batches comes from seeding each batch with the online
-view (state lives in the feature table, not in executor memory — restart-safe
-by construction, the same property Delta-backed foreachBatch pipelines rely on).
+continuity across micro-batches comes from seeding each batch with the
+online store, as the reference looks each event up in its own (:227-281):
+the pipeline's ``ServingSession`` is refreshed before the batch, which
+folds in the commits since the last one (this pipeline's and any other
+writer's), and each of the batch's keys is a point read of its snapshot.
+State lives in the feature table, not in executor memory, so a restarted
+pipeline reseeds from it — restart-safe by construction, the same property
+Delta-backed foreachBatch pipelines rely on.
 
 DLQ (§2.9 T3): validation failures append to a DLQ table with an attempt
 count; ``retry_dlq()`` reprocesses each attempt-1 row once (the reference's
@@ -33,8 +38,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_store_test_spark.data import local_rows_df
 from feature_store_test_spark.ml import LinearScorer
 from feature_store_test_spark.store.feature_group import FeatureGroup
+from feature_store_test_spark.store.serving import ServingSession
 from feature_store_test_spark.store.table import VersionedParquetTable
 
 EVENT_SCHEMA = T.StructType(
@@ -51,6 +58,8 @@ DLQ_SCHEMA = T.StructType(
      T.StructField("attempt", T.IntegerType()),
      T.StructField("error", T.StringType())]
 )
+
+_SEED_SCHEMA = "customer_id long, seed_avg_pv double, seed_avg_ls double, seed_ts timestamp"
 
 _FOLD_OUT_SCHEMA = T.StructType(
     [
@@ -88,12 +97,14 @@ class InferencePipeline:
     # order, reproducing the reference's retry quirk (§2.13 Q5).
     # strict mode (True): MERGE-style guard — an event older than the
     # stored state's event time is scored but its state update is dropped
-    # (WHEN MATCHED AND s.event_time >= t.event_time).
+    # (WHEN MATCHED AND s.event_time >= t.event_time). Read once more when
+    # the pipeline is built: the seed's session picks records in its order.
     strict_event_time: bool = False
     _dlq_retried_through: int = field(default=0, init=False, repr=False)
 
     def __post_init__(self):
         self.dlq = VersionedParquetTable(self.spark, self.dlq_path, DLQ_SCHEMA)
+        self._online = ServingSession(self.feature_group, self.strict_event_time)
 
     # ------------------------------------------------------------------ fold
     def _fold_batch(self, seeded: DataFrame) -> DataFrame:
@@ -158,28 +169,29 @@ class InferencePipeline:
     def process_batch(self, batch: DataFrame, attempt: int = 1) -> DataFrame:
         """Process one micro-batch; returns the per-event prediction log."""
         batch = batch.select(*[f.name for f in EVENT_SCHEMA.fields])
-        ok = batch.where(F.expr(self.valid_predicate))
-        bad = batch.where(~F.expr(f"coalesce({self.valid_predicate}, false)"))
-        if bad.limit(1).count() > 0:
+        valid = F.coalesce(F.expr(self.valid_predicate), F.lit(False))
+        # one job gives the batch's keys and whether any row is invalid
+        flags = batch.select("customer_id", valid.alias("valid")).distinct().collect()
+        if not all(r.valid for r in flags):
             self.dlq.append(
-                bad.withColumn("attempt", F.lit(attempt)).withColumn(
+                batch.where(~valid).withColumn("attempt", F.lit(attempt)).withColumn(
                     "error", F.lit("validation_failed")
                 )
             )
 
-        # the seed is the online view's row of each key in the batch: the
-        # semi join drops other keys' history before the latest-row aggregate
-        fg = self.feature_group
-        hist = fg.offline_history().join(ok.select("customer_id"), "customer_id", "left_semi")
-        online = fg._latest(hist, self.strict_event_time).select(
-            F.col("customer_id"),
-            F.col("avg_purchase_value").alias("seed_avg_pv"),
-            F.col("avg_loyalty_score").alias("seed_avg_ls"),
-            F.col("purchase_timestamp").alias("seed_ts"),
-            F.lit(True).alias("seed_exists"),
-        )
+        # the seed: each valid key's record in the online store, a point read
+        # of the session's snapshot (no Spark job). get_record gives naive
+        # local times; aware ones name the same instant in any session time zone.
+        self._online.refresh()
+        seeds = []
+        for k in {r.customer_id for r in flags if r.valid} - {None}:
+            rec = self._online.get_record(k)
+            if rec is not None:
+                ts = rec["purchase_timestamp"] and rec["purchase_timestamp"].astimezone()
+                seeds.append((k, rec["avg_purchase_value"], rec["avg_loyalty_score"], ts))
+        seed = local_rows_df(self.spark, seeds, _SEED_SCHEMA).withColumn("seed_exists", F.lit(True))
         seeded = (
-            ok.join(online, on="customer_id", how="left")
+            batch.where(valid).join(seed, on="customer_id", how="left")
             .withColumn("seed_exists", F.coalesce("seed_exists", F.lit(False)))
         )
         folded = self._fold_batch(seeded).localCheckpoint(eager=True)

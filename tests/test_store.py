@@ -145,35 +145,6 @@ def test_training_dataset_full_history(spark, tmp_path):
     assert "customer_id" in td.columns
 
 
-def test_exists_batch_semi_join(spark, tmp_path):
-    """The stored keys, whichever is asked: a key removed by ``delete()`` and
-    an absent key are not stored, a NULL key matches neither way; and the
-    plan reads keys only, with no latest-row ``max_by``."""
-    fg = make_fg(spark, tmp_path)
-    fg.ingest(spark.createDataFrame([row(1, 1, 10.0, 10.0, 5.0, 5.0)], FG_SCHEMA))
-    keys = spark.createDataFrame([(1,), (2,), (3,)], "customer_id long")
-    present = fg.exists_batch(keys).collect()
-    assert [r.customer_id for r in present] == [1]
-
-    fg.ingest(
-        spark.createDataFrame(
-            [row(2, 2, 20.0, 20.0, 6.0, 6.0), row(4, 3, 1.0, 1.0, 1.0, 1.0),
-             row(None, 4, 2.0, 2.0, 2.0, 2.0)],
-            FG_SCHEMA,
-        )
-    )
-    fg.table.delete("customer_id = 4")
-    keys = spark.createDataFrame([(1,), (2,), (3,), (4,), (None,)], "customer_id long")
-    batch = fg.exists_batch(keys)
-    assert sorted(r.customer_id for r in batch.collect()) == [1, 2]
-    assert sorted(
-        r.customer_id for r in keys.collect() if r.customer_id is not None
-        and fg.exists(r.customer_id)
-    ) == [1, 2]
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    assert "max_by" not in plan, plan
-
-
 def test_partial_commit_files_are_invisible(spark, tmp_path):
     """Atomicity: stray .tmp files and data without a published commit JSON
     must be invisible to readers (files-first, rename-to-publish)."""
