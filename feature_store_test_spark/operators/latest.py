@@ -48,8 +48,10 @@ def latest_per_key_agg(
 
     Same result as the ranking-window form when ``max_of`` is a total
     order (largest tuple = latest), and the same shuffle (module
-    docstring). The store's online view uses this form; ``process_batch``
-    uses the window form.
+    docstring). The store's online view uses this form. The window form
+    has no engine caller left: the streaming fold emits each key's final
+    state itself, and the tests check that against ``latest_per_key``.
+    It stays because ``perfbench/tracer.py`` patches it by name.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     order_cols = [F.col(c) if isinstance(c, str) else c for c in max_of]

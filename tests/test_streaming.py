@@ -18,8 +18,10 @@ from pyspark.sql import types as T
 
 from feature_store_test_spark.data import load_table
 from feature_store_test_spark.ml import LinearScorer
+from feature_store_test_spark.operators.latest import latest_per_key
 from feature_store_test_spark.store import FeatureStore
 from feature_store_test_spark.streaming import InferencePipeline
+from feature_store_test_spark.streaming.inference import _FINAL_COLS, _fold_seed
 from tests.test_scale import _confs
 from tests.test_store import FG_SCHEMA
 
@@ -154,8 +156,10 @@ def test_strict_mode_drops_stale_updates_parity_applies_them(spark, tmp_path):
     strict_pipe = make_pipeline(spark, tmp_path / "strict")
     strict_pipe.strict_event_time = True
     strict_pipe.process_batch(fresh)
+    version = strict_pipe.feature_group.table.latest_version()
     log = strict_pipe.process_batch(stale).collect()
     assert log[0].applied is False  # scored but not applied
+    assert strict_pipe.feature_group.table.latest_version() == version  # nothing to commit
     rec = strict_pipe.feature_group.online_view(strict_event_time=True).collect()[0]
     assert rec.latest_purchase_value == 100.0
     assert rec.avg_purchase_value == 100.0  # untouched by the stale event
@@ -182,8 +186,9 @@ LOG_COLS = [
 
 def fold_fixture():
     """Events and per-key seeds covering the fold's edge cases: a hot key
-    spanning many Arrow batches, tied timestamps (event_id breaks the tie),
-    keys with no stored state, and events older than the stored state."""
+    spanning many Arrow batches, tied timestamps (event_id breaks the tie,
+    a NULL event_id sorting after a real one), keys with no stored state,
+    and events older than the stored state."""
     t0 = dt.datetime(2024, 1, 10)
     seeds = [  # customer_id, avg_pv, avg_ls, event time of the stored state
         (1, 50.0, 3.0, t0),
@@ -198,13 +203,16 @@ def fold_fixture():
             ts = t0 + dt.timedelta(hours=(j % 4) * 7 - 10)
             events.append((eid, k, ts, 1.5 * j + k))
             eid += 1
+    # key 6's last event in fold order has no event_id: the latest row is
+    # its tie with a real one (NULL lowest), not the last row folded
+    events += [(None, 6, t0, 2.0), (eid, 6, t0, 3.0), (eid + 1, 6, t0 - dt.timedelta(hours=1), 4.0)]
     events = events[::-1]  # arrival order is not event order
     return events, seeds
 
 
 def reference_fold(events, seeds, strict):
     """The fold's semantics in plain Python: each key's events in
-    (purchase_timestamp, event_id) order, starting from its seed."""
+    (purchase_timestamp, event_id) order, NULLs last, starting from its seed."""
     state = {k: (pv, ls, True, ts) for k, pv, ls, ts in seeds}
     by_key = defaultdict(list)
     for e in events:
@@ -212,7 +220,7 @@ def reference_fold(events, seeds, strict):
     out = {}
     for k, evs in by_key.items():
         avg_pv, avg_ls, exists, state_ts = state.get(k, (None, None, False, None))
-        for eid, _, ts, v in sorted(evs, key=lambda e: (e[2], e[0])):
+        for eid, _, ts, v in sorted(evs, key=lambda e: (e[2], e[0] is None, e[0] or 0)):
             feat_pv, feat_ls = (avg_pv, avg_ls) if exists else (v, 0.0)
             pred = SCORER.predict_row({
                 "latest_purchase_value": v,
@@ -233,81 +241,89 @@ def reference_fold(events, seeds, strict):
     return out
 
 
+def fold_seeds(spark, seeds):
+    """The fixture's seeds as ``process_batch`` hands them to the fold."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    return {
+        k: _fold_seed({"avg_purchase_value": pv, "avg_loyalty_score": ls, "purchase_timestamp": ts}, tz)
+        for k, pv, ls, ts in seeds
+    }
+
+
 @pytest.mark.parametrize("strict", [False, True])
 def test_fold_matches_reference_fold(spark, tmp_path, strict):
     """The per-partition fold equals the per-key reference exactly, with a
-    hot key over many Arrow batches and keys spread over several input
-    partitions. The seed join is planned as a sort-merge join that AQE
-    turns into a broadcast at run time, the case where a local shuffle
-    read would split a key's events across tasks."""
+    hot key over many Arrow batches and keys spread over several input and
+    shuffle partitions. Each key's final-state row holds what
+    ``latest_per_key`` picks from its applied rows."""
     events, seeds = fold_fixture()
-    pipe = make_pipeline(spark, tmp_path)
-    pipe.strict_event_time = strict
-    seed_df = spark.createDataFrame(
-        seeds, "customer_id long, seed_avg_pv double, seed_avg_ls double, seed_ts timestamp"
-    ).withColumn("seed_exists", F.lit(True))
+    pipe = make_pipeline(spark, tmp_path, strict_event_time=strict)
     with _confs(spark, {
         "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "10MB",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }):
-        seeded = (
-            spark.createDataFrame(events, EVENTS).repartition(4)
-            .join(seed_df, on="customer_id", how="left")
-            .withColumn("seed_exists", F.coalesce("seed_exists", F.lit(False)))
-        )
-        folded = pipe._fold_batch(seeded).select(*LOG_COLS)
-        got = folded.collect()
-    plan = folded._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan and "BroadcastHashJoin" in plan, plan
+        batch = spark.createDataFrame(events, EVENTS).repartition(4)
+        folded = pipe._fold_batch(batch, fold_seeds(spark, seeds)).localCheckpoint()
+    got = folded.select(*LOG_COLS).collect()
     want = reference_fold(events, seeds, strict)
     assert len(got) == len(want) == len(events)
     for row in got:
         assert tuple(row) == want[row.event_id], row.event_id
     stale = sum(not r.applied for r in got)
     assert stale > 0 if strict else stale == 0
-    assert {r.customer_id for r in got if r.was_new_key} == {4, 5}
+    assert {r.customer_id for r in got if r.was_new_key} == {4, 5, 6}
+
+    final = folded.where("final").select("customer_id", *[f"final_{c}" for c in _FINAL_COLS])
+    latest = latest_per_key(
+        folded.where("applied"), "customer_id",
+        [F.col("purchase_timestamp").desc(), F.col("event_id").desc()],
+    ).select(
+        "customer_id", "purchase_timestamp", "purchase_value",
+        "avg_purchase_value_after", "avg_loyalty_score_after", "prediction",
+    )
+    assert sorted(map(tuple, final.collect())) == sorted(map(tuple, latest.collect()))
+    assert {r.customer_id for r in final.collect()} == ({1, 3, 4, 5, 6} if strict else set(range(1, 7)))
+    # key 6: the row folded last (NULL event_id) is not its latest row
+    (k6,) = folded.where("final AND customer_id = 6").collect()
+    assert k6.event_id is None and k6.final_latest_purchase_value == 3.0
 
 
 def test_fold_plan_is_one_map_in_pandas(spark, tmp_path, monkeypatch):
-    """One MapInPandas, no grouped map, and no more hash exchanges than the
-    grouped map needed on the same input, on the first batch (empty store)
-    and a later one. The seed is a local relation read from the online
-    store: no fold plan sort-merge joins it or scans the store's files (the
-    batches are local relations too, so any FileScan would be the store)."""
+    """One MapInPandas, no grouped map, no join of any kind and exactly one
+    hash exchange per fold plan, on the first batch (empty store) and a
+    later one. The seeds travel in the fold's closure: no fold plan scans
+    the store's files (the batches are local relations, so any FileScan
+    would be the store)."""
     pipe = make_pipeline(spark, tmp_path)
     seen = []
     fold = InferencePipeline._fold_batch
 
-    def spy(self, seeded):
-        seen.append(seeded)
-        return fold(self, seeded)
+    def spy(self, batch, seeds):
+        seen.append((batch, seeds))
+        return fold(self, batch, seeds)
 
     monkeypatch.setattr(InferencePipeline, "_fold_batch", spy)
     events, _ = fold_fixture()
     pipe.process_batch(spark.createDataFrame(events[:20], EVENTS))
     pipe.process_batch(spark.createDataFrame(events[20:], EVENTS))
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    assert len(seen) == 2
-    for seeded in seen:
-        ours = plan(fold(pipe, seeded))
-        grouped = plan(seeded.groupBy("customer_id").applyInPandas(lambda p: p, seeded.schema))
+    assert len(seen) == 2 and not seen[0][1] and seen[1][1]
+    for batch, seeds in seen:
+        ours = fold(pipe, batch, seeds)._jdf.queryExecution().executedPlan().toString()
         assert ours.count("MapInPandas") == 1, ours
         assert "FlatMapGroupsInPandas" not in ours, ours
-        exchanges = ours.count("Exchange hashpartitioning")
-        assert exchanges <= grouped.count("Exchange hashpartitioning"), ours
-        assert "SortMergeJoin" not in ours and "FileScan" not in ours, ours
+        assert "Join" not in ours, ours
+        assert ours.count("Exchange hashpartitioning") == 1, ours
+        assert "FileScan" not in ours, ours
 
 
 def test_empty_and_all_invalid_batches(spark, tmp_path):
     """A legitimately empty micro-batch, and one whose rows all fail
     validation, each return a 0-row log; only the invalid rows reach the
-    DLQ."""
+    DLQ, and neither batch nor the retry of the invalid rows commits to the
+    feature group."""
     pipe = make_pipeline(spark, tmp_path)
+    fg = pipe.feature_group
     assert pipe.process_batch(spark.createDataFrame([], EVENTS)).count() == 0
     assert pipe.dlq.read().count() == 0
     t = dt.datetime(2024, 1, 1)
@@ -315,6 +331,93 @@ def test_empty_and_all_invalid_batches(spark, tmp_path):
     assert pipe.process_batch(spark.createDataFrame(bad, EVENTS)).count() == 0
     assert sorted(r.event_id for r in pipe.dlq.read().collect()) == [1, 2, 3]
     assert pipe.feature_group.online_view().count() == 0
+    assert fg.table.latest_version() is None
+    assert pipe.retry_dlq().count() == 0
+    assert sorted(r.attempt for r in pipe.dlq.read().collect()) == [1, 1, 1, 2, 2, 2]
+    assert fg.table.latest_version() is None
+    assert pipe.stats()["skipped"] == 3 and pipe.stats()["commits"] == 0
+
+
+def test_retry_dlq_reads_attempt_stats(spark, tmp_path, monkeypatch):
+    """``retry_dlq`` decides from the DLQ log's ``attempt`` stats: a window
+    of attempt-2 commits returns None without a ``process_batch``, and a
+    commit without stats counts as maybe holding an attempt-1 row."""
+    pipe = make_pipeline(spark, tmp_path)
+    t = dt.datetime(2024, 1, 1)
+    pipe.process_batch(spark.createDataFrame([(1, 1, t, None)], EVENTS))
+    pipe.retry_dlq()  # attempt 2 commit; the next window holds only it
+    calls = []
+    monkeypatch.setattr(pipe, "process_batch", lambda b, attempt=1: calls.append(attempt))
+    pipe.dlq.append(spark.createDataFrame([(2, 2, t, None, 2, "x")], pipe.dlq.schema))
+    assert pipe.retry_dlq() is None and calls == []
+    v = pipe.dlq.append(spark.createDataFrame([(3, 3, t, None, 2, "x")], pipe.dlq.schema))
+    commit = pipe.dlq._load_commit(v)
+    del commit["files"]  # as a log written before per-file stats
+    pipe.dlq._rewrite_commit(commit)
+    pipe.retry_dlq()
+    assert calls == [2]
+
+
+def test_strict_set_after_construction_rebuilds_the_seed(spark, tmp_path, monkeypatch):
+    """A pipeline built in parity mode and then set to strict seeds its
+    next batch in strict order: after an outside writer commits an older
+    event time for key 1, that batch's seeds and log equal those of a
+    pipeline built strict."""
+    t = dt.datetime(2024, 1, 1)
+    seen = []
+    fold = InferencePipeline._fold_batch
+
+    def spy(self, batch, seeds):
+        seen.append(seeds)
+        return fold(self, batch, seeds)
+
+    monkeypatch.setattr(InferencePipeline, "_fold_batch", spy)
+
+    def run(name, strict_at_build):
+        pipe = make_pipeline(spark, tmp_path / name, strict_event_time=strict_at_build)
+        pipe.process_batch(spark.createDataFrame([(1, 1, t + dt.timedelta(hours=5), 10.0)], EVENTS))
+        pipe.strict_event_time = True
+        older = spark.createDataFrame(
+            [(1, t + dt.timedelta(hours=1), 99.0)],
+            "customer_id long, purchase_timestamp timestamp, purchase_value double",
+        )
+        pipe.feature_group.upsert(older, {"purchase_value": "purchase_value"})
+        log = pipe.process_batch(spark.createDataFrame([(2, 1, t + dt.timedelta(hours=6), 20.0)], EVENTS))
+        return seen[-1], sorted(map(tuple, log.collect()))
+
+    toggled, built = run("toggled", False), run("built", True)
+    assert toggled == built
+    # the strict seed is the stored hour-5 state, not the newer commit's hour-1 row
+    assert toggled[0][1][0] == 10.0
+
+
+def test_stats_count_one_replay(spark, sf_dir, tmp_path):
+    """``stats()`` over a two-batch replay with injected invalid rows and
+    its retry: the DLQ count equals the injected rows, keys split into seed
+    hits and misses by whether an earlier batch stored them."""
+    pipe = make_pipeline(spark, tmp_path)
+    ev = events_as_purchases(spark, sf_dir)
+    cut = "2024-01-16"
+    t = dt.datetime(2024, 1, 1)
+    bad = spark.createDataFrame([(-1, 1, t, None), (-2, None, t, 1.0), (-3, 3, None, 1.0)], EVENTS)
+    b1 = ev.where(F.col("purchase_timestamp") < cut).unionByName(bad)
+    b2 = ev.where(F.col("purchase_timestamp") >= cut).unionByName(bad.limit(2))
+    k1, k2 = (
+        {r[0] for r in b.where(pipe.valid_predicate).select("customer_id").distinct().collect()}
+        for b in (b1, b2)
+    )
+    n1, n2 = b1.count(), b2.count()
+    for b in (b1, b2):
+        pipe.process_batch(b)
+    assert pipe.stats() == {
+        "batches": 2, "rows": n1 + n2, "dlq_rows": 5, "valid_keys": len(k1) + len(k2),
+        "seed_hits": len(k1 & k2), "seed_misses": len(k1) + len(k2 - k1),
+        "commits": 2, "skipped": 0,
+    }
+    assert pipe.dlq.read().count() == 5
+    pipe.retry_dlq()
+    s = pipe.stats()
+    assert (s["batches"], s["rows"], s["dlq_rows"], s["commits"], s["skipped"]) == (3, n1 + n2 + 5, 10, 2, 1)
 
 
 @pytest.mark.parametrize("tz", ["Asia/Tokyo", "America/Los_Angeles"])
