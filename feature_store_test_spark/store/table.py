@@ -19,7 +19,11 @@ is a flat data dir of part files, and reads hand Spark one list of parquet
 files, so predicate pushdown works unchanged. Files are pruned by the
 per-file min/max stats in the log, not by directory discovery; a layout
 that serves a read pattern is a clustered ``compact(cluster_by=...)`` or
-``compact(zorder_by=...)``. A real deployment would swap this class for
+``compact(zorder_by=...)``. Every file is written in row groups of
+``ROW_GROUP_ROWS`` rows, and a feature group's ingest sorts each file by
+key, so the driver-side point read (``_read_rows``) opens each candidate
+file's footer and decodes only the row groups whose min/max admit the key:
+about one row group per commit. A real deployment would swap this class for
 Delta/Iceberg with zero API change — documented equivalence, same plans.
 
 Delta/Iceberg adapter seam (the swap path when the packages are
@@ -73,7 +77,6 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,6 +86,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 _LOG_DIR = "_commits"
 _DATA_DIR = "data"
+# rows per row group of every data file a table writes: the batch of Spark's
+# parquet reader (spark.sql.parquet.columnarReaderBatchSize), and small
+# enough that a point read in a key-sorted file decodes one group of 4,096
+ROW_GROUP_ROWS = 4096
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -117,13 +124,13 @@ def _is_nan(v) -> bool:
     return isinstance(v, float) and math.isnan(v)
 
 
-def _footer_bounds(md: pq.FileMetaData, col: int):
-    """(min, max) of leaf column ``col`` over every row group of a parquet
-    footer, (None, None) when every value is NULL, or None when a bound is
-    unknown: a row group holding values has no min/max (the writer drops
-    them above 4 KiB) or a NaN bound."""
+def _footer_bounds(md: pq.FileMetaData, col: int, groups):
+    """(min, max) of leaf column ``col`` over the row groups ``groups`` of a
+    parquet footer, (None, None) when every value is NULL, or None when a
+    bound is unknown: a row group holding values has no min/max (the writer
+    drops them above 4 KiB) or a NaN bound."""
     lo = hi = None
-    for i in range(md.num_row_groups):
+    for i in groups:
         rg = md.row_group(i)
         s = rg.column(col).statistics
         if s is not None and s.has_null_count and s.null_count == rg.num_rows:
@@ -133,6 +140,23 @@ def _footer_bounds(md: pq.FileMetaData, col: int):
         lo = s.min if lo is None else min(lo, s.min)
         hi = s.max if hi is None else max(hi, s.max)
     return lo, hi
+
+
+def _leaves(md: pq.FileMetaData) -> dict[str, int]:
+    """The index of each leaf column of a parquet footer, by dotted path."""
+    return {md.schema.column(i).path: i for i in range(md.num_columns)}
+
+
+def _footer_stats(md: pq.FileMetaData, leaves: dict, columns: list[str], groups) -> dict:
+    """The log's min/max entry per column of ``columns`` over the row groups
+    ``groups`` of a footer whose leaf columns are ``leaves`` (``_leaves``).
+    A column whose bounds are unknown, or that the file lacks, gets no
+    entry, so it never prunes (``_may_match``)."""
+    return {
+        c: {"min": _stat_value(_naive(b[0])), "max": _stat_value(_naive(b[1]))}
+        for c in columns
+        if c in leaves and (b := _footer_bounds(md, leaves[c], groups)) is not None
+    }
 
 
 def _naive(v):
@@ -189,17 +213,17 @@ def _file_entry(path: str, stat_columns: list[str]) -> dict | None:
     md = pq.read_metadata(path)
     if md.num_rows == 0:
         return None
-    leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
     return {
         "path": path,
         "rows": md.num_rows,
         "bytes": os.path.getsize(path),
-        "stats": {
-            c: {"min": _stat_value(_naive(b[0])), "max": _stat_value(_naive(b[1]))}
-            for c in stat_columns
-            if (b := _footer_bounds(md, leaves[c])) is not None
-        },
+        "stats": _footer_stats(md, _leaves(md), stat_columns, range(md.num_row_groups)),
     }
+
+
+def _stat_columns(schema: T.StructType) -> list[str]:
+    """The columns of ``schema`` whose min/max the log keeps."""
+    return [f.name for f in schema.fields if isinstance(f.dataType, _STAT_TYPES)]
 
 
 def _columns(schema: T.StructType) -> list[tuple[str, str]]:
@@ -234,6 +258,12 @@ def _may_match(stats: dict, col: str, op: str, value) -> bool:
     if op == ">=":
         return mx >= v
     raise ValueError(f"unsupported skip predicate op: {op!r}")
+
+
+def _admits(stats: dict, where: list[tuple]) -> bool:
+    """Can a file or row group with these stats hold a row that satisfies
+    every ``(col, op, value)`` term of ``where``?"""
+    return all(_may_match(stats, c, op, v) for (c, op, v) in where)
 
 
 class VersionedParquetTable:
@@ -331,13 +361,20 @@ class VersionedParquetTable:
         into an O(files-touched) operation instead of a full scan, and the
         log stays tiny (one entry per file, not per row). A column whose
         bounds are unknown gets no stats entry, so it never prunes.
+
+        Every file is written in row groups of at most ``ROW_GROUP_ROWS``
+        rows, each with its own footer min/max, which ``_read_rows`` prunes
+        by; a ``FeatureGroup.ingest`` commit is sorted by key within each
+        file, so its row groups hold disjoint key ranges.
         """
         t0 = time.perf_counter()
         data_dir = os.path.join(
             self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
         )
-        df.write.mode("errorifexists").parquet(data_dir)
-        stat_columns = [f.name for f in df.schema.fields if isinstance(f.dataType, _STAT_TYPES)]
+        df.write.mode("errorifexists").option(
+            "parquet.block.row.count.limit", ROW_GROUP_ROWS
+        ).parquet(data_dir)
+        stat_columns = _stat_columns(df.schema)
         files = [e for e in (_file_entry(p, stat_columns) for p in _data_files(data_dir)) if e]
         return {
             "version": version,
@@ -679,11 +716,7 @@ class VersionedParquetTable:
         files = commit.get("files")
         if files is None:
             return None
-        return [
-            f["path"]
-            for f in files
-            if all(_may_match(f["stats"], c, op, v) for (c, op, v) in where)
-        ]
+        return [f["path"] for f in files if _admits(f["stats"], where)]
 
     def _scan(self, commits: list[dict], where: list[tuple] | None = None) -> DataFrame:
         """The rows of ``commits`` with ``_commit_version`` — the one scan
@@ -748,37 +781,64 @@ class VersionedParquetTable:
         this process with pyarrow, so no Spark job runs. ``where``: ANDed
         ``(col, "=", value)`` terms, NaN equal to NaN as in Spark.
 
-        The files read are the stats candidates of each commit (a commit
-        that predates stats: its whole dir); inside them the filter prunes
-        row groups by their min/max. The version rule is ``_scan``'s: a
-        compaction's files carry ``_commit_version``, an append file's
-        version is its data-dir name. Columns a file lacks (added later by
-        schema evolution) read as NULL. The pick (``_latest_rows``) runs in
-        Arrow, so only the picked rows convert to Python, as ``collect()``
-        converts them (pyspark's Arrow-to-Row converter under the session's
-        ``binaryAsBytes``: naive local timestamps, Row structs).
+        One loop reads every file, one file at a time. The files are the
+        stats candidates of each commit (a commit that predates stats: its
+        whole dir). In each file only the row groups whose footer min/max
+        admit every ``where`` term are decoded: the log's file stats and the
+        row groups' stats are built by one rule (``_footer_stats``) and
+        judged by one (``_admits``). A point read on key-sorted commits
+        (``FeatureGroup.ingest``) thus decodes about one row group of
+        ``ROW_GROUP_ROWS`` rows per commit; a full snapshot reads every row
+        group. Both decode on one thread: groups of ``ROW_GROUP_ROWS`` rows
+        gain nothing from pyarrow's column threads. The exact filter runs on
+        each file's decoded rows, so a point read holds one file's row
+        groups at a time, and only the matching rows align to
+        ``_compact_schema``: a column the file lacks (added
+        later by schema evolution) reads as NULL, so a file lacking a
+        ``where`` column holds no match; the others are cast. The version rule is
+        ``_scan``'s: a compaction's files carry ``_commit_version``, an
+        append file's version is its data-dir name. The pick
+        (``_latest_rows``) runs in Arrow, so only the picked rows convert to
+        Python, as ``collect()`` converts them (pyspark's Arrow-to-Row
+        converter under the session's ``binaryAsBytes``: naive local
+        timestamps, Row structs).
         """
         where = where or []
         files = []  # filesystem paths
         for c in commits:
             paths = self._candidate_files(c, where)
             files += _data_files(c["data_dir"]) if paths is None else map(_fs_path, paths)
-        expr = None
-        for col, _, value in where:
-            term = pc.is_nan(pc.field(col)) if _is_nan(value) else pc.field(col) == value
-            expr = term if expr is None else expr & term
-        phys = self._compact_schema
-        got = ds.dataset(files, schema=to_arrow_schema(phys), format="parquet").to_table(
-            columns=[*phys.fieldNames(), "__filename"], filter=expr
-        )
-        if not got.num_rows:
+        schema = to_arrow_schema(self._compact_schema)
+        terms = {c for c, _, _ in where}
+        pruned = [c for c in _stat_columns(self._compact_schema) if c in terms]
+        parts = []
+        for path in files:
+            with pq.ParquetFile(path) as f:
+                md, have = f.metadata, set(f.schema_arrow.names)
+                leaves = _leaves(md)
+                groups = [
+                    i for i in range(md.num_row_groups)
+                    if _admits(_footer_stats(md, leaves, pruned, [i]), where)
+                ]
+                if not groups or not terms <= have:
+                    continue  # a column the file lacks reads as NULL, which equals nothing
+                got = f.read_row_groups(
+                    groups, columns=[n for n in schema.names if n in have], use_threads=False
+                )
+            for col, _, value in where:  # the exact filter, before the rows are aligned
+                got = got.filter(pc.is_nan(got[col]) if _is_nan(value) else pc.equal(got[col], value))
+            if not got.num_rows:
+                continue
+            cols = [
+                got[n].cast(t) if n in have else pa.nulls(got.num_rows, t)
+                for n, t in zip(schema.names, schema.types)
+            ]
+            version = pa.scalar(int(re.search(_VERSION_DIR, path).group(1)), pa.int32())
+            cols[-1] = pc.coalesce(cols[-1], version)  # _commit_version
+            parts.append(pa.Table.from_arrays(cols, schema=schema))
+        if not parts:
             return []
-        at = pc.index_in(got["__filename"], value_set=pa.array(files))  # each row's file
-        versions = [int(re.search(_VERSION_DIR, p).group(1)) for p in files]
-        got = got.set_column(
-            got.schema.get_field_index("_commit_version"), "_commit_version",
-            pc.coalesce(got["_commit_version"], pa.array(versions, pa.int32()).take(at)),
-        )
+        got = pa.concat_tables(parts)
         names = self.schema.fieldNames()
         got = _latest_rows(got, key, max_of).select(names)
         as_bytes = self.spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")

@@ -435,3 +435,19 @@ def test_serving_counters(spark, tmp_path):
         **zero, "hits": 3, "misses": 1, "full": 2, "delta": 1, "noop": 1, "rows": 9, "commits": 1
     }
     assert s.get_record(8)["purchase_timestamp"] == ts(3) and len(s) == 9
+
+
+def test_session_over_an_empty_group_folds_its_first_commits(spark, tmp_path):
+    """A session built before the group's first commit starts from the
+    empty snapshot (version 0, the table's columns), so its first refresh
+    after two ingests folds them in as a delta, not a full read, and
+    equals a session built after them."""
+    fg = make_fg(spark, tmp_path)
+    s = ServingSession(fg)
+    assert s.version == 0 and len(s) == 0 and s.refresh() is False
+    fg.ingest(spark.createDataFrame([row(k, 1, float(k), 1.0, 1.0, 1.0) for k in range(5)], FG_SCHEMA))
+    fg.ingest(spark.createDataFrame([row(k, 2, k + 0.5, 2.0, 2.0, 2.0) for k in range(3, 8)], FG_SCHEMA))
+    assert s.refresh() is True
+    assert s.stats()["full"] == 0 and s.stats()["delta"] >= 1 and s.version == 2
+    _assert_same_records(s._records, ServingSession(fg)._records)
+    assert len(s) == 8 and s.get_record(4)["latest_purchase_value"] == 4.5

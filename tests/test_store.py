@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 import urllib.parse
 
 import pyarrow.parquet as pq
@@ -905,6 +906,123 @@ def test_point_reads_run_no_spark_job(spark, tmp_path):
     assert _jobs(spark, "point-read-absent", lambda: fg.get_latest(2)) == 0
     assert _jobs(spark, "point-read-online-view", lambda: fg.online_view().collect()) >= 1
     assert fg.get_latest(1)["latest_purchase_value"] == 20.0
+
+
+def _fg_frame(spark, n, day, shift=0):
+    """``n`` distinct keys in a scrambled order over 2 partitions, the
+    latest purchase value ``key + day``."""
+    return spark.range(n).selectExpr(
+        f"(id * 7919 + {shift}) % {n} AS customer_id",
+        f"timestamp'2024-01-{day:02d}' AS purchase_timestamp",
+        f"double((id * 7919 + {shift}) % {n} + {day}) AS latest_purchase_value",
+        "1.0D AS avg_purchase_value", "2.0D AS avg_loyalty_score", "3.0D AS latest_loyalty_score",
+    ).repartition(2)
+
+
+def test_ingest_commits_are_key_sorted_in_small_row_groups(spark, tmp_path):
+    """Each file of an ingest commit is sorted by key, in row groups of at
+    most ``ROW_GROUP_ROWS`` rows whose key ranges are disjoint."""
+    from feature_store_test_spark.store.table import ROW_GROUP_ROWS
+
+    fg = make_fg(spark, tmp_path)
+    fg.ingest(_fg_frame(spark, 20_000, 1))
+    files = fg.table.commits()[-1]["files"]
+    assert len(files) == 2 and sum(f["rows"] for f in files) == 20_000
+    for f in files:
+        keys = pq.read_table(f["path"], columns=["customer_id"])["customer_id"].to_pylist()
+        assert keys == sorted(keys)
+        md = pq.read_metadata(f["path"])
+        assert md.num_row_groups >= 2
+        bounds = []
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            assert rg.num_rows <= ROW_GROUP_ROWS
+            s = rg.column(0).statistics
+            bounds.append((s.min, s.max))
+        assert all(hi < lo for (_, hi), (lo, _) in zip(bounds, bounds[1:]))
+
+
+def test_point_read_decodes_one_row_group_per_file(spark, tmp_path, monkeypatch):
+    """On a group of 3 commits, each file split into several row groups, a
+    point read decodes at most one row group of each file it reads, and
+    still returns the online view's row."""
+    fg = make_fg(spark, tmp_path)
+    for day in (1, 2, 3):
+        fg.ingest(_fg_frame(spark, 12_000, day, shift=day))
+    assert all(
+        pq.read_metadata(f["path"]).num_row_groups >= 2
+        for c in fg.table.commits() for f in c["files"]
+    )
+    reads = []
+    read_row_groups = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *args, **kwargs):
+        reads.append(list(row_groups))
+        return read_row_groups(self, row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    for k in (0, 4_097, 11_999):
+        reads.clear()
+        got = fg.get_latest(k)
+        assert got["latest_purchase_value"] == k + 3.0
+        assert reads and all(len(groups) == 1 for groups in reads), reads
+        assert len(reads) <= sum(len(c["files"]) for c in fg.table.commits())
+    reads.clear()
+    assert fg.get_latest(12_000) is None and all(len(g) <= 1 for g in reads)
+
+
+def test_point_read_of_a_file_lacking_a_later_column_reads_null(spark, tmp_path):
+    """A file written before ``merge_schema`` added a column reads that
+    column as NULL; the file that carries it reads its value."""
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("et", T.TimestampType())])
+    fg = FeatureStore(spark, str(tmp_path)).create("fg", schema, "k", "et")
+    fg.ingest(spark.createDataFrame([(1, ts(1)), (2, ts(1))], schema))
+    fg.table.append(spark.createDataFrame([(2, ts(2), 0.5)], "k long, et timestamp, score double"), merge_schema=True)
+    assert fg.get_latest(1) == {"k": 1, "et": ts(1), "score": None}
+    assert fg.get_latest(2) == {"k": 2, "et": ts(2), "score": 0.5}
+
+
+def test_point_read_keeps_a_compactions_materialized_version(spark, tmp_path):
+    """A compaction's files carry each row's ``_commit_version``; the read
+    keeps it rather than taking the compaction's own version. Key 1's later
+    arrival has the earlier event time, so only the materialized versions
+    make it the parity latest."""
+    fg = make_fg(spark, tmp_path)
+    fg.ingest(spark.createDataFrame([row(1, 5, 10.0, 10.0, 5.0, 5.0), row(2, 1, 1.0, 1.0, 1.0, 1.0)], FG_SCHEMA))
+    fg.ingest(spark.createDataFrame([row(1, 2, 20.0, 15.0, 6.0, 7.0)], FG_SCHEMA))
+    fg.table.compact()
+    files = fg.table.commits()[-1]["files"]
+    versions = {v for f in files for v in pq.read_table(f["path"])["_commit_version"].to_pylist()}
+    assert versions == {1, 2}
+    assert fg.get_latest(1)["latest_purchase_value"] == 20.0
+    assert fg.get_latest(1) == fg.online_view().where("customer_id = 1").collect()[0].asDict()
+    fg.ingest(spark.createDataFrame([row(1, 1, 30.0, 22.5, 6.0, 7.0)], FG_SCHEMA))
+    assert fg.get_latest(1)["latest_purchase_value"] == 30.0
+
+
+def test_backfill_commit_plan_adds_no_sort(spark, sf_dir, tmp_path, monkeypatch):
+    """The q16 -> ``ingest`` write plan holds exactly one ``Sort`` under
+    each ``SortAggregate`` and none on top: the aggregate's output is
+    already in key order, so the ingest's key sort costs nothing. A change
+    to ``engineer_features`` that loses that order fails here. Where q16
+    is already cached in the session (``tests/test_ml.py`` caches it), the
+    plan is a scan of the cached relation, which keeps that relation's key
+    order, and prints the relation's plans beneath it."""
+    from feature_store_test_spark.queries.feature_parity import q16_engineer_features
+
+    written = []
+    write_data = VersionedParquetTable._write_data
+
+    def capture(self, df, version):
+        written.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_data(self, df, version)
+
+    monkeypatch.setattr(VersionedParquetTable, "_write_data", capture)
+    make_fg(spark, tmp_path).ingest(q16_engineer_features(spark, sf_dir))
+    nodes = [re.sub(r"^[ +\-:]*(\*\(\d+\) )?", "", line) for line in written[0].splitlines()]
+    sorts = [i for i, n in enumerate(nodes) if n.startswith("Sort [")]
+    aggs = [i for i, n in enumerate(nodes) if n.startswith("SortAggregate(")]
+    assert aggs and [i + 1 for i in aggs] == sorts, written[0]
 
 
 def test_schema_evolution_widens_and_backfills_null(spark, tmp_path):
